@@ -1,4 +1,4 @@
-from promi_spark.io.ingest import load_table, load_tables, load_event_log
+from promi_spark.io.ingest import load_table, load_tables, load_event_log, read_parquet
 from promi_spark.io.xes import (
     read_xes,
     read_xes_distributed,
@@ -12,6 +12,7 @@ __all__ = [
     "load_table",
     "load_tables",
     "load_event_log",
+    "read_parquet",
     "read_xes",
     "read_xes_distributed",
     "write_xes",

@@ -34,6 +34,8 @@ from pyspark.sql.types import StructType
 
 from pyspark.sql import functions as F
 
+from promi_spark.io.ingest import read_parquet
+
 FRAME_SCHEMA = "frame binary, n_rows long"
 
 
@@ -82,7 +84,7 @@ def write_arrow_frames(df: DataFrame, path: str) -> None:
 def read_arrow_frames(
     spark: SparkSession, path: str, schema: StructType | str
 ) -> DataFrame:
-    return from_arrow_frames(spark.read.parquet(path), schema)
+    return from_arrow_frames(read_parquet(spark, path), schema)
 
 
 def to_avro_frames(df: DataFrame, value_cols: list[str] | None = None) -> DataFrame:

@@ -42,9 +42,13 @@ class EventLog:
         operators can rely on the full column set.
         """
         have = set(df.columns)
-        for f_ in EVENTS_SCHEMA.fields:
-            if f_.name not in have:
-                df = df.withColumn(f_.name, F.lit(None).cast(f_.dataType))
+        missing = {
+            f_.name: F.lit(None).cast(f_.dataType)
+            for f_ in EVENTS_SCHEMA.fields
+            if f_.name not in have
+        }
+        if missing:
+            df = df.withColumns(missing)
         return cls(df=df, meta=meta or Meta())
 
     @classmethod

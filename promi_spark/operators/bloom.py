@@ -41,6 +41,8 @@ import warnings
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from promi_spark.io import read_parquet
+
 # Above this estimated relation size the probe joins shuffled on `word`
 # instead of forcing a broadcast (executor memory x fan-out makes a
 # multi-GB forced broadcast an OOM, not a speedup). 256 MB is
@@ -220,8 +222,11 @@ def write_bloom_index(
         # runs ONCE, not once per pass; at 100 TB the second pass was a
         # whole reference-corpus scan. The distinct() stays for raw
         # callers; over an already-distinct input it collapses to the
-        # cache read + one exchange of the (small) value relation.
-        vals = df.persist()
+        # cache read + one exchange of the (small) value relation. The
+        # cache holds a projection of our own, never the caller's frame:
+        # unpersisting that would evict a cache the caller (or another
+        # holder of a shared source frame) set up.
+        vals = df.select(col).persist()
         try:
             n = (
                 n_items
@@ -269,7 +274,7 @@ def read_bloom_index(
     meta = json.loads(
         _hadoop_read_text(spark, f"{path.rstrip('/')}/_index_meta.json")
     )
-    return spark.read.parquet(path), meta
+    return read_parquet(spark, path), meta
 
 
 def _doc_grams(

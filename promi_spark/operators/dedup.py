@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from promi_spark.io import read_parquet
 from promi_spark.operators.text import tokens
 
 
@@ -638,7 +639,7 @@ def minhash_dedup_incremental(
     )
     num_hashes, bands = meta["num_hashes"], meta["bands"]
 
-    idx = spark.read.parquet(index_path)
+    idx = read_parquet(spark, index_path)
     rows_new = gram_hash_rows(new_df, key_col, text_col, meta["shingle_n"])
     if cache:
         rows_new = rows_new.persist()

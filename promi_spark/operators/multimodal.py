@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from promi_spark.io import read_parquet
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -131,7 +133,7 @@ def media_fixture(
         synth_media(spark, n, seed, scale).repartition(n_files).write.mode(
             "overwrite"
         ).parquet(path)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 # ---------------------------------------------------------------------------

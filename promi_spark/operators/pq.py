@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from promi_spark.io import read_parquet
 from promi_spark.operators.similarity import _as_double, dot
 
 __all__ = [
@@ -333,7 +334,7 @@ def read_pq_index(
 
     from promi_spark.operators.similarity import _hadoop_read_text
 
-    codes = spark.read.parquet(path)
+    codes = read_parquet(spark, path)
     books = json.loads(
         _hadoop_read_text(spark, f"{path.rstrip('/')}/_codebooks.json")
     )
@@ -417,7 +418,7 @@ def ivfpq_topk_indexed(
     cents = json.loads(_hadoop_read_text(spark, f"{base}/_centroids.json"))
     books = json.loads(_hadoop_read_text(spark, f"{base}/_codebooks.json"))
     probes = _probe_cells(query_vec, cents, nprobe)
-    scan = spark.read.parquet(path).filter(F.col("cluster").isin(probes))
+    scan = read_parquet(spark, path).filter(F.col("cluster").isin(probes))
     return pq_topk(scan, books, query_vec, k=k, id_col=id_col, codes=scan)
 
 

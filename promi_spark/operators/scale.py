@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from promi_spark.io import read_parquet
+
 
 def salt(col: Column | str, n_salts: int, *entropy: Column) -> Column:
     """Deterministic salt in [0, n_salts): derived from extra row
@@ -459,7 +461,7 @@ def compact_parquet(
     n_files_in = summary.getFileCount()
     n_out = max(1, math.ceil(n_bytes / (target_file_mb * 1024 * 1024)))
 
-    df = spark.read.parquet(in_path)
+    df = read_parquet(spark, in_path)
     n_parts = df.rdd.getNumPartitions()
     out = df.coalesce(n_out) if n_out <= n_parts else df.repartition(n_out)
     out.write.mode(mode).parquet(out_path)

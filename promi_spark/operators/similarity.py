@@ -1362,6 +1362,8 @@ def ivf_topk_indexed(
 
     import numpy as np
 
+    from promi_spark.io import read_parquet
+
     cent = json.loads(
         _hadoop_read_text(spark, f"{path.rstrip('/')}/_centroids.json")
     )
@@ -1370,7 +1372,7 @@ def ivf_topk_indexed(
     q = np.array(query_vec, dtype=float)
     d = ((np.array(cent) - q[None, :]) ** 2).sum(1)
     probe = [int(i) for i in d.argsort()[:nprobe]]
-    scan = spark.read.parquet(path).filter(F.col("cluster").isin(probe))
+    scan = read_parquet(spark, path).filter(F.col("cluster").isin(probe))
     return (
         cosine_scores(scan, query_vec, id_col, vec_col)
         .orderBy(F.desc("cosine_sim"), F.col(id_col))

@@ -289,8 +289,9 @@ def _receiver(ctx, log, _recv=None, **_):
 @register("ParquetReader", "events parquet -> EventLog", {"source"},
           params=[Param("path", str, description="parquet path")])
 def _parquet_reader(ctx, log, path: str, **_):
-    df = ctx.spark.read.parquet(ctx.path(path))
-    return EventLog.from_events(df)
+    from promi_spark.io import read_parquet
+
+    return EventLog.from_events(read_parquet(ctx.spark, ctx.path(path)))
 
 
 @register("ParquetWriter", "EventLog -> parquet (partitionable)", {"sink"},

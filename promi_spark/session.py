@@ -40,6 +40,13 @@ def get_spark(app_name: str = "promi_spark", cpus: int | None = None) -> SparkSe
         # protocol bench.py speaks. Nothing in this repo reads them.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark's call-site capture wraps every Column/DataFrame call
+        # in five extra py4j round trips (pyspark.errors.utils._with_origin)
+        # to name the Python line in JVM error contexts; a query's
+        # driver-side build cost is mostly those round trips. Errors and
+        # their messages are unchanged. Read once per process, from the
+        # first active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # The driver's events.parquet stores TIMESTAMP(NANOS); Spark has no
         # nanosecond timestamp, so read as long and convert at ingest
         # (DuckDB likewise truncates ns -> us).

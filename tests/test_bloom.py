@@ -76,6 +76,27 @@ def test_index_roundtrip(spark, tmp_path):
     assert res.filter(~F.col("maybe_member")).count() == 0
 
 
+def _held_rdds(spark):
+    return {info.id() for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_index_build_keeps_caller_cache(spark, tmp_path):
+    """The sizing pass persists a relation of its own: a frame the
+    caller (or another holder of a shared source frame) persisted stays
+    persisted after the build."""
+    from pyspark import StorageLevel
+
+    df = _vals(spark, 0, 500).withColumn("extra", F.lit(1)).persist()
+    try:
+        df.count()
+        before = _held_rdds(spark)
+        write_bloom_index(df, str(tmp_path / "bloom_idx"), "val", fp_rate=0.01)
+        assert df.storageLevel != StorageLevel.NONE
+        assert _held_rdds(spark) == before
+    finally:
+        df.unpersist()
+
+
 def test_decontaminate_bloom_superset_of_exact(spark, tmp_path, sf_dir):
     """The production contract: bloom decontamination never misses a
     truly contaminated doc (no false negatives), over-drops only at

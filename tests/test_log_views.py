@@ -105,3 +105,22 @@ def test_from_events_fills_missing_columns(spark):
         assert f_.name in log.df.columns
     row = log.df.first()
     assert row["ts"] is None and row["attrs"] is None
+
+
+def test_from_events_column_order_and_types(spark):
+    """Present columns keep their place; the missing canonical ones
+    follow in EVENTS_SCHEMA order, typed as there, extras untouched."""
+    from promi_spark.schema import EVENTS_SCHEMA
+
+    df = spark.createDataFrame(
+        [("x", "a", "c1", 3)], "extra string, activity string, case_id string, event_id long"
+    )
+    log = EventLog.from_events(df)
+    missing = [f_ for f_ in EVENTS_SCHEMA.fields if f_.name not in ("activity", "case_id")]
+    assert log.df.columns == ["extra", "activity", "case_id", "event_id"] + [f_.name for f_ in missing]
+    assert [(f_.name, f_.dataType) for f_ in log.df.schema.fields[4:]] == [
+        (f_.name, f_.dataType) for f_ in missing
+    ]
+    assert log.df.schema.fields[:4] == df.schema.fields
+    # a frame that already has every canonical column comes back as is
+    assert EventLog.from_events(log.df).df is log.df

@@ -63,11 +63,12 @@ pipes:
           String: {out}/test.xes
 """
 
-pytestmark = pytest.mark.skipif(
+needs_corpus = pytest.mark.skipif(
     not os.path.isfile(BIGGER), reason="reference corpus not available"
 )
 
 
+@needs_corpus
 def test_flow_end_to_end(spark, tmp_path):
     from promi_spark.plans import execute
 
