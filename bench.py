@@ -58,25 +58,24 @@ def bench_neardup_pipeline(spark) -> dict:
     from pyspark.sql import functions as F
 
     from promi_spark.io import load_table
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import dedup_components, minhash_dedup
 
     docs = load_table(spark, "documents", SF_DIR)
-    t0 = time.time()
-    pairs = minhash_dedup(docs, threshold=0.7)
-    comp = dedup_components(pairs)
-    drop = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
-    kept = docs.join(drop, "doc_id", "left_anti").count()
-    sec = round(time.time() - t0, 3)
-    stats = {
-        "sec": sec,
-        "verified_pairs": pairs.count(),
-        "components": comp.select("component").distinct().count(),
-        "rounds_to_convergence": comp.n_rounds,
-        "kept_docs": kept,
-    }
-    pairs.gram_cache.unpersist()
-    comp.labels_cache.unpersist()
-    return stats
+    with scope():
+        t0 = time.time()
+        pairs = minhash_dedup(docs, threshold=0.7)
+        comp = dedup_components(pairs)
+        drop = comp.filter(F.col("doc_id") != F.col("component")).select("doc_id")
+        kept = docs.join(drop, "doc_id", "left_anti").count()
+        sec = round(time.time() - t0, 3)
+        return {
+            "sec": sec,
+            "verified_pairs": pairs.count(),
+            "components": comp.select("component").distinct().count(),
+            "rounds_to_convergence": comp.n_rounds,
+            "kept_docs": kept,
+        }
 
 
 def drain_streaming(

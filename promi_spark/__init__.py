@@ -13,6 +13,7 @@ Layout
 - ``schema``     — the canonical flat events schema + ``Meta`` descriptor
 - ``log``        — ``EventLog``: (DataFrame, Meta) pair with trace views
 - ``session``    — tuned local SparkSession builder
+- ``lifetime``   — the scope that owns every relation an operator pins
 - ``io``         — parquet ingest, XES reader/writer
 - ``operators``  — filters, stats, validate, repair, split, dfg, dedup,
                    text, similarity, multimodal (the SURVEY §2 inventory)

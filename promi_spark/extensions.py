@@ -74,10 +74,6 @@ def get_extension(prefix: str) -> ExtensionSpec:
     return _REGISTRY[prefix]
 
 
-def registered_extensions() -> list[ExtensionSpec]:
-    return list(_REGISTRY.values())
-
-
 def _typed_attr(full_key: str, tag: str):
     """Typed column expression for an extension attribute."""
     if full_key in WELL_KNOWN_KEYS:

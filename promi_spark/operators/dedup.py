@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from promi_spark.io import read_parquet
+from promi_spark.lifetime import checkpoint, own, persist, release
 from promi_spark.operators.text import tokens
 
 
@@ -154,18 +155,6 @@ def gram_hash_rows(
     )
 
 
-def shingle_hash_arrays(
-    df: DataFrame, key_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(k, sh): the distinct n-gram hash SET per document (for exact
-    Jaccard verification) — collect_set over :func:`gram_hash_rows`."""
-    return (
-        gram_hash_rows(df, key_col, text_col, n)
-        .groupBy("k")
-        .agg(F.collect_set("h").alias("sh"))
-    )
-
-
 def _sig_agg_expr(num_hashes: int) -> Column:
     """The 64-way MIN signature as ONE parsed aggregate expression,
     ``array(min(xxhash64(h, 0)), ..., min(xxhash64(h, n-1)))`` — the
@@ -239,7 +228,6 @@ def minhash_candidates(
     bands: int = 16,
     shingle_n: int = 3,
     max_bucket_size: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing any band of the MinHash
     signature. Returns (a, b) with a < b, distinct.
@@ -253,32 +241,44 @@ def minhash_candidates(
     band index) and split by AQE skew-join; ``max_bucket_size``
     additionally caps it hard.
 
-    With ``cache=True`` (default) the (k, sig, rep) signature-class
-    tagging relation is persisted — the collapse/expansion plan reads
-    it four times, and without the persist each read re-runs the
-    signature pipeline (measured 2.7x on the LSH sibling at sf1). The
-    handle rides on the result as ``.sig_cache``: release it with
-    ``out.sig_cache.unpersist()`` once the caller's action completes
-    (it is a plain Python attribute — LOST on any further DataFrame
-    transformation, so capture it before chaining). Long-lived
-    sessions running many distinct corpora should either release per
-    call or pass ``cache=False`` to trade the re-evaluations for zero
-    pinned storage.
+    The (k, sig, rep) signature-class tagging relation is persisted
+    (:func:`_sig_classes`). Relation lifetime: README "Relation
+    lifetime".
     """
     sigs = minhash_signatures(df, key_col, text_col, num_hashes, shingle_n)
-    return _banded_pairs(sigs, num_hashes, bands, max_bucket_size, cache)
+    return _banded_pairs(_sig_classes(sigs), num_hashes, bands, max_bucket_size)
+
+
+def _sig_classes(sigs: DataFrame, cache: bool = True) -> DataFrame:
+    """(k, sig, rep): each row of a (k, sig) relation tagged with its
+    exact-signature class representative (min key) — the relation every
+    banding core reads, persisted unless ``cache=False``: the
+    collapse/expansion plan reads it four times, and without the
+    persist each read re-runs the signature pipeline (measured 2.7x on
+    the LSH sibling at sf1). Verify sides may read it as their (k, sig)
+    source instead of recomputing the signature pipeline."""
+    # rep via a sig-partitioned window, NOT groupBy(sig) + self-join:
+    # the join form evaluates the upstream signature pipeline once per
+    # side (measured 2.7x on lsh_near_dups at sf1, whose 64-hyperplane
+    # sign pipeline is the costliest expression in the family); the
+    # window form is one evaluation and one exchange on sig, then the
+    # persist makes every downstream reference a cache read
+    tagged = sigs.selectExpr(
+        "k", "sig", "min(k) OVER (PARTITION BY sig) AS rep"
+    )
+    return persist(tagged) if cache else tagged
 
 
 def _banded_pairs(
-    sigs: DataFrame,
+    tagged: DataFrame,
     num_hashes: int,
     bands: int,
     max_bucket_size: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
-    """(a, b) distinct candidate pairs from a (k, sig, ...) relation:
-    exact-signature class collapse, band-bucket self-equi-join on class
-    representatives, then expansion back to member pairs.
+    """(a, b) distinct candidate pairs from a (k, sig, rep) relation
+    (:func:`_sig_classes`): exact-signature class collapse, band-bucket
+    self-equi-join on class representatives, then expansion back to
+    member pairs.
 
     The collapse is the boilerplate-corpus guard (r7 verdict): a crawl
     corpus with m byte-identical (or shingle-identical) docs puts all m
@@ -315,18 +315,16 @@ def _banded_pairs(
     upstream runs once, not once per downstream reference.
     """
     return _collapsed_banded_pairs(
-        sigs,
+        tagged,
         lambda s: band_buckets(s, num_hashes, bands),
         max_bucket_size,
-        cache,
     )
 
 
 def _collapsed_banded_pairs(
-    sigs: DataFrame,
+    tagged: DataFrame,
     band_codes,
     max_bucket_size: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Shared banding core for every LSH family (MinHash bands,
     SimHash chunk bands, hyperplane sign-bit bands): exact-signature
@@ -335,21 +333,7 @@ def _collapsed_banded_pairs(
     per-band bucket codes) → within-bucket self-equi-join on
     representatives → expand back to member pairs. See
     :func:`_banded_pairs` for the full semantics/guard discussion.
-    The persisted (k, sig, rep) tagging relation rides on the result
-    as ``.sig_cache`` — callers should release it when done, and MAY
-    read it as their verify-side (k, sig) source to avoid recomputing
-    the signature pipeline."""
-    # rep via a sig-partitioned window, NOT groupBy(sig) + self-join:
-    # the join form evaluates the upstream signature pipeline once per
-    # side (measured 2.7x on lsh_near_dups at sf1, whose 64-hyperplane
-    # sign pipeline is the costliest expression in the family); the
-    # window form is one evaluation and one exchange on sig, then the
-    # persist makes every downstream reference a cache read
-    tagged = sigs.selectExpr(
-        "k", "sig", "min(k) OVER (PARTITION BY sig) AS rep"
-    )
-    if cache:
-        tagged = tagged.persist()
+    ``tagged`` is the (k, sig, rep) relation of :func:`_sig_classes`."""
     # joins/selects below are parsed expressions where the arguments
     # are plain attribute references — same analyzed plans as the
     # Column forms (test_sql_collapsed_builds_plan_identical_to_
@@ -390,11 +374,7 @@ def _collapsed_banded_pairs(
     within = x.join(
         y, F.expr("x.rep = y.rep AND x.k < y.k")
     ).selectExpr("x.k AS a", "y.k AS b")
-    out = within.unionByName(cross)
-    # release handle for the tagging cache (mirrors minhash_dedup's
-    # gram_cache contract)
-    out.sig_cache = tagged if cache else None
-    return out
+    return within.unionByName(cross)
 
 
 def jaccard(a_shingles: Column | str, b_shingles: Column | str) -> Column:
@@ -436,7 +416,6 @@ def minhash_dedup(
     num_hashes: int = 64,
     bands: int = 16,
     shingle_n: int = 3,
-    cache: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs: LSH candidates verified by exact Jaccard
@@ -468,28 +447,17 @@ def minhash_dedup(
     persist it as the dedup index anyway. The verify join itself touches
     only candidate keys.
 
-    Cache lifetime: the persisted relation lives until the session ends
-    or Spark evicts it (identical re-invocations share one entry via
-    the CacheManager, so repeated calls on the same corpus do not
-    accumulate). Callers running MANY distinct corpora through one
-    session should pass ``cache=False`` (recompute instead of pin) or
-    ``spark.catalog.clearCache()`` between corpora; the returned
-    DataFrame also carries the persisted relation as ``.gram_cache``
-    (``None`` when ``cache=False``) so a pipeline stage can
-    ``out.gram_cache.unpersist()`` the moment its action completes.
+    Relation lifetime: README "Relation lifetime".
     """
-    rows = gram_hash_rows(df, key_col, text_col, shingle_n)
-    if cache:
-        rows = rows.persist()
+    rows = persist(gram_hash_rows(df, key_col, text_col, shingle_n))
     cands = _banded_pairs(
-        _sigs_from_rows(rows, num_hashes),
+        _sig_classes(_sigs_from_rows(rows, num_hashes)),
         num_hashes,
         bands,
         max_bucket_size,
-        cache=cache,
     )
     sh = rows.groupBy("k").agg(F.collect_set("h").alias("sh"))
-    out = (
+    return (
         cands.join(sh.withColumnsRenamed({"k": "a", "sh": "sh_a"}), "a")
         .join(sh.withColumnsRenamed({"k": "b", "sh": "sh_b"}), "b")
         .select(
@@ -499,13 +467,6 @@ def minhash_dedup(
         )
         .filter(F.col("jaccard_sim") >= threshold)
     )
-    # explicit release handles: the persisted gram relation and the
-    # candidate generator's (k, sig, rep) tagging relation, for callers
-    # (e.g. the NearDupDedup flow segment) that want to unpersist as
-    # soon as their action completes instead of waiting for session end
-    out.gram_cache = rows if cache else None
-    out.sig_cache = cands.sig_cache
-    return out
 
 
 def write_minhash_index(
@@ -613,21 +574,11 @@ def minhash_dedup_incremental(
     path. ExactDedup before the ingest gate (as in
     ``examples/clean_corpus.yml``) remains the cheapest front line.
 
-    Cache contract (``cache=True``): TWO persisted relations ride on
-    the result — ``.gram_cache`` (the batch's tokenized gram rows) and
-    ``.sig_cache`` (the within-batch signature-class tagging, ``None``
-    unless ``include_new_pairs``). A long-lived ingest session MUST
-    release both once the batch's action completes::
-
-        pairs = minhash_dedup_incremental(batch, idx)
-        pairs.write.parquet(...)
-        for h in (pairs.gram_cache, pairs.sig_cache):
-            if h is not None:
-                h.unpersist()
-
-    or pass ``cache=False`` (as the streaming gate does) to pin
-    nothing at the cost of re-evaluating the batch pipeline per
-    downstream reference.
+    ``cache=True`` persists the batch's gram rows and, with
+    ``include_new_pairs``, its signature-class tagging (relation
+    lifetime: README "Relation lifetime"); ``cache=False`` (the
+    streaming gate) pins nothing at the cost of re-evaluating the batch
+    pipeline per downstream reference.
     """
     import json
 
@@ -642,7 +593,7 @@ def minhash_dedup_incremental(
     idx = read_parquet(spark, index_path)
     rows_new = gram_hash_rows(new_df, key_col, text_col, meta["shingle_n"])
     if cache:
-        rows_new = rows_new.persist()
+        rows_new = persist(rows_new)
     sigs_new = _sigs_from_rows(rows_new, num_hashes)
     sh_new = rows_new.groupBy("k").agg(F.collect_set("h").alias("sh"))
 
@@ -665,20 +616,9 @@ def minhash_dedup_incremental(
         # pre-class index: every doc is its own class — same code path,
         # per-doc banding exactly as before the guard
         idx = idx.withColumn("rep", F.col("k"))
-    if include_new_pairs:
-        # the within-batch pair generator persists the identical
-        # (k, sig, rep) tagging relation — reuse it for the cross
-        # probe instead of re-running the sig-window shuffle (same
-        # expression: min(k) over exact-signature classes)
-        cands_new = _banded_pairs(sigs_new, num_hashes, bands, cache=cache)
-        tag_n = cands_new.sig_cache
-    else:
-        cands_new = None
-        tag_n = None
-    if tag_n is None:  # include_new_pairs=False, or cache=False
-        tag_n = sigs_new.selectExpr(
-            "k", "sig", "min(k) OVER (PARTITION BY sig) AS rep"
-        )
+    # the within-batch pair generator and the cross probe read the
+    # same (k, sig, rep) tagging relation, persisted only when both do
+    tag_n = _sig_classes(sigs_new, cache and include_new_pairs)
     reps_n = tag_n.filter("k = rep").select("k", "sig")
     mem_n = tag_n.select("k", "rep")
     mem_i = idx.select("k", "rep")
@@ -730,6 +670,7 @@ def minhash_dedup_incremental(
         .filter(F.col("jaccard_sim") >= threshold)
     )
     if include_new_pairs:
+        cands_new = _banded_pairs(tag_n, num_hashes, bands)
         within = (
             cands_new.join(
                 sh_new.withColumnsRenamed({"k": "a", "sh": "sh_a"}), "a"
@@ -745,33 +686,7 @@ def minhash_dedup_incremental(
             .filter(F.col("jaccard_sim") >= threshold)
         )
         verified = verified.unionByName(within)
-    out = verified
-    # explicit release handles, mirroring minhash_dedup's contract: the
-    # batch gram rows AND the within-batch (k, sig, rep) tagging
-    # relation that _banded_pairs persists. r8 leaked the latter — in a
-    # long-lived ingest session (this function's target use case) every
-    # batch pinned one more relation in executor storage with no
-    # release path short of spark.catalog.clearCache().
-    out.gram_cache = rows_new if cache else None
-    out.sig_cache = (
-        cands_new.sig_cache if include_new_pairs and cache else None
-    )
-    return out
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Best-effort explicit release of a ``localCheckpoint`` leaf's
-    cached RDD blocks (r14 ADVICE): without this the blocks are freed
-    only when the driver GCs the reference and the ContextCleaner's
-    periodic GC runs — long-lived sessions running many dedup passes
-    accumulate checkpoint storage in the meantime. The analyzed plan of
-    a checkpointed Dataset is a ``LogicalRDD`` whose ``rdd`` accessor
-    is the locally-checkpointed RDD; unpersist it directly. Any JVM
-    shape change degrades to the old GC-time release, never an error."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
+    return verified
 
 
 def dedup_components(
@@ -799,10 +714,9 @@ def dedup_components(
     ``max_iter`` rounds (diameter > max_iter) instead of returning
     silently-wrong intermediate labels. The final label relation is
     handed out as an eager ``localCheckpoint`` leaf (rows were already
-    materialized by the convergence check) and exposed as
-    ``.labels_cache`` on the returned DataFrame; ``unpersist()`` on it
-    stays a harmless no-op for the documented release contract, and
-    the checkpoint blocks are GC-released once unreferenced.
+    materialized by the convergence check); relation lifetime: README
+    "Relation lifetime". Round state is released as the loop advances,
+    and on the error path.
 
     Every ``checkpoint_every`` rounds the label relation is
     ``localCheckpoint``-ed: although each round's inputs are persisted,
@@ -871,13 +785,10 @@ def dedup_components(
                 # the `labels` rotation below and stay pinned forever
                 new_labels.unpersist()
                 raise
-            labels.unpersist()
             # right after a checkpoint rotation the outgoing `labels`
-            # is itself a localCheckpoint leaf — unpersist() above
-            # no-ops on those, so release the checkpoint blocks
-            # explicitly too (same trade as the unpersist: the new
-            # round's labels are already materialized)
-            _release_checkpoint(labels)
+            # is a localCheckpoint leaf: release frees its blocks (the
+            # new round's labels are already materialized)
+            release(labels)
             labels = new_labels
             if changed == 0:
                 converged = True
@@ -901,10 +812,9 @@ def dedup_components(
         # timing could otherwise hold them for the life of a long
         # session); on the failure path the current round's labels must
         # not stay pinned either
-        _release_checkpoint(sym)
+        release(sym)
         if not converged:
-            labels.unpersist()
-            _release_checkpoint(labels)
+            release(labels)
     # Truncate the final lineage before handing the labels out: the
     # round-over-round plan references the previous round's labels
     # TWICE per round (the nbr join and the left join), so the
@@ -916,17 +826,11 @@ def dedup_components(
     # already materialized by the convergence check, so the eager
     # localCheckpoint is a cache-to-checkpoint copy of the (tiny)
     # label relation and the handed-out plan is a leaf.
-    final = labels.localCheckpoint(eager=True)
+    final = checkpoint(labels)
     labels.unpersist()
-    labels = final
-    out = labels.select(
+    out = final.select(
         F.col("id").alias("doc_id"), F.col("comp").alias("component")
     )
-    # explicit release handle (the projection above is NOT itself the
-    # cached relation, so .unpersist() on the return value would no-op;
-    # on the checkpointed leaf unpersist is itself a harmless no-op —
-    # the blocks are GC-released — kept for the documented contract)
-    out.labels_cache = labels
     out.n_rounds = n_rounds  # label-propagation rounds to convergence
     return out
 
@@ -971,30 +875,26 @@ def dedup_components_stars(
     graph (observed at the sf1 soak). The checkpoint materializes rows
     the convergence check needs anyway, so it costs nothing extra.
 
-    Exposes ``.n_rounds`` (full large+small rounds to stability),
-    ``.labels_cache`` (the checkpointed final star edges — unpersist is
-    a harmless no-op; the RDD is GC-released) and ``.nodes_cache``
-    (persisted node set — release it when done, or
-    ``spark.catalog.clearCache()`` between corpora). Raises
+    Exposes ``.n_rounds`` (full large+small rounds to stability); the
+    checkpointed final star edges and the persisted node set back the
+    result (relation lifetime: README "Relation lifetime"). Raises
     ``RuntimeError`` if not stable after ``max_iter`` rounds.
     """
     # canonical (u > v) edge list; self-pairs dropped. The eager
     # localCheckpoint cuts the upstream pair-generation plan off the
     # loop (see docstring).
-    edges = (
+    edges = checkpoint(
         pairs.select(
             F.greatest(F.col("a"), F.col("b")).alias("u"),
             F.least(F.col("a"), F.col("b")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = persist(
         edges.select(F.col("u").alias("id"))
         .union(edges.select(F.col("v").alias("id")))
         .distinct()
-        .persist()
     )
 
     def large_star(E: DataFrame) -> DataFrame:
@@ -1029,8 +929,8 @@ def dedup_components_stars(
             n_rounds += 1
             # eager checkpoint each round: truncates the exponential
             # star lineage AND materializes the rows the convergence
-            # check reads; superseded round RDDs are released by the
-            # ContextCleaner once unreferenced.
+            # check reads. Round state is released here, not by the
+            # scope; only the last round's edges are handed to it.
             new_edges = small_star(large_star(edges)).localCheckpoint(
                 eager=True
             )
@@ -1049,7 +949,7 @@ def dedup_components_stars(
             # labels join; a checkpoint leaf cannot recompute).
             superseded, edges = edges, new_edges
             if superseded is not first_edges:
-                _release_checkpoint(superseded)
+                release(superseded)
             if not changed:
                 stable = True
                 break
@@ -1061,6 +961,10 @@ def dedup_components_stars(
     finally:
         if not stable:
             nodes.unpersist()
+            if edges is not first_edges:
+                release(edges)
+    if edges is not first_edges:
+        own(edges)
     # at the fixed point every non-center node has exactly one star
     # edge (u -> component min); centers map to themselves
     out = (
@@ -1073,8 +977,6 @@ def dedup_components_stars(
         .agg(F.min(F.coalesce(F.col("comp"), F.col("id"))).alias("component"))
         .select(F.col("id").alias("doc_id"), "component")
     )
-    out.labels_cache = edges
-    out.nodes_cache = nodes
     out.n_rounds = n_rounds
     return out
 
@@ -1105,36 +1007,28 @@ def dedup_keep_best(
     is ONE window over component members — a relation bounded by the
     paired docs, not the corpus — and survivors come back via a
     left-anti join on the dropped keys. The component label relation
-    stays persisted (it backs both the window and the anti-join);
-    release it with ``out.labels_cache.unpersist()`` when done, as
-    with :func:`dedup_components`."""
+    backs both the window and the anti-join (relation lifetime: README
+    "Relation lifetime")."""
     q = F.col(quality_col) if isinstance(quality_col, str) else quality_col
     # Resolve the quality expression against df BEFORE clustering: a bad
     # column/expression must fail here, not after dedup_components has
-    # persisted the label relation (which no caller could then release).
+    # checkpointed the label relation.
     df.select(q.alias("__q"))
     comp = dedup_components(pairs)
-    labels_cache = comp.labels_cache
-    try:
-        if key_col != "doc_id":  # renaming returns a fresh DF: keep the handle
-            comp = comp.withColumnRenamed("doc_id", key_col)
-        members = df.join(comp, key_col, "inner").select(
-            F.col(key_col), F.col("component"), q.alias("__q")
-        )
-        w = Window.partitionBy("component").orderBy(
-            F.col("__q").desc_nulls_last(), F.col(key_col).asc()
-        )
-        drops = (
-            members.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") > 1)
-            .select(key_col)
-        )
-        out = df.join(drops, key_col, "left_anti")
-    except Exception:
-        labels_cache.unpersist()
-        raise
-    out.labels_cache = labels_cache
-    return out
+    if key_col != "doc_id":
+        comp = comp.withColumnRenamed("doc_id", key_col)
+    members = df.join(comp, key_col, "inner").select(
+        F.col(key_col), F.col("component"), q.alias("__q")
+    )
+    w = Window.partitionBy("component").orderBy(
+        F.col("__q").desc_nulls_last(), F.col(key_col).asc()
+    )
+    drops = (
+        members.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") > 1)
+        .select(key_col)
+    )
+    return df.join(drops, key_col, "left_anti")
 
 
 def leakage_safe_split(
@@ -1162,8 +1056,7 @@ def leakage_safe_split(
     one left join of the corpus against the (doc_id, component) labels
     — broadcastable whenever the near-dup population is small relative
     to the corpus, which is the normal regime — then a narrow coin
-    filter. Release ``out.labels_cache`` as with
-    :func:`dedup_components`."""
+    filter. Relation lifetime: README "Relation lifetime"."""
     from promi_spark.operators.split import coin_hex, hex_threshold
 
     comp = dedup_components(pairs)
@@ -1172,35 +1065,12 @@ def leakage_safe_split(
     )
     group = F.coalesce(F.col("component"), F.col(key_col))
     coin = coin_hex(group.cast("string"), seed, salt="lsplit")
-    out = joined.withColumn(
+    return joined.withColumn(
         "split",
         F.when(coin < F.lit(hex_threshold(ratio)), F.lit("train")).otherwise(
             F.lit("test")
         ),
     ).drop("component")
-    out.labels_cache = comp.labels_cache
-    return out
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Exact n-gram Jaccard for an explicit candidate pair set
-    (a, b) — the verification primitive exposed standalone."""
-    sh = shingle_arrays(df, key_col, text_col, n)
-    return (
-        pairs.join(sh.withColumnsRenamed({"k": "a", "sh": "sh_a"}), "a")
-        .join(sh.withColumnsRenamed({"k": "b", "sh": "sh_b"}), "b")
-        .select(
-            "a",
-            "b",
-            F.round(jaccard("sh_a", "sh_b"), 4).alias("jaccard_sim"),
-        )
-    )
 
 
 def mllib_minhash_candidates(
@@ -1268,7 +1138,6 @@ def mllib_minhash_dedup(
     num_hash_tables: int = 8,
     shingle_n: int = 3,
     num_features: int = 1 << 18,
-    cache: bool = True,
 ) -> DataFrame:
     """MLlib-candidate near-dup pairs verified by EXACT shingle Jaccard:
     ``MinHashLSH`` generates candidates (any colliding hash table,
@@ -1281,13 +1150,10 @@ def mllib_minhash_dedup(
     both the ``HashingTF`` vectorization and the verify join, and the
     verify Jaccard runs directly over the distinct string shingle
     arrays — set cardinalities (hence Jaccard) are identical to the
-    hashed-gram formulation, without a second tokenize pass. Cache
-    lifetime caveats as in :func:`minhash_dedup` (``cache=False`` to
-    recompute instead of pinning).
+    hashed-gram formulation, without a second tokenize pass. Relation
+    lifetime: README "Relation lifetime".
     """
-    sh = shingle_arrays(df, key_col, text_col, shingle_n)
-    if cache:
-        sh = sh.persist()
+    sh = persist(shingle_arrays(df, key_col, text_col, shingle_n))
     cands = mllib_minhash_candidates(
         df,
         key_col,
@@ -1442,7 +1308,6 @@ def simhash_candidates(
     max_hamming: int | None = None,
     hash_mode: str = "xxhash64",
     max_bucket_size: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Hamming-near candidate pairs: docs sharing any 16-bit chunk of
     the signature (full recall for hamming distance < bands). Optional
@@ -1461,7 +1326,7 @@ def simhash_candidates(
     (k, bits) tagging relation instead of re-running the
     tokenize→simhash pipeline per side. ``max_bucket_size`` caps
     residual near-identical bucket skew (counts classes, off by
-    default); release the cache via the result's ``.sig_cache``."""
+    default). Relation lifetime: README "Relation lifetime"."""
     chunk = 64 // bands
     bits_df = simhash_bits_df(df, key_col, text_col, hash_mode=hash_mode)
 
@@ -1475,17 +1340,8 @@ def simhash_candidates(
             ),
         )
 
-    cands = _collapsed_banded_pairs(
-        bits_df.select("k", F.col("bits").alias("sig")),
-        codes,
-        max_bucket_size,
-        cache,
-    )
-    verify_src = (
-        cands.sig_cache
-        if cands.sig_cache is not None
-        else bits_df.select("k", F.col("bits").alias("sig"))
-    )
+    verify_src = _sig_classes(bits_df.select("k", F.col("bits").alias("sig")))
+    cands = _collapsed_banded_pairs(verify_src, codes, max_bucket_size)
     pairs = (
         cands.join(
             verify_src.select(
@@ -1507,5 +1363,4 @@ def simhash_candidates(
     )
     if max_hamming is not None:
         pairs = pairs.filter(F.col("hamming") <= max_hamming)
-    pairs.sig_cache = cands.sig_cache
     return pairs

@@ -35,9 +35,7 @@ bucketed gram stream — (keys, bucket) only, never the gram strings —
 is persisted and feeds both the raw bucket-count estimate and the
 scoring join (the tokenize + md5-coin pipeline is the dominant term;
 the cache spills to executor disk at scale, which still beats paying
-it twice). The persisted relation rides on the result as
-``.gram_cache`` — long-lived sessions must release it (see the
-``dsir_select`` docstring). The standalone ``dsir_weights`` /
+it twice; relation lifetime: README "Relation lifetime"). The standalone ``dsir_weights`` /
 ``dsir_scores`` APIs still scan the raw corpus once each.
 
 No counterpart in the reference (``/root/reference/src`` has no
@@ -51,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from promi_spark.lifetime import persist
 from promi_spark.operators.dedup import norm_text
 from promi_spark.operators.split import coin_hex
 from promi_spark.operators.text import tokens
@@ -265,20 +264,9 @@ def dsir_select(
     constant weight (pinned in tests). Global top-k plans as
     TakeOrdered (per-partition heaps), never a full sort.
 
-    Cache contract (the :func:`minhash_dedup` ``gram_cache`` pattern):
-    the raw corpus' (keys, bucket) gram stream is persisted so the
+    The raw corpus' (keys, bucket) gram stream is persisted so the
     bucket-count estimate and the scoring join share one tokenize +
-    md5-coin pass, and the handle rides on the result as
-    ``.gram_cache``. Long-lived sessions MUST release it once the
-    selection's action completes::
-
-        sel = dsir_select(raw, target, k)
-        sel.write.parquet(...)
-        sel.gram_cache.unpersist()
-
-    (it is a plain Python attribute — LOST on any further DataFrame
-    transformation, so capture it before chaining). The registered
-    flow op defers exactly this unpersist to its teardown hook."""
+    md5-coin pass (relation lifetime: README "Relation lifetime")."""
     if k < 1:
         raise ValueError("dsir_select: k must be >= 1")
     _validate_geometry(buckets, smoothing)
@@ -294,17 +282,17 @@ def dsir_select(
     # scan cost). Persisted rows are (keys, bucket) longs/strings —
     # the corpus text itself is never cached; at 100 TB this spills to
     # executor disk, which still beats re-running tokenize+md5 (the
-    # minhash_dedup gram_cache precedent). The weights collect()
-    # materializes the cache, so the scoring pass is a pure cache
-    # read. Released via the result's ``.gram_cache`` handle (same
-    # contract as minhash_dedup).
+    # minhash_dedup precedent). The weights collect() materializes the
+    # cache, so the scoring pass is a pure cache read.
     # project the gram STRING away before the persist (column pruning
     # does not push through a persist boundary): both consumers read
     # only (*keys, bucket), and caching `g` would store every unigram
     # and bigram string — ~2-3x the corpus text bytes — for nothing
-    raw_grams = gram_stream(raw, keys, text_col).select(
-        *keys, dsir_bucket(F.col("g"), buckets, seed)
-    ).persist()
+    raw_grams = persist(
+        gram_stream(raw, keys, text_col).select(
+            *keys, dsir_bucket(F.col("g"), buckets, seed)
+        )
+    )
     ct = {
         r["bucket"]: r["ct"]
         for r in _bucket_counts(target, text_col, buckets, seed, "ct")
@@ -326,13 +314,9 @@ def dsir_select(
         + 0.5
     ) / F.lit(4294967296.0)
     gumbel = -F.log(-F.log(u))
-    out = (
+    return (
         scored.withColumn("__key", F.col("logw") + gumbel)
         .orderBy(F.desc("__key"), *[F.col(c) for c in keys])
         .limit(k)
         .select(*keys, "logw")
     )
-    # release handle for the persisted gram stream (minhash_dedup's
-    # gram_cache contract): unpersist once the caller's action is done
-    out.gram_cache = raw_grams
-    return out

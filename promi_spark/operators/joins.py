@@ -27,6 +27,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from promi_spark.lifetime import persist
+
 __all__ = ["asof_join", "interval_overlap_join"]
 
 
@@ -246,39 +248,31 @@ def interval_overlap_join(
     post-aggregation (sessions, not raw events), so the footprint is
     the reduced relation, spilling to executor disk at scale.
     Persisting happens AFTER parameter validation, and the auto-width
-    quantile releases the caches if it fails, so no error path leaks a
-    cache-manager entry (r12 ADVICE). Release after the consuming
-    action via the ``unpersist_inputs()`` callable riding on the
-    result (raw handles also exposed as ``.input_caches``), or rely on
-    session-level ``clearCache()`` as the soak/bench harnesses do —
-    repeated calls in a long-lived session must not accumulate entries.
+    quantile releases the inputs it pinned if it fails, so no error
+    path leaves a cache-manager entry, scoped or not. An input the
+    caller already cached is used as is and stays the caller's
+    (relation lifetime: README "Relation lifetime").
     """
     from pyspark import StorageLevel
 
     if bucket_seconds != "auto" and int(bucket_seconds) < 1:
         raise ValueError("bucket_seconds must be a positive integer")
-    caches = []
-    for df in {id(left): left, id(right): right}.values():
-        df.persist(StorageLevel.MEMORY_AND_DISK)
-        caches.append(df)
+    pinned = [
+        persist(df, StorageLevel.MEMORY_AND_DISK)
+        for df in {id(left): left, id(right): right}.values()
+        if df.storageLevel == StorageLevel.NONE
+    ]
 
-    def unpersist_inputs() -> None:
-        for df in caches:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
-    rs0, re0 = right_start or start_col, right_end or end_col
+    rs, re_ = right_start or start_col, right_end or end_col
     if bucket_seconds == "auto":
         try:
             bucket_seconds = _auto_bucket_seconds(
-                left, right, start_col, end_col, rs0, re0
+                left, right, start_col, end_col, rs, re_
             )
         except Exception:
-            unpersist_inputs()
+            for df in pinned:
+                df.unpersist()
             raise
-    rs, re_ = right_start or start_col, right_end or end_col
     w1_us = int(bucket_seconds) * 1_000_000
 
     r_all = right.select(
@@ -325,9 +319,6 @@ def interval_overlap_join(
         )
     if extra is not None:
         out = out.filter(extra)
-    out = out.withColumn(
+    return out.withColumn(
         "overlap_us", F.least(le, re_c) - later_start
     ).drop("__b")
-    out.input_caches = caches
-    out.unpersist_inputs = unpersist_inputs
-    return out

@@ -19,6 +19,7 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from promi_spark.lifetime import persist
 from promi_spark.log import EventLog
 from promi_spark.operators.dfg import END, START, directly_follows
 
@@ -630,9 +631,7 @@ def trace_profiles(log: EventLog) -> DataFrame:
     )
 
 
-def trace_clustering(
-    log: EventLog, k: int = 4, n_iter: int = 0, cache: bool = True
-) -> DataFrame:
+def trace_clustering(log: EventLog, k: int = 4, n_iter: int = 0) -> DataFrame:
     """Trace clustering over activity-count profiles: assign every
     trace to the nearest of ``k`` centroids in Euclidean profile
     space. Returns (case_id, cluster, dist2) — ``cluster`` is the
@@ -655,18 +654,14 @@ def trace_clustering(
     k-row broadcast cross join to surface orthogonal (inner = 0)
     pairs. The profile relation has three consumers (norms, centroid
     pick, inner products) whose column pruning makes the subtrees
-    non-identical — ReuseExchange does NOT fire — so ``cache=True``
-    (default) persists it and the event table is scanned ONCE; the
-    persisted relation is |traces| x |alphabet|-bounded (tiny next to
-    the log). Same lifecycle convention as ``minhash_dedup``: the
-    entry stays pinned until the session drops it — pass
-    ``cache=False`` to trade one scan per consumer for zero storage.
+    non-identical — ReuseExchange does NOT fire — so it is persisted
+    and the event table is scanned ONCE; the persisted relation is
+    |traces| x |alphabet|-bounded (tiny next to the log). Relation
+    lifetime: README "Relation lifetime".
     Tie-break: lowest (dist2, cluster) — deterministic in both
     engines.
     """
-    prof = trace_profiles(log)
-    if cache:
-        prof = prof.persist()
+    prof = persist(trace_profiles(log))
     cent_ids = (
         prof.select("case_id")
         .distinct()

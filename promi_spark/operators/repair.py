@@ -1,14 +1,10 @@
 """Repair operator (reference ``src/stream/repair.rs:14-38``): fix
 invalid classifier names by deleting spaces. Meta lives out-of-band, so
-this is a pure-Python rewrite of the descriptor; the row-level analog
-(repairing a classifier-derived column) is a ``regexp_replace``."""
+this is a pure-Python rewrite of the descriptor."""
 
 from __future__ import annotations
 
 from dataclasses import replace
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from promi_spark.schema import ClassifierDecl, Meta
 
@@ -20,8 +16,3 @@ def repair_meta(meta: Meta) -> Meta:
         for c in meta.classifiers
     ]
     return replace(meta, classifiers=fixed)
-
-
-def repair_column(col: Column) -> Column:
-    """Row-level variant: strip spaces from an identifier column."""
-    return F.regexp_replace(col, " ", "")

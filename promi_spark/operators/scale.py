@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from promi_spark.io import read_parquet
+from promi_spark.lifetime import checkpoint
 
 
 def salt(col: Column | str, n_salts: int, *entropy: Column) -> Column:
@@ -514,11 +515,9 @@ def global_ntile(
     map and corrupt every rank. With the checkpoint, recompute is
     impossible: the pinned layout is either served or the job fails
     loudly (on a real cluster, use ``spark.sparkContext.setCheckpointDir``
-    + ``.checkpoint()`` for executor-loss resilience). The handle is
-    attached as ``out.rank_cache``; ``unpersist()`` on it is a no-op
-    (checkpoint blocks are freed by the ContextCleaner on GC) — a
-    long-lived session issuing many calls should free each result
-    with :func:`release_global_ntile` once fully consumed.
+    + ``.checkpoint()`` for executor-loss resilience). Relation
+    lifetime: README "Relation lifetime"; outside a scope the blocks
+    are freed by the ContextCleaner once unreferenced.
     """
     spark = df.sparkSession
     try:
@@ -531,8 +530,7 @@ def global_ntile(
         .sortWithinPartitions(*cols)
         .withColumn("__mid", F.monotonically_increasing_id())
     )
-    d = d_pre.localCheckpoint(eager=True)
-    ckpt_ids = _checkpoint_rdd_ids(d)
+    d = checkpoint(d_pre)
     counts = {
         r["_pid"]: r["cnt"]
         for r in d.groupBy(F.shiftright("__mid", 33).alias("_pid"))
@@ -542,9 +540,7 @@ def global_ntile(
     n = sum(counts.values())
     if n == 0:
         out = df.withColumn(bucket_col, F.lit(None).cast("int"))
-        out.rank_cache = d
         out.rank_plan = d_pre
-        out.rank_cache_ids = ckpt_ids
         return out
     offsets: list[Column] = []
     acc = 0
@@ -567,77 +563,11 @@ def global_ntile(
             rank <= head, F.floor((rank - 1) / (q + 1)) + 1
         ).otherwise(F.lit(r) + F.floor((rank - head - 1) / q) + 1)
     out = d.withColumn(bucket_col, bucket.cast("int")).drop("__mid")
-    out.rank_cache = d
     # the lazy pre-checkpoint stage, exposed so plan tests can assert
     # the distributed shape (the checkpointed plan is an ExistingRDD
     # scan — the range exchange already ran)
     out.rank_plan = d_pre
-    # checkpoint RDD ids for release_global_ntile (DataFrame.unpersist
-    # on a localCheckpoint handle is a no-op; the storage belongs to
-    # the internal RDD, reachable only by id)
-    out.rank_cache_ids = ckpt_ids
     return out
-
-
-def _persistent_rdd_ids(spark) -> set[int]:
-    """Ids of RDDs currently pinned in the block manager (JVM
-    SparkContext.getPersistentRDDs keys). Observability/test helper —
-    NOT used to attribute checkpoint ownership (see
-    :func:`_checkpoint_rdd_ids` for why a before/after diff of this
-    set is race-prone)."""
-    it = (
-        spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
-    )
-    ids = set()
-    while it.hasNext():
-        ids.add(it.next())
-    return ids
-
-
-def _checkpoint_rdd_ids(d: DataFrame) -> set[int]:
-    """The persisted RDD id(s) backing a ``localCheckpoint``-ed
-    DataFrame, read DIRECTLY off its analyzed plan: after the
-    checkpoint the plan is a ``LogicalRDD`` node whose ``rdd`` field IS
-    the pinned block-manager entry. The r8 implementation diffed the
-    global ``getPersistentRDDs`` map before/after the checkpoint, which
-    attributed any RDD persisted CONCURRENTLY by another thread/job to
-    this call — :func:`release_global_ntile` would then unpersist an
-    unrelated cache (silently dropping another computation's storage,
-    or cutting another localCheckpoint's only copy). The direct read
-    has no window to race in. Empty set if the plan shape is ever not
-    a LogicalRDD (future Spark change) — release then degrades to the
-    documented ContextCleaner-on-GC behavior rather than guessing."""
-    try:
-        plan = d._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            return {plan.rdd().id()}
-    except Exception:
-        pass
-    return set()
-
-
-def release_global_ntile(out: DataFrame) -> None:
-    """Free the checkpointed rank blocks of a :func:`global_ntile`
-    result once the caller has fully consumed/written it (r7 advice:
-    every call eagerly materializes the ranked relation, and without
-    this the blocks are only freed by the ContextCleaner on GC — a
-    long-lived session issuing many global_ntile calls accumulates
-    executor storage). ``DataFrame.unpersist()`` cannot do this — the
-    storage belongs to the *internal* checkpointed RDD, so the ids are
-    recorded at checkpoint time and unpersisted here directly.
-
-    After release the output (and anything derived from it that has
-    not been materialized) is NO LONGER COMPUTABLE — the checkpoint
-    cut the lineage — so call only when every downstream action is
-    done. No-op on anything without recorded ids."""
-    ids = getattr(out, "rank_cache_ids", None)
-    if not ids:
-        return
-    jmap = out.sparkSession.sparkContext._jsc.sc().getPersistentRDDs()
-    for rid in ids:
-        if jmap.contains(rid):
-            jmap.apply(rid).unpersist(False)
-    out.rank_cache_ids = set()
 
 
 def zorder_value(cols: list[Column], bits: int = 16) -> Column:

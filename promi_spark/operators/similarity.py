@@ -24,6 +24,8 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from promi_spark.lifetime import persist
+
 
 def _as_double(col: Column) -> Column:
     return col.cast("array<double>")
@@ -513,7 +515,6 @@ def lsh_near_dups(
     vec_col: str = "embedding",
     dim: int | None = None,
     max_bucket_size: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-dup, LSH-bounded scale path: vectors
     sharing any band of their hyperplane sign-bits become candidates;
@@ -550,14 +551,13 @@ def lsh_near_dups(
     MinHash/SimHash paths; the sign-bit pipeline is computed once into
     the persisted tagging relation instead of once per self-join side.
     ``max_bucket_size`` caps residual bucket skew (counts classes, off
-    by default); release the caches via the result's ``.sig_cache``
-    (the (k, sig, rep) tagging relation) and ``.pair_cache`` (the
-    persisted candidate pairs — the plan boundary that keeps the
-    verify stage from re-executing the banding pipeline).
+    by default). The candidate pairs are persisted too (the plan
+    boundary that keeps the verify stage from re-executing the banding
+    pipeline); relation lifetime: README "Relation lifetime".
 
     ``dim`` avoids a driver peek when the vector width is known.
     """
-    from promi_spark.operators.dedup import _collapsed_banded_pairs
+    from promi_spark.operators.dedup import _collapsed_banded_pairs, _sig_classes
 
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
@@ -586,23 +586,20 @@ def lsh_near_dups(
             ),
         )
 
-    cands = _collapsed_banded_pairs(
-        base.select("k", sign_bits.alias("sig")),
-        codes,
-        max_bucket_size,
-        cache,
+    # Plan-boundary persist of the (a, b) pair relation before the
+    # verify: letting the verify's joins + sim expression plan against
+    # the live collapse/expansion subtree re-executes the candidate
+    # pipeline inside the verify stage — measured 223 s vs 32 s for the
+    # IDENTICAL 66M-pair result at sf1 (and the boundary also beats the
+    # r7 pre-collapse path 2.7x). Pairs are two longs each
+    # (MEMORY_AND_DISK, spills at scale).
+    cands = persist(
+        _collapsed_banded_pairs(
+            _sig_classes(base.select("k", sign_bits.alias("sig"))),
+            codes,
+            max_bucket_size,
+        )
     )
-    sig_cache = cands.sig_cache
-    if cache:
-        # Plan-boundary persist of the (a, b) pair relation before the
-        # verify: letting the verify's joins + sim expression plan
-        # against the live collapse/expansion subtree re-executes the
-        # candidate pipeline inside the verify stage — measured 223 s
-        # vs 32 s for the IDENTICAL 66M-pair result at sf1 (and the
-        # boundary also beats the r7 pre-collapse path 2.7x). Pairs
-        # are two longs each (MEMORY_AND_DISK, spills at scale);
-        # release via the result's ``.pair_cache``.
-        cands = cands.persist()
     # Arrow-kernel pairwise dot for the candidate verify (bit-identical
     # to the fold — see pair_dot_udf); norms and the round stay JVM
     sim = F.round(
@@ -610,7 +607,7 @@ def lsh_near_dups(
         / (F.col("na") * F.col("nb")),
         6,
     )
-    out = (
+    return (
         cands.join(
             base.select(
                 F.col("k").alias("a"),
@@ -630,9 +627,6 @@ def lsh_near_dups(
         .select("a", "b", sim.alias("cosine_sim"))
         .filter(F.col("cosine_sim") >= threshold)
     )
-    out.sig_cache = sig_cache
-    out.pair_cache = cands if cache else None
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1000,7 +994,7 @@ def ivf_topk(
 
 
 def _cluster_gram_pairs(
-    id_field, dim: int, threshold: float, block_bytes: int = 32 << 20
+    id_field, threshold: float, block_bytes: int = 32 << 20
 ):
     """Per-cluster pair kernel for :func:`semantic_dedup`'s ``gram``
     verify path: one pandas group = one cluster's (k, v, nrm) rows;
@@ -1172,9 +1166,7 @@ def semantic_dedup(
             "Spark must sort them identically); use verify='join'"
         )
     if verify != "join" and integral_id and cent:
-        kernel = _cluster_gram_pairs(
-            "int64", len(cent[0]), float(threshold)
-        )
+        kernel = _cluster_gram_pairs("int64", float(threshold))
         raw = assigned.groupBy("cluster").applyInPandas(
             kernel,
             schema=(

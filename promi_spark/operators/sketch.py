@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from promi_spark.lifetime import persist
+
 __all__ = ["mg_candidates", "heavy_hitters", "mg_update"]
 
 
@@ -148,10 +150,8 @@ def heavy_hitters(
       TWICE (sketch + verify) instead of three times — the separate
       full count() scan is gone; at 100 TB that is a whole corpus pass.
       The tiny summary relation (<= partitions x capacity rows) is
-      persisted for its two readers and rides on the result as
-      ``.cands_cache`` (``None`` on the min_count path) — long-lived
-      sessions should ``unpersist()`` it once their action completes;
-      identical re-invocations share one CacheManager entry.
+      persisted for its two readers (relation lifetime: README
+      "Relation lifetime").
     """
     if (min_count is None) == (min_frac is None):
         raise ValueError(
@@ -172,11 +172,8 @@ def heavy_hitters(
         # driver/executor-sized by design) and serves BOTH the exact
         # stream size (one tiny aggregate over the sentinel rows,
         # materializing the cache) and the candidate set the verify
-        # join broadcasts. The handle rides on the result as
-        # ``.cands_cache`` (minhash_dedup's gram_cache convention):
-        # long-lived sessions release it once their action completes;
-        # identical re-invocations share one CacheManager entry.
-        summ = _mg_summaries(df, col, capacity, with_rows=True).persist()
+        # join broadcasts.
+        summ = persist(_mg_summaries(df, col, capacity, with_rows=True))
         n = (
             summ.filter(F.col("item").isNull()).agg(F.sum("est")).first()[0]
             or 0
@@ -191,16 +188,13 @@ def heavy_hitters(
         if capacity is None:
             n = df.filter(nn).count()
             capacity = n // min_count + 1
-        summ = None
         cands = mg_candidates(df, col, capacity).select(
             F.col("item").alias(col)
         ).distinct()
-    out = (
+    return (
         df.filter(nn)
         .join(F.broadcast(cands), col, "left_semi")
         .groupBy(col)
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .filter(F.col("n_occurrences") >= F.lit(int(min_count)))
     )
-    out.cands_cache = summ
-    return out

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from promi_spark.lifetime import persist
+
 # Tiny embedded stopword lists for the n-gram/stopword language
 # heuristic. Deliberately small and deterministic; real deployments
 # would swap in fastText-style models via mapInPandas.
@@ -106,7 +108,6 @@ def bigram_lm_scores(
     alpha: float = 0.5,
     train_df: DataFrame | None = None,
     cross_entropy: bool = False,
-    cache: bool = True,
 ) -> DataFrame:
     """Word-bigram language-model quality signal per document
     (CCNet-style: text whose n-grams are improbable under a reference
@@ -121,12 +122,11 @@ def bigram_lm_scores(
     and the per-doc fold runs in token order over a collected array,
     never as a shuffled float SUM).
 
-    Scale shape: the tokenized relation is persisted once (``cache``)
-    and feeds all four consumers — the bigram and context count
-    tables, the vocabulary count, and the per-doc scoring rows — so
-    normalization+tokenization runs one pass, not four; release via
-    the returned DataFrame's ``toks_cache`` handle (as with
-    ``minhash_dedup``). Scoring equi-joins each doc's
+    Scale shape: the tokenized relation is persisted once and feeds all
+    four consumers — the bigram and context count tables, the
+    vocabulary count, and the per-doc scoring rows — so
+    normalization+tokenization runs one pass, not four (relation
+    lifetime: README "Relation lifetime"). Scoring equi-joins each doc's
     bigram rows to the bigram table (shuffle join, AQE-splittable) and
     to the vocab-sized context table, with the scalar vocabulary size
     attached via a broadcast 1-row cross join (no driver round-trip).
@@ -146,15 +146,8 @@ def bigram_lm_scores(
             ),
         )
 
-    base = toks_of(df)
-    if cache:
-        base = base.persist()
-    if train_df is None:
-        train = base
-    else:
-        train = toks_of(train_df)
-        if cache:
-            train = train.persist()
+    base = persist(toks_of(df))
+    train = base if train_df is None else persist(toks_of(train_df))
     c12 = (
         train.select(F.explode(bigrams(F.col("toks"))).alias("big"))
         .groupBy("big")
@@ -199,15 +192,12 @@ def bigram_lm_scores(
         + (-F.log(x["p"]) if cross_entropy else x["p"]),
     )
     score_name = "avg_neg_log_p" if cross_entropy else "mean_bigram_p"
-    out = folded.select(
+    return folded.select(
         F.col("k").alias(key_col),
         n.cast("long").alias("n_bigrams"),
         F.round(F.col("n_oov") / n, 4).alias("oov_rate"),
         F.round(fold / n, 6).alias(score_name),
     )
-    out.toks_cache = base if cache else None
-    out.train_toks_cache = train if (cache and train is not base) else None
-    return out
 
 
 def source_mix(

@@ -23,14 +23,6 @@ from promi_spark.log import EventLog
 from promi_spark.schema import RE_XS_NCNAME, SPARK_TYPE_FOR_TAG, WELL_KNOWN_KEYS, Meta
 
 
-def _attr_col(key: str) -> Column:
-    """An attribute by XES key: well-known -> fixed column, else the
-    ``attrs`` map (``F.element_at`` returns NULL when absent)."""
-    if key in WELL_KNOWN_KEYS:
-        return F.col(WELL_KNOWN_KEYS[key])
-    return F.element_at(F.col("attrs"), key)
-
-
 def _tag_of(key: str, scope_prefix: str = "") -> Column:
     """The XES type tag recorded at ingest for ``key`` (NULL when the
     log has no ``attr_types``, e.g. the driver's synthetic tables)."""

@@ -17,10 +17,13 @@ the reference's typed form (``{String: x}``, ``{Float: 0.1}``,
 
 from __future__ import annotations
 
+import contextvars
 import json
 from dataclasses import dataclass, field
 from typing import Any
 
+from promi_spark.lifetime import scope
+from promi_spark.log import EventLog
 from promi_spark.plans.registry import FlowConfigError, FlowContext, get
 
 _TYPED_KEYS = {"String", "Float", "Int", "Boolean", "Date", "Id", "List"}
@@ -267,14 +270,18 @@ def execute(spark, flow: Flow | str | dict, base_dir: str = ".") -> FlowResult:
     one generation there are no cross-thread channel hand-offs, so the
     shared FlowContext dicts are written race-free (distinct keys,
     GIL-atomic); a failing pipe cancels nothing mid-flight but its
-    exception propagates after the generation drains, and cleanups
-    still run."""
+    exception propagates after the generation drains.
+
+    The run owns what its segments persist or checkpoint: it opens a
+    :func:`promi_spark.lifetime.scope` (or joins the caller's), so those
+    relations are freed when it returns or fails — except checkpoints
+    a returned stream still reads (README "Relation lifetime")."""
     if not isinstance(flow, Flow):
         flow = load_flow(flow)  # load_flow validates
     else:
         validate_flow(flow)  # dict/dataclass-built flows validate too
     ctx = FlowContext(spark=spark, base_dir=base_dir)
-    try:
+    with scope() as owner:
         for gen in _generations(flow):
             if len(gen) == 1:  # no pool for the common serial chain
                 _run_pipe(ctx, gen[0])
@@ -285,7 +292,14 @@ def execute(spark, flow: Flow | str | dict, base_dir: str = ".") -> FlowResult:
                 max_workers=min(len(gen), MAX_CONCURRENT_PIPES),
                 thread_name_prefix="promi_flow_pipe",
             ) as pool:
-                futures = [pool.submit(_run_pipe, ctx, p) for p in gen]
+                # a worker thread sees the open scope only inside a
+                # copy of this thread's context
+                futures = [
+                    pool.submit(
+                        contextvars.copy_context().run, _run_pipe, ctx, p
+                    )
+                    for p in gen
+                ]
                 # collect every result so no failure is swallowed; the
                 # first exception (submission order) propagates
                 errs = []
@@ -296,10 +310,7 @@ def execute(spark, flow: Flow | str | dict, base_dir: str = ".") -> FlowResult:
                         errs.append(e)
                 if errs:
                     raise errs[0]
-    finally:
-        # release segment-persisted relations (ctx.defer) even on a
-        # failed flow — a long-lived session must not accumulate
-        # executor storage across flows
-        for fn in ctx.cleanups:
-            fn()
+        owner.keep(
+            *(s.df if isinstance(s, EventLog) else s for s in ctx.streams.values())
+        )
     return FlowResult(artifacts=ctx.artifacts, streams=ctx.streams)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
+from promi_spark.lifetime import persist
 from promi_spark.log import EventLog
 from promi_spark.schema import EVENTS_SCHEMA, Meta
 
@@ -32,20 +33,11 @@ class FlowContext:
     base_dir: str = "."
     streams: dict[str, EventLog] = field(default_factory=dict)
     artifacts: dict[str, Any] = field(default_factory=dict)
-    cleanups: list[Callable[[], Any]] = field(default_factory=list)
 
     def path(self, p: str) -> str:
         import os
 
         return p if os.path.isabs(p) else os.path.join(self.base_dir, p)
-
-    def defer(self, fn: Callable[[], Any]) -> None:
-        """Register a cleanup to run after every sink has executed —
-        the hook segments use to release relations they persisted for
-        the flow's duration (e.g. NearDupDedup's gram-row cache), so a
-        long-lived session does not accumulate executor storage across
-        flows. Cleanups run in registration order; failures propagate."""
-        self.cleanups.append(fn)
 
 
 class FlowConfigError(ValueError):
@@ -255,7 +247,8 @@ def _split(ctx, log, ratio: float, seed: int = 0, _send=None, **_):
 @register("Duplicator", "tee a stream to a channel (duplicator.rs:12-68)",
           {"stream"})
 def _duplicator(ctx, log, _send=None, **_):
-    dup = log.cache()  # one scan feeds both consumers
+    # one scan feeds both consumers
+    dup = log.with_df(persist(log.df)) if hasattr(log, "df") else persist(log)
     if _send:
         for ch in _send:
             ctx.streams[ch] = dup
@@ -477,21 +470,10 @@ def _near_dup_dedup(ctx, df, threshold: float = 0.7,
     )
 
     pairs = minhash_dedup(df, key_col, text_col, threshold=threshold)
-    # release the segment-persisted relations (gram rows, the r8
-    # signature-class tagging, and the component labels when
-    # clustering) once the flow's sinks have run — they must not
-    # outlive the flow in a long-lived session
-    if pairs.gram_cache is not None:
-        ctx.defer(pairs.gram_cache.unpersist)
-    if pairs.sig_cache is not None:
-        ctx.defer(pairs.sig_cache.unpersist)
     if keep_best_col:
-        out = dedup_keep_best(df, pairs, keep_best_col, key_col=key_col)
-        ctx.defer(out.labels_cache.unpersist)
-        return out
+        return dedup_keep_best(df, pairs, keep_best_col, key_col=key_col)
     if transitive:
         comp = dedup_components(pairs)
-        ctx.defer(comp.labels_cache.unpersist)
         drop = comp.filter(F.col("doc_id") != F.col("component")).select(
             F.col("doc_id").alias(key_col)
         )
@@ -624,17 +606,10 @@ def _dsir_select(ctx, df, k: int, key: str = "doc_id",
     target = ctx.streams[_recv[0]]
     target_df = target.df if hasattr(target, "df") else target
     raw_df = df.df if hasattr(df, "df") else df
-    sel = dsir_select(
+    picked = dsir_select(
         raw_df, target_df, k, key_cols=key, text_col=text_col,
         buckets=buckets, smoothing=float(smoothing), seed=seed,
-    )
-    # release the operator's persisted gram stream at flow teardown
-    # (same contract as the NearDupDedup segment's gram/sig caches);
-    # tolerate minimal driver contexts without a defer hook
-    defer = getattr(ctx, "defer", None)
-    if defer is not None and getattr(sel, "gram_cache", None) is not None:
-        defer(sel.gram_cache.unpersist)
-    picked = sel.select(key)
+    ).select(key)
     return raw_df.join(picked, key, "left_semi")
 
 
@@ -682,16 +657,10 @@ def _heavy_hitters(ctx, df, col: str, min_count: int | None = None,
     from promi_spark.operators.sketch import heavy_hitters
 
     try:
-        out = heavy_hitters(df, col, min_count=min_count,
-                            min_frac=min_frac)
+        return heavy_hitters(df, col, min_count=min_count,
+                             min_frac=min_frac)
     except ValueError as e:
         raise FlowConfigError(f"HeavyHitters: {e}") from e
-    # r15: the min_frac path persists the MG summary relation
-    # (.cands_cache handle) — release it when the flow's action
-    # completes, same deferral as the dedup gram caches
-    if getattr(out, "cands_cache", None) is not None:
-        ctx.defer(out.cands_cache.unpersist)
-    return out
 
 
 @register("PerKeyCap", "domain cap: keep at most n rows per key by "
@@ -778,12 +747,7 @@ def _leakage_safe_split(ctx, df, ratio: float, side: str | None = None,
             f"LeakageSafeSplit: side must be 'train' or 'test', got {side!r}"
         )
     pairs = minhash_dedup(df, key_col, text_col, threshold=threshold)
-    if pairs.gram_cache is not None:
-        ctx.defer(pairs.gram_cache.unpersist)
-    if pairs.sig_cache is not None:
-        ctx.defer(pairs.sig_cache.unpersist)
     out = leakage_safe_split(df, pairs, ratio, key_col=key_col, seed=seed)
-    ctx.defer(out.labels_cache.unpersist)
     if side is not None:
         return out.filter(F.col("split") == side).drop("split")
     return out

@@ -1890,17 +1890,9 @@ def q_session_overlaps(spark, sf_dir):
         end_col="session_end",
         extra=F.col("user_id") < F.col("user_id_r"),
     )
-    res = out.select(
+    return out.select(
         "user_id", "session_id", "user_id_r", "session_id_r", "overlap_us"
     )
-    # .select() returns a fresh DataFrame, dropping the join's cache
-    # handles — re-attach them so a library caller CAN release the
-    # persisted session relation after the consuming action (the
-    # documented mechanism was unreachable through this query, r12
-    # ADVICE; the soak/bench harnesses clearCache() between queries).
-    res.input_caches = out.input_caches
-    res.unpersist_inputs = out.unpersist_inputs
-    return res
 
 
 @q(

@@ -15,6 +15,21 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def pinned_rdds(spark):
+    """A function returning the ids of the RDDs pinned in the block
+    manager right now: persisted relations and checkpoints alike."""
+
+    def ids() -> set[int]:
+        it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+        out = set()
+        while it.hasNext():
+            out.add(it.next())
+        return out
+
+    return ids
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

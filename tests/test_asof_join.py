@@ -302,10 +302,14 @@ def test_interval_overlap_auto_bucket_floors_and_tail_guard(spark):
 
 def test_interval_overlap_join_cache_release(spark):
     """Repeated calls in one session must not accumulate cache-manager
-    entries (r12 ADVICE: the persist handles were unreachable through
-    q_session_overlaps' select, and the bucket_seconds<1 error path
-    persisted before validating). unpersist_inputs() releases exactly
-    the inputs; the validation error path persists nothing."""
+    entries (r12 ADVICE: the bucket_seconds<1 error path persisted
+    before validating). The scope frees exactly the inputs the join
+    pinned; the validation error path persists nothing, and the
+    auto-width error path frees what it pinned."""
+    from pyspark import StorageLevel
+    from pyspark.errors import AnalysisException
+
+    from promi_spark.lifetime import scope
     from promi_spark.operators.joins import interval_overlap_join
 
     jsc = spark.sparkContext._jsc.sc()
@@ -323,25 +327,65 @@ def test_interval_overlap_join_cache_release(spark):
     with pytest.raises(ValueError, match="bucket_seconds"):
         interval_overlap_join(iv, iv, bucket_seconds=0)
     assert jsc.getPersistentRDDs().size() == base
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    # the auto-width quantile fails after the inputs are pinned: it
+    # releases them on the way out, with or without a scope
+    for scoped in (False, True):
+        with pytest.raises(AnalysisException):
+            if scoped:
+                with scope():
+                    interval_overlap_join(iv, iv, start_col="missing")
+            else:
+                interval_overlap_join(iv, iv, start_col="missing")
+        assert iv.storageLevel == StorageLevel.NONE
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     for _ in range(3):
-        out = interval_overlap_join(iv, iv)
-        assert out.count() == 4  # self-join: both self-pairs + both directions
-        out.unpersist_inputs()
+        with scope():
+            out = interval_overlap_join(iv, iv)
+            assert out.count() == 4  # self-join: both self-pairs + both directions
     assert jsc.getPersistentRDDs().size() == base
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
-def test_session_overlaps_propagates_cache_handles(spark, sf_dir):
-    """The registry query re-attaches the join's release mechanism to
-    the DataFrame it actually returns."""
+def test_interval_overlap_join_keeps_caller_persisted_input(spark, sf_dir):
+    """An input the caller persisted before the join stays the caller's:
+    the join neither pins it again nor evicts it when its scope exits
+    (before, the join's own release evicted the caller's cache)."""
+    from pyspark import StorageLevel
+
+    from promi_spark.lifetime import scope
+    from promi_spark.operators.joins import interval_overlap_join
+    from promi_spark.queries import q_user_sessions
+
+    sess = q_user_sessions(spark, sf_dir).select(
+        "user_id", "session_id", "session_start", "session_end"
+    ).persist()
+    try:
+        with scope():
+            out = interval_overlap_join(
+                sess, sess, start_col="session_start", end_col="session_end",
+                extra=F.col("user_id") < F.col("user_id_r"),
+            )
+            assert out.count() >= 0
+        assert sess.storageLevel != StorageLevel.NONE
+    finally:
+        sess.unpersist()
+
+
+def test_session_overlaps_releases_inside_scope(spark, sf_dir):
+    """The registry query's persisted session relation is freed when
+    the caller's scope exits."""
+    from promi_spark.lifetime import scope
     from promi_spark.queries import QUERIES
 
     fn, _ = QUERIES["session_overlaps"]
     jsc = spark.sparkContext._jsc.sc()
     spark.catalog.clearCache()
     base = jsc.getPersistentRDDs().size()
-    out = fn(spark, sf_dir)
-    assert out.count() >= 0
-    assert callable(out.unpersist_inputs) and out.input_caches
-    out.unpersist_inputs()
+    with scope():
+        assert fn(spark, sf_dir).count() >= 0
+        assert jsc.getPersistentRDDs().size() > base
     assert jsc.getPersistentRDDs().size() == base
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

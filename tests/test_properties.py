@@ -329,6 +329,7 @@ def test_leakage_safe_split_never_straddles(spark):
     singleton docs route like the plain md5-coin split."""
     from pyspark.sql import functions as F
 
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import leakage_safe_split
 
     docs = spark.createDataFrame(
@@ -338,18 +339,20 @@ def test_leakage_safe_split_never_straddles(spark):
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (10, 11)], "a long, b long"
     )
-    out = leakage_safe_split(docs, pairs, ratio=0.5)
-    sides = {r["doc_id"]: r["split"] for r in out.collect()}
+    with scope():
+        sides = {
+            r["doc_id"]: r["split"]
+            for r in leakage_safe_split(docs, pairs, ratio=0.5).collect()
+        }
+        again = {
+            r["doc_id"]: r["split"]
+            for r in leakage_safe_split(docs, pairs, ratio=0.5).collect()
+        }
     assert len(sides) == 40
     assert sides[0] == sides[1] == sides[2]
     assert sides[10] == sides[11]
     assert set(sides.values()) == {"train", "test"}  # both sides populated
-    again = {
-        r["doc_id"]: r["split"]
-        for r in leakage_safe_split(docs, pairs, ratio=0.5).collect()
-    }
     assert sides == again
-    out.labels_cache.unpersist()
 
 
 def test_capped_and_weighted_sample_nested_in_size(spark):
@@ -553,6 +556,7 @@ def test_incremental_cross_probe_rides_the_class_guard(spark, tmp_path):
     full guarded batch run restricted to batch-touching pairs."""
     from pyspark.sql import functions as F
 
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import (
         minhash_dedup,
         minhash_dedup_incremental,
@@ -602,12 +606,13 @@ def test_incremental_cross_probe_rides_the_class_guard(spark, tmp_path):
     assert inc.count() == expected
     # set-equality with the guarded full batch run restricted to pairs
     # touching the batch — distributed exceptAll, no driver collect
-    full = minhash_dedup(df, cache=False).filter(
-        ((F.col("a") >= n_idx) & (F.col("a") < n_idx + n_new))
-        | ((F.col("b") >= n_idx) & (F.col("b") < n_idx + n_new))
-    )
-    assert inc.exceptAll(full).count() == 0
-    assert full.exceptAll(inc).count() == 0
+    with scope():
+        full = minhash_dedup(df).filter(
+            ((F.col("a") >= n_idx) & (F.col("a") < n_idx + n_new))
+            | ((F.col("b") >= n_idx) & (F.col("b") < n_idx + n_new))
+        )
+        assert inc.exceptAll(full).count() == 0
+        assert full.exceptAll(inc).count() == 0
 
 
 def test_incremental_probe_pre_class_index_fallback(spark, tmp_path):

@@ -234,34 +234,37 @@ def test_global_ntile_matches_window_ntile(spark):
     n % k != 0 bucket sizing, and the n < k degenerate case."""
     from pyspark.sql import Window
 
+    from promi_spark.lifetime import scope
     from promi_spark.operators.scale import global_ntile
 
     rows = [(i, None if i % 17 == 0 else float(i % 23)) for i in range(501)]
     df = spark.createDataFrame(rows, "id long, v double").repartition(13)
     order = [F.asc_nulls_last("v"), F.col("id")]
     for k in (4, 7, 10):
-        got = global_ntile(df, k, order, "b")
         want = df.withColumn("b", F.ntile(k).over(Window.orderBy(*order)))
-        assert sorted(map(tuple, got.select("id", "b").collect())) == sorted(
-            map(tuple, want.select("id", "b").collect())
-        ), f"k={k}"
-        got.rank_cache.unpersist()
+        with scope():
+            got = global_ntile(df, k, order, "b")
+            assert sorted(map(tuple, got.select("id", "b").collect())) == sorted(
+                map(tuple, want.select("id", "b").collect())
+            ), f"k={k}"
     # n < k: bucket == rank
     tiny = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, v double")
-    got = global_ntile(tiny, 5, [F.col("v"), F.col("id")], "b")
-    assert sorted(map(tuple, got.select("id", "b").collect())) == [(1, 1), (2, 2)]
-    got.rank_cache.unpersist()
+    with scope():
+        got = global_ntile(tiny, 5, [F.col("v"), F.col("id")], "b")
+        assert sorted(map(tuple, got.select("id", "b").collect())) == [(1, 1), (2, 2)]
 
 
 def test_global_ntile_no_single_partition_window(spark):
     """The plan must contain no unpartitioned Window (the shape
     global_ntile exists to avoid) and exactly one data exchange (the
     range repartition)."""
+    from promi_spark.lifetime import scope
     from promi_spark.operators.scale import global_ntile
 
     df = spark.range(1000).withColumn("v", F.col("id") % 7)
-    out = global_ntile(df, 4, [F.col("v"), F.col("id")], "b")
-    plan = explain(out)
+    with scope():
+        out = global_ntile(df, 4, [F.col("v"), F.col("id")], "b")
+        plan = explain(out)
     assert "Window" not in plan
     assert "SinglePartition" not in plan
     # The output plan reads the checkpointed layout (ExistingRDD); the
@@ -270,7 +273,6 @@ def test_global_ntile_no_single_partition_window(spark):
     pre = explain(out.rank_plan)
     assert "rangepartitioning" in pre
     assert "SinglePartition" not in pre
-    out.rank_cache.unpersist()
 
 
 def test_global_ntile_survives_cache_clear(spark):
@@ -283,14 +285,16 @@ def test_global_ntile_survives_cache_clear(spark):
     cannot be recomputed — buckets must be identical after a clear."""
     from pyspark.sql import Window
 
+    from promi_spark.lifetime import scope
     from promi_spark.operators.scale import global_ntile
 
     rows = [(i, float((i * 37) % 101)) for i in range(2000)]
     df = spark.createDataFrame(rows, "id long, v double").repartition(16)
     order = [F.col("v"), F.col("id")]
-    out = global_ntile(df, 4, order, "b")
-    spark.catalog.clearCache()
-    got = sorted(map(tuple, out.select("id", "b").collect()))
+    with scope():
+        out = global_ntile(df, 4, order, "b")
+        spark.catalog.clearCache()
+        got = sorted(map(tuple, out.select("id", "b").collect()))
     want = sorted(
         map(
             tuple,
@@ -300,7 +304,6 @@ def test_global_ntile_survives_cache_clear(spark):
         )
     )
     assert got == want
-    out.rank_cache.unpersist()
 
 
 def test_corpus_shuffle_is_deterministic_permutation(spark):
@@ -348,46 +351,36 @@ def test_corpus_shuffle_plan_is_shard_partitioned(spark):
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
 
 
-def test_global_ntile_release_frees_checkpoint_blocks(spark):
+def test_global_ntile_release_frees_checkpoint_blocks(spark, pinned_rdds):
     """r7 advice: every global_ntile call eagerly pins its ranked
     relation and DataFrame.unpersist() is a no-op on a localCheckpoint
-    handle — release_global_ntile must free the recorded internal-RDD
-    blocks once the caller is done, and be idempotent."""
-    from promi_spark.operators.scale import (
-        _persistent_rdd_ids,
-        global_ntile,
-        release_global_ntile,
-    )
+    handle — the scope must free the checkpoint's internal-RDD blocks
+    when it exits, after the caller is done with the result."""
+    from promi_spark.lifetime import scope
+    from promi_spark.operators.scale import global_ntile
 
     df = spark.range(5000).withColumn(
         "v", F.pmod(F.col("id") * 37, F.lit(500))
     )
-    before = _persistent_rdd_ids(spark)
-    out = global_ntile(df, 8, [F.col("v"), F.col("id")], "b")
-    assert out.rank_cache_ids  # checkpoint recorded
-    assert out.rank_cache_ids <= _persistent_rdd_ids(spark) - before
-    assert out.count() == 5000  # fully consume first
-    release_global_ntile(out)
-    leftover = _persistent_rdd_ids(spark) - before
+    before = pinned_rdds()
+    with scope():
+        out = global_ntile(df, 8, [F.col("v"), F.col("id")], "b")
+        assert len(pinned_rdds() - before) == 1  # checkpoint pinned
+        assert out.count() == 5000  # fully consume first
+    leftover = pinned_rdds() - before
     assert not leftover, f"checkpoint blocks survived release: {leftover}"
-    assert out.rank_cache_ids == set()  # handle cleared
-    release_global_ntile(out)  # idempotent no-op
 
 
-def test_checkpoint_ids_read_off_the_plan_not_a_global_diff(spark):
+def test_checkpoint_ids_read_off_the_plan_not_a_global_diff(spark, pinned_rdds):
     """r8 advice: checkpoint ownership used to be attributed by diffing
     getPersistentRDDs before/after — any RDD persisted CONCURRENTLY in
-    that window was claimed by this call, and release_global_ntile
-    would then unpersist an unrelated cache. The ids now come directly
-    off the checkpointed DataFrame's own LogicalRDD: an unrelated
-    persist landing between the checkpoint and the read is never
-    claimed, and release leaves it untouched."""
-    from promi_spark.operators.scale import (
-        _checkpoint_rdd_ids,
-        _persistent_rdd_ids,
-        global_ntile,
-        release_global_ntile,
-    )
+    that window was claimed by this call, and the release would then
+    unpersist an unrelated cache. The id now comes directly off the
+    checkpointed DataFrame's own LogicalRDD: an unrelated persist
+    landing between the checkpoint and the read is never claimed, and
+    the scope's release leaves it untouched."""
+    from promi_spark.lifetime import _checkpoint_rdd_id, release, scope
+    from promi_spark.operators.scale import global_ntile
 
     d = (
         spark.range(500)
@@ -399,27 +392,27 @@ def test_checkpoint_ids_read_off_the_plan_not_a_global_diff(spark):
     # have swallowed it; the plan read must not
     bystander = spark.range(100).persist()
     bystander.count()
-    ids = _checkpoint_rdd_ids(d)
-    assert len(ids) == 1
-    byst_ids = _persistent_rdd_ids(spark) - ids
+    rid = _checkpoint_rdd_id(d)
+    assert rid is not None
+    byst_ids = pinned_rdds() - {rid}
     assert byst_ids, "bystander cache should be pinned"
-    assert ids.isdisjoint(byst_ids)
-    d.unpersist()
+    assert rid not in byst_ids
+    release(d)
 
-    # end-to-end: release_global_ntile with a bystander persisted mid-
-    # flight frees ONLY its own checkpoint blocks
-    out = global_ntile(
-        spark.range(3000).withColumn("v", F.pmod(F.col("id") * 13, F.lit(97))),
-        6,
-        [F.col("v"), F.col("id")],
-        "b",
-    )
-    assert len(out.rank_cache_ids) == 1
-    assert out.rank_cache_ids.isdisjoint(byst_ids)
-    assert out.count() == 3000
-    release_global_ntile(out)
-    after = _persistent_rdd_ids(spark)
-    assert out.rank_cache_ids == set()
+    # end-to-end: a scope exiting with a bystander persisted mid-flight
+    # frees ONLY its own checkpoint blocks
+    before = pinned_rdds()
+    with scope():
+        out = global_ntile(
+            spark.range(3000).withColumn("v", F.pmod(F.col("id") * 13, F.lit(97))),
+            6,
+            [F.col("v"), F.col("id")],
+            "b",
+        )
+        assert len(pinned_rdds() - before) == 1
+        assert out.count() == 3000
+    after = pinned_rdds()
+    assert after == before
     assert byst_ids <= after, "release must not touch unrelated caches"
     bystander.unpersist()
 

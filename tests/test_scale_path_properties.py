@@ -73,6 +73,7 @@ def test_stars_components_match_union_find_model(spark, edges):
     edge list (component = min reachable id; self-pairs carry no
     connectivity). Random small graphs hit multi-component shapes,
     cycles, repeated edges, and both edge orientations."""
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import dedup_components_stars
 
     effective = [(a, b) for a, b in edges if a != b]
@@ -80,9 +81,9 @@ def test_stars_components_match_union_find_model(spark, edges):
         return  # only self-pairs: operator contract drops them all
     model = _union_find_components(effective)
     df = spark.createDataFrame(edges, "a long, b long")
-    out = dedup_components_stars(df)
-    got = {r["doc_id"]: r["component"] for r in out.collect()}
-    out.nodes_cache.unpersist()
+    with scope():
+        out = dedup_components_stars(df)
+        got = {r["doc_id"]: r["component"] for r in out.collect()}
     assert got == model
 
 
@@ -93,6 +94,7 @@ def test_dedup_keep_best_keeps_highest_quality_member(spark):
     where the min-key rule and the best-quality rule disagree."""
     from pyspark.sql import functions as F
 
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import dedup_keep_best
 
     docs = spark.createDataFrame(
@@ -110,17 +112,16 @@ def test_dedup_keep_best_keeps_highest_quality_member(spark):
         [(1, 2, 1.0), (2, 3, 1.0), (10, 11, 1.0)],
         "a long, b long, jaccard_sim double",
     )
-    out = dedup_keep_best(docs, pairs, "quality")
-    assert out.columns == docs.columns
-    assert {r["doc_id"] for r in out.collect()} == {2, 10, 20}
-    out.labels_cache.unpersist()
-    # custom key column name flows through
-    out2 = dedup_keep_best(
-        docs.withColumnRenamed("doc_id", "k"),
-        pairs, F.col("quality"), key_col="k",
-    )
-    assert {r["k"] for r in out2.collect()} == {2, 10, 20}
-    out2.labels_cache.unpersist()
+    with scope():
+        out = dedup_keep_best(docs, pairs, "quality")
+        assert out.columns == docs.columns
+        assert {r["doc_id"] for r in out.collect()} == {2, 10, 20}
+        # custom key column name flows through
+        out2 = dedup_keep_best(
+            docs.withColumnRenamed("doc_id", "k"),
+            pairs, F.col("quality"), key_col="k",
+        )
+        assert {r["k"] for r in out2.collect()} == {2, 10, 20}
 
 
 def test_dedup_keep_best_nullable_quality_nulls_last(spark):
@@ -128,6 +129,7 @@ def test_dedup_keep_best_nullable_quality_nulls_last(spark):
     doc never beats a scored one, and an all-null component falls back
     to the lowest key — the same order dedup_keep_best_sql's
     DESC NULLS LAST replays."""
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import dedup_keep_best
 
     docs = spark.createDataFrame(
@@ -143,9 +145,9 @@ def test_dedup_keep_best_nullable_quality_nulls_last(spark):
     pairs = spark.createDataFrame(
         [(1, 2, 1.0), (10, 11, 1.0)], "a long, b long, jaccard_sim double"
     )
-    out = dedup_keep_best(docs, pairs, "quality")
-    assert {r["doc_id"] for r in out.collect()} == {2, 10}
-    out.labels_cache.unpersist()
+    with scope():
+        out = dedup_keep_best(docs, pairs, "quality")
+        assert {r["doc_id"] for r in out.collect()} == {2, 10}
 
 
 def test_dedup_keep_best_bad_quality_fails_before_persist(spark):

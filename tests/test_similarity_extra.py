@@ -174,8 +174,8 @@ def test_semantic_dedup_gram_kernel_matches_join_verify(spark, sf_dir):
 
     # multi-block kernel path (3-row blocks) is value-identical too
     orig = S._cluster_gram_pairs
-    S._cluster_gram_pairs = lambda idf, dim, thr, block_bytes=0: orig(
-        idf, dim, thr, block_bytes=8 * len(rows) * 3
+    S._cluster_gram_pairs = lambda idf, thr, block_bytes=0: orig(
+        idf, thr, block_bytes=8 * len(rows) * 3
     )
     try:
         blocked = run(df, threshold=0.0)

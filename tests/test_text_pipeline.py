@@ -144,6 +144,7 @@ def test_dedup_components_stars_matches_label_propagation(spark):
     cycle; and the star variant converges in O(log n) rounds on a
     path graph where label propagation needs O(diameter) — path of
     diameter 200 must stabilize in <= 12 large+small rounds."""
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import (
         dedup_components,
         dedup_components_stars,
@@ -154,25 +155,22 @@ def test_dedup_components_stars_matches_label_propagation(spark):
          (21, 22), (22, 20)],
         "a long, b long",
     )
-    lp = dedup_components(mixed)
-    st = dedup_components_stars(mixed)
-    got_lp = {r["doc_id"]: r["component"] for r in lp.collect()}
-    got_st = {r["doc_id"]: r["component"] for r in st.collect()}
+    with scope():
+        lp = dedup_components(mixed)
+        st = dedup_components_stars(mixed)
+        got_lp = {r["doc_id"]: r["component"] for r in lp.collect()}
+        got_st = {r["doc_id"]: r["component"] for r in st.collect()}
     assert got_lp == got_st
     assert got_st[22] == 20 and got_st[8] == 5 and got_st[3] == 1
-    lp.labels_cache.unpersist()
-    st.labels_cache.unpersist()
-    st.nodes_cache.unpersist()
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "a long, b long"
     )
-    out = dedup_components_stars(chain, max_iter=15)
-    got = {r["doc_id"]: r["component"] for r in out.collect()}
+    with scope():
+        out = dedup_components_stars(chain, max_iter=15)
+        got = {r["doc_id"]: r["component"] for r in out.collect()}
     assert got == {i: 0 for i in range(201)}
     assert out.n_rounds <= 12, out.n_rounds
-    out.labels_cache.unpersist()
-    out.nodes_cache.unpersist()
 
 
 def test_bigram_lm_scores_rank_noise_below_fluent(spark):
@@ -210,6 +208,7 @@ def test_incremental_dedup_composes_with_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from promi_spark.io import load_table
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import (
         minhash_dedup,
         minhash_dedup_incremental,
@@ -222,14 +221,15 @@ def test_incremental_dedup_composes_with_batch(spark, tmp_path):
     path = str(tmp_path / "mh_index")
     write_minhash_index(old, path)
 
-    full = {
-        (r["a"], r["b"]): r["jaccard_sim"]
-        for r in minhash_dedup(docs, threshold=0.5, cache=False).collect()
-    }
-    old_only = {
-        (r["a"], r["b"]): r["jaccard_sim"]
-        for r in minhash_dedup(old, threshold=0.5, cache=False).collect()
-    }
+    with scope():
+        full = {
+            (r["a"], r["b"]): r["jaccard_sim"]
+            for r in minhash_dedup(docs, threshold=0.5).collect()
+        }
+        old_only = {
+            (r["a"], r["b"]): r["jaccard_sim"]
+            for r in minhash_dedup(old, threshold=0.5).collect()
+        }
     inc = {
         (r["a"], r["b"]): r["jaccard_sim"]
         for r in minhash_dedup_incremental(
@@ -263,7 +263,11 @@ def test_dedup_components_nonconvergence_releases_cache(spark):
     the session."""
     import pytest
 
-    from promi_spark.operators.dedup import dedup_components
+    from promi_spark.lifetime import scope
+    from promi_spark.operators.dedup import (
+        dedup_components,
+        dedup_components_stars,
+    )
 
     spark.catalog.clearCache()
     # a 6-node chain needs ~5 label-propagation rounds; max_iter=2 fails
@@ -272,6 +276,16 @@ def test_dedup_components_nonconvergence_releases_cache(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_components(chain, max_iter=2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    # the stars sibling frees its last round's checkpoint itself (round
+    # state is not registered), the scope the rest
+    jsc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in jsc.getRDDStorageInfo()}
+    with pytest.raises(RuntimeError, match="not stable"):
+        with scope():
+            dedup_components_stars(chain, max_iter=1)
+    assert {i.id() for i in jsc.getRDDStorageInfo()} == before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -530,10 +544,10 @@ def test_dedup_components_releases_checkpoint_storage(spark):
     """r15 (r14 ADVICE): the loop's checkpoint leaves — sym's full pair
     graph above all — are released EXPLICITLY when the loop ends, not
     left to driver GC + ContextCleaner timing. After a run the only
-    surviving storage entry is the documented final-labels handle, and
-    ``_release_checkpoint`` frees that too."""
+    surviving storage entry is the final-labels checkpoint, and the
+    scope's exit frees that too."""
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import (
-        _release_checkpoint,
         dedup_components,
         dedup_components_stars,
     )
@@ -547,23 +561,24 @@ def test_dedup_components_releases_checkpoint_storage(spark):
         [(1, 2), (2, 3), (5, 6), (6, 7), (7, 8)], "a long, b long"
     )
     base = stored()
-    out = dedup_components(pairs)
-    got = {r["doc_id"]: r["component"] for r in out.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 5, 8: 5}
-    leaked = stored() - base
-    assert len(leaked) <= 1, leaked  # only the final labels checkpoint
-    _release_checkpoint(out.labels_cache)
+    with scope():
+        out = dedup_components(pairs)
+        got = {r["doc_id"]: r["component"] for r in out.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 5, 8: 5}
+        leaked = stored() - base
+        assert len(leaked) <= 1, leaked  # only the final labels checkpoint
     assert stored() - base == set()
 
     # the stars sibling: superseded round checkpoints are released as
-    # the loop advances; only the final edges + nodes handles survive
-    out2 = dedup_components_stars(pairs)
-    got2 = {r["doc_id"]: r["component"] for r in out2.collect()}
-    assert got2 == got
-    leaked2 = stored() - base
-    assert len(leaked2) <= 3, leaked2  # final edges, round-0 edges, nodes
-    out2.nodes_cache.unpersist()
-    _release_checkpoint(out2.labels_cache)
+    # the loop advances; only the final edges, the round-0 edges and
+    # the nodes survive until the scope exits
+    with scope():
+        out2 = dedup_components_stars(pairs)
+        got2 = {r["doc_id"]: r["component"] for r in out2.collect()}
+        assert got2 == got
+        leaked2 = stored() - base
+        assert len(leaked2) <= 3, leaked2
+    assert stored() - base == set()
 
 
 def test_dedup_components_high_diameter_bounded_plan(spark):
@@ -576,6 +591,7 @@ def test_dedup_components_high_diameter_bounded_plan(spark):
     hardened r14 — the final labels are now localCheckpoint-ed, so the
     returned plan must be a LogicalRDD leaf with ZERO joins regardless
     of graph diameter)."""
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import dedup_components
 
     # NOTE: the un-checkpointed control arm is deliberately NOT run
@@ -588,12 +604,11 @@ def test_dedup_components_high_diameter_bounded_plan(spark):
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(n - 1)], "a long, b long"
         )
-        out = dedup_components(pairs, max_iter=30, checkpoint_every=5)
-        got = {r["doc_id"]: r["component"] for r in out.collect()}
-        assert got == {i: 0 for i in range(n)}, tag
-        plan = out._jdf.queryExecution().optimizedPlan().toString()
-        out.labels_cache.unpersist()
-        return plan
+        with scope():
+            out = dedup_components(pairs, max_iter=30, checkpoint_every=5)
+            got = {r["doc_id"]: r["component"] for r in out.collect()}
+            assert got == {i: 0 for i in range(n)}, tag
+            return out._jdf.queryExecution().optimizedPlan().toString()
 
     # path 0-1-...-16: min-label propagation needs ~16 rounds — three
     # checkpoint windows deep, which already exercises the truncation
@@ -608,22 +623,21 @@ def test_dedup_components_high_diameter_bounded_plan(spark):
         assert "Join" not in plan, (tag, plan)
 
 
-def test_incremental_dedup_exposes_and_releases_all_caches(spark, tmp_path):
+def test_incremental_dedup_scope_releases_all_caches(spark, tmp_path, pinned_rdds):
     """r8 advice (medium): with include_new_pairs=True and cache=True
     the within-batch candidate generator persists a signature-class
-    tagging relation that had NO release handle — a long-lived ingest
-    session pinned one more relation per batch until clearCache. The
-    result must now carry BOTH handles (gram_cache + sig_cache),
-    releasing them must leave the block manager where it started, and
+    tagging relation next to the batch's gram rows — a long-lived
+    ingest session pinned one more relation per batch until clearCache.
+    Both must be pinned while the scope is open and gone when it exits;
     cache=False must pin nothing."""
     from pyspark.sql import functions as F
 
     from promi_spark.io import load_table
+    from promi_spark.lifetime import scope
     from promi_spark.operators.dedup import (
         minhash_dedup_incremental,
         write_minhash_index,
     )
-    from promi_spark.operators.scale import _persistent_rdd_ids
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
     old = docs.filter(F.col("doc_id") % 5 != 0)
@@ -632,30 +646,18 @@ def test_incremental_dedup_exposes_and_releases_all_caches(spark, tmp_path):
     write_minhash_index(old, path)
 
     spark.catalog.clearCache()
-    base = _persistent_rdd_ids(spark)
+    base = pinned_rdds()
+    for include_new_pairs, n_pinned in ((True, 2), (False, 1)):
+        with scope():
+            pairs = minhash_dedup_incremental(
+                new, path, threshold=0.5, include_new_pairs=include_new_pairs
+            )
+            pairs.count()  # materialize
+            assert len(pinned_rdds() - base) == n_pinned
+        leaked = pinned_rdds() - base
+        assert not leaked, f"persisted relations survived the scope: {leaked}"
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
-    pairs = minhash_dedup_incremental(new, path, threshold=0.5)
-    assert pairs.gram_cache is not None
-    assert pairs.sig_cache is not None
-    pairs.count()  # materialize (pins both relations)
-    assert _persistent_rdd_ids(spark) - base, "caches should be pinned"
-    pairs.gram_cache.unpersist()
-    pairs.sig_cache.unpersist()
-    leaked = _persistent_rdd_ids(spark) - base
-    assert not leaked, f"persisted relations survived release: {leaked}"
-
-    # probe-only path: no within-batch tagging exists to expose
-    probe_only = minhash_dedup_incremental(
-        new, path, threshold=0.5, include_new_pairs=False
-    )
-    assert probe_only.sig_cache is None
-    assert probe_only.gram_cache is not None
-    probe_only.gram_cache.unpersist()
-
-    # cache=False pins nothing and exposes nothing
-    spark.catalog.clearCache()
-    base = _persistent_rdd_ids(spark)
     nocache = minhash_dedup_incremental(new, path, threshold=0.5, cache=False)
     nocache.count()
-    assert nocache.gram_cache is None and nocache.sig_cache is None
-    assert not (_persistent_rdd_ids(spark) - base)
+    assert not (pinned_rdds() - base)

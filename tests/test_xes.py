@@ -10,7 +10,8 @@ import pytest
 
 CORPUS = "/root/reference/static/xes"
 
-pytestmark = pytest.mark.skipif(
+# only the tests that read the corpus are gated on it
+needs_corpus = pytest.mark.skipif(
     not os.path.isdir(CORPUS), reason="reference corpus not available"
 )
 
@@ -35,6 +36,7 @@ def golden_logs(spark):
     }
 
 
+@needs_corpus
 @pytest.mark.parametrize("name", list(GOLDEN))
 def test_golden_counts(golden_logs, name):
     from promi_spark.io.xes import log_counts
@@ -42,6 +44,7 @@ def test_golden_counts(golden_logs, name):
     assert log_counts(golden_logs[name]) == GOLDEN[name]
 
 
+@needs_corpus
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(f"{CORPUS}/correct/*.xes"))
 )
@@ -51,6 +54,7 @@ def test_correct_corpus_parses(path):
     parse_xes(path)  # must not raise
 
 
+@needs_corpus
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(f"{CORPUS}/recoverable/*.xes"))
 )
@@ -60,6 +64,7 @@ def test_recoverable_corpus_parses(path):
     parse_xes(path)  # must not raise (reference xes.rs:899-903)
 
 
+@needs_corpus
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(f"{CORPUS}/non_parsing/*.xes"))
 )
@@ -70,6 +75,7 @@ def test_non_parsing_corpus_fails(path):
         parse_xes(path)
 
 
+@needs_corpus
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(f"{CORPUS}/non_validating/*.xes"))
 )
@@ -79,6 +85,7 @@ def test_non_validating_corpus_parses(path):
     parse_xes(path)  # parses fine; only validation rejects these
 
 
+@needs_corpus
 @pytest.mark.parametrize("name", ["L1.xes", "L3.xes", "L5.xes"])
 def test_round_trip_convergence(spark, tmp_path, name, golden_logs):
     """write(read(f)) then write(read(that)) must be byte-identical
@@ -96,6 +103,7 @@ def test_round_trip_convergence(spark, tmp_path, name, golden_logs):
         assert a.read() == b.read()
 
 
+@needs_corpus
 def test_meta_round_trip(spark, tmp_path, golden_logs):
     from promi_spark.io.xes import read_xes, write_xes
 
@@ -114,6 +122,7 @@ def test_meta_round_trip(spark, tmp_path, golden_logs):
     assert len(meta2.globals) == len(log.meta.globals)
 
 
+@needs_corpus
 def test_distributed_reader_matches(spark):
     from promi_spark.io.xes import log_counts, read_xes_distributed
 
@@ -147,6 +156,7 @@ def test_standalone_events_and_empty_trace(spark, tmp_path):
     assert log_counts(read_xes(spark, out)) == (2, 1, 2)
 
 
+@needs_corpus
 def test_list_and_nested_attributes_round_trip(spark, tmp_path):
     from promi_spark.io.xes import parse_xes, read_xes, write_xes
 
@@ -179,6 +189,7 @@ def _xmllint_valid(path: str) -> tuple[bool, str]:
     return r.returncode == 0, r.stderr
 
 
+@needs_corpus
 @pytest.mark.parametrize(
     "path", sorted(glob.glob(f"{CORPUS}/correct/*.xes"))
 )
@@ -194,6 +205,7 @@ def test_writer_output_is_schema_valid(spark, tmp_path, path):
     assert ok, f"writer output fails XSD for {os.path.basename(path)}:\n{err}"
 
 
+@needs_corpus
 @pytest.mark.parametrize("name", ["L1.xes", "L4.xes"])
 def test_writer_output_book_logs_schema_valid(spark, tmp_path, name, golden_logs):
     from promi_spark.io.xes import write_xes
@@ -258,6 +270,7 @@ def test_distributed_reader_unnamed_traces_and_no_ts(spark, tmp_path):
     assert all(r["ts"] is None for r in rows)
 
 
+@needs_corpus
 def test_distributed_writer_matches_driver_writer(spark, tmp_path):
     """write_xes_distributed streams partition-rendered fragments; its
     output must be byte-identical to the driver-side writer for the
@@ -287,6 +300,7 @@ def test_distributed_writer_on_parquet_log(spark, tmp_path):
         assert a.read() == b.read()
 
 
+@needs_corpus
 @pytest.mark.parametrize(
     "name", ["L1.xes", "L2.xes", "L3.xes", "L4.xes", "L5.xes", "L11.xes"]
 )
@@ -340,6 +354,7 @@ def test_writers_agree_on_null_seq_attr_marker(spark, tmp_path):
     assert "acme" in d and "WRONG" not in d
 
 
+@needs_corpus
 def test_distributed_reader_multifile_and_gzip(spark, tmp_path):
     """Directory / glob / .xes.gz ingest (the realistic corpus layout;
     the reference parses single plain files only — xes.rs:812-823):

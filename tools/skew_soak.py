@@ -270,6 +270,7 @@ def boiler_special(budget: float) -> dict:
     """
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "16g")
     from promi_spark.io import load_table
+    from promi_spark.lifetime import scope
     from promi_spark.operators import dedup
     from promi_spark.session import get_spark
     from pyspark.sql import functions as F
@@ -326,16 +327,16 @@ def boiler_special(budget: float) -> dict:
 
     # cluster-then-keep: the production answer to a mega-cluster — one
     # survivor per near-dup component instead of 2.5e7 pairs downstream
-    t0 = time.time()
-    pairs = dedup.minhash_dedup(docs, threshold=0.5)
-    kept = dedup.dedup_keep_best(docs, pairs, "n_chars")
-    n_kept = kept.count()
-    out["cluster_then_keep"] = {
-        "survivors": n_kept,
-        "dropped": out["signature_classes"]["n_docs"] - n_kept,
-        "sec": round(time.time() - t0, 1),
-    }
-    kept.labels_cache.unpersist()
+    with scope():
+        t0 = time.time()
+        pairs = dedup.minhash_dedup(docs, threshold=0.5)
+        kept = dedup.dedup_keep_best(docs, pairs, "n_chars")
+        n_kept = kept.count()
+        out["cluster_then_keep"] = {
+            "survivors": n_kept,
+            "dropped": out["signature_classes"]["n_docs"] - n_kept,
+            "sec": round(time.time() - t0, 1),
+        }
     spark.catalog.clearCache()
     return out
 
