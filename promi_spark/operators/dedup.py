@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from promi_spark.io import read_parquet
-from promi_spark.lifetime import checkpoint, own, persist, release
+from promi_spark.lifetime import own, persist, release
 from promi_spark.operators.text import tokens
 
 
@@ -67,29 +67,6 @@ def dedup_exact(
 # ---------------------------------------------------------------------------
 # Shingles + MinHash + LSH banding
 # ---------------------------------------------------------------------------
-
-
-def shingle_arrays(
-    df: DataFrame, key_col: str = "doc_id", text_col: str = "text", n: int = 3
-) -> DataFrame:
-    """(k, sh): distinct word n-gram shingles per document.
-
-    Two-step projection on purpose: ``toks`` is materialized as its own
-    column first and referenced several times by the shingle expression,
-    so CollapseProject keeps the boundary and the regex tokenization
-    runs once per row (not once per shingle).
-    """
-    toks_df = df.select(
-        F.col(key_col).alias("k"), tokens(_norm(text_col)).alias("toks")
-    )
-    toks = F.col("toks")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    sh = F.array_distinct(
-        F.when(F.size(toks) < n, F.array(F.array_join(toks, " "))).otherwise(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-        )
-    )
-    return toks_df.select("k", sh.alias("sh"))
 
 
 _MAX = 2147483647
@@ -195,18 +172,18 @@ def _sigs_from_rows(rows: DataFrame, num_hashes: int) -> DataFrame:
     return rows.groupBy("k").agg(_sig_agg_expr(num_hashes))
 
 
-def band_buckets(
-    sig_col: Column | str, num_hashes: int, bands: int
-) -> Column:
+def band_buckets(sig_col: str, num_hashes: int, bands: int) -> Column:
     """Array of ``bands`` bucket ids: xxhash64 over (band index, the
     band's signature slice). Cheap — operates on a materialized
     64-element array attribute, never on an expression subtree. Built
     as ONE parsed expression (the transform/lambda Column form cost
-    ~80 py4j round trips per issue); accepts the signature column as a
-    Column only when it is a plain attribute reference (its SQL is its
-    name) — callers pass ``"sig"``."""
-    name = sig_col if isinstance(sig_col, str) else sig_col._jc.toString()
-    return F.expr(_band_buckets_sql(name, num_hashes, bands))
+    ~80 py4j round trips per issue), so the signature column is named,
+    not passed as a Column: ``sig_col`` must be a plain identifier."""
+    if not (isinstance(sig_col, str) and sig_col.isidentifier()):
+        raise ValueError(
+            f"band_buckets needs a plain column name, got {sig_col!r}"
+        )
+    return F.expr(_band_buckets_sql(sig_col, num_hashes, bands))
 
 
 def _band_buckets_sql(name: str, num_hashes: int, bands: int) -> str:
@@ -316,7 +293,7 @@ def _banded_pairs(
     """
     return _collapsed_banded_pairs(
         tagged,
-        lambda s: band_buckets(s, num_hashes, bands),
+        lambda _sig: band_buckets("sig", num_hashes, bands),
         max_bucket_size,
     )
 
@@ -377,35 +354,23 @@ def _collapsed_banded_pairs(
     return within.unionByName(cross)
 
 
-def jaccard(a_shingles: Column | str, b_shingles: Column | str) -> Column:
-    """Exact Jaccard over shingle arrays (verification step). One
-    parsed expression when both sides are plain attribute references
-    (the Column form cost ~90 py4j round trips per issue — paid once
-    per verify join across the minhash family); falls back to the
-    Column build for computed arguments."""
-    if not isinstance(a_shingles, (str, Column)):
-        raise TypeError("jaccard: pass Columns or column names")
-    a_sql = (
-        a_shingles
-        if isinstance(a_shingles, str)
-        else a_shingles._jc.toString()
+def jaccard(a_shingles: str, b_shingles: str) -> Column:
+    """Exact Jaccard over two shingle-array columns (verification
+    step). Built as ONE parsed expression (the Column form cost ~90
+    py4j round trips per issue — paid once per verify join across the
+    minhash family), so both columns are named, not passed as Columns:
+    each must be a plain identifier."""
+    for name in (a_shingles, b_shingles):
+        if not (isinstance(name, str) and name.isidentifier()):
+            raise ValueError(
+                f"jaccard needs plain column names, got {name!r}"
+            )
+    a, b = a_shingles, b_shingles
+    return F.expr(
+        f"CASE WHEN size(array_union({a}, {b})) = 0 THEN 0.0D "
+        f"ELSE CAST(size(array_intersect({a}, {b})) AS DOUBLE) "
+        f"/ size(array_union({a}, {b})) END"
     )
-    b_sql = (
-        b_shingles
-        if isinstance(b_shingles, str)
-        else b_shingles._jc.toString()
-    )
-    if a_sql.isidentifier() and b_sql.isidentifier():
-        return F.expr(
-            f"CASE WHEN size(array_union({a_sql}, {b_sql})) = 0 THEN 0.0D "
-            f"ELSE CAST(size(array_intersect({a_sql}, {b_sql})) AS DOUBLE) "
-            f"/ size(array_union({a_sql}, {b_sql})) END"
-        )
-    a_c = F.col(a_shingles) if isinstance(a_shingles, str) else a_shingles
-    b_c = F.col(b_shingles) if isinstance(b_shingles, str) else b_shingles
-    inter = F.size(F.array_intersect(a_c, b_c))
-    union = F.size(F.array_union(a_c, b_c))
-    return F.when(union == 0, F.lit(0.0)).otherwise(inter.cast("double") / union)
 
 
 def minhash_dedup(
@@ -601,7 +566,7 @@ def minhash_dedup_incremental(
         return sigs.select(
             "k",
             F.posexplode(
-                band_buckets(F.col("sig"), num_hashes, bands)
+                band_buckets("sig", num_hashes, bands)
             ).alias("band", "bucket"),
         )
 
@@ -689,212 +654,66 @@ def minhash_dedup_incremental(
     return verified
 
 
-def dedup_components(
-    pairs: DataFrame, max_iter: int = 30, checkpoint_every: int = 5
-) -> DataFrame:
+def dedup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     """(doc_id, component): connected components of the near-dup pair
     graph — the canonical clustering step after pair generation in a
     production dedup pipeline (keep ``min(doc_id)`` per component, drop
     the rest). ``component`` is the smallest doc id reachable from the
-    node.
+    node; only paired nodes appear. Keys keep their input type (any
+    orderable type works — ids may be strings/UUIDs). Degenerate
+    self-pairs (a == b) carry no connectivity and are dropped: a node
+    paired only with itself does not appear. No caller can tell —
+    :func:`minhash_dedup` emits ``a < b``, and every consumer either
+    anti-joins the labels or ``coalesce``-s a missing component to the
+    node's own key.
 
-    Iterative min-label propagation over the symmetric edge list: each
-    round joins labels to neighbors, takes the per-node min, and stops
-    when no label changed — O(graph diameter) rounds, and near-dup
-    clusters are shallow (most are stars around one canonical doc), so
-    this converges in 2-3 rounds in practice. Each round is one
-    shuffle join + one map-side-combined min aggregation; round state
-    is (id, label) pairs only, so it stays tiny regardless of corpus
-    size. Keys keep their input type (any orderable type works — ids
-    may be strings/UUIDs). At extreme graph scale swap in
-    large-star/small-star (Kiveris et al.) — the round structure below
-    is the small-star half.
-
-    Raises ``RuntimeError`` if the graph has not converged after
-    ``max_iter`` rounds (diameter > max_iter) instead of returning
-    silently-wrong intermediate labels. The final label relation is
-    handed out as an eager ``localCheckpoint`` leaf (rows were already
-    materialized by the convergence check); relation lifetime: README
-    "Relation lifetime". Round state is released as the loop advances,
-    and on the error path.
-
-    Every ``checkpoint_every`` rounds the label relation is
-    ``localCheckpoint``-ed: although each round's inputs are persisted,
-    the LOGICAL plan still nests the previous round's join, so a
-    high-diameter graph (a long chain of near-dups) would otherwise
-    build an O(diameter)-deep lineage with a superlinear planning tail
-    near ``max_iter``. The checkpoint truncates lineage to the
-    materialized label rows; plan depth stays O(checkpoint_every)
-    regardless of diameter. (On a real cluster prefer
-    ``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()`` if
-    executor loss during the loop matters; localCheckpoint trades that
-    fault-tolerance for zero-copy speed, the right call for an
-    interactive dedup pass.)
-    """
-    edges = pairs.select("a", "b")
-    # eager localCheckpoint, not a bare persist: every round's nbr join
-    # references sym, and each round's labels nest the previous round's
-    # plan twice, so with sym as a live pipeline the round-r analysis
-    # re-walks ~2^r copies of the whole upstream pair generation
-    # (minhash tokenize/band/verify). As a checkpointed leaf the loop's
-    # plans stay KB-sized regardless of the pair source (the rows were
-    # going to be materialized by round 1's action anyway; same
-    # fault-tolerance trade as dedup_components_stars' edge list).
-    sym = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .persist()
-    )
-    n_rounds = 0
-    converged = False
-    try:
-        for _ in range(max_iter):
-            n_rounds += 1
-            nbr = (
-                sym.join(
-                    labels.withColumnsRenamed({"id": "b", "comp": "nbr_comp"}),
-                    "b",
-                )
-                .groupBy("a")
-                .agg(F.min("nbr_comp").alias("nbr_min"))
-                .withColumnRenamed("a", "id")
-            )
-            new_labels = (
-                labels.join(nbr, "id", "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("comp"), F.coalesce("nbr_min", F.col("comp"))
-                    ).alias("comp"),
-                )
-                .persist()
-            )
-            try:
-                changed = (
-                    new_labels.alias("n")
-                    .join(labels.alias("o"), "id")
-                    .filter(F.col("n.comp") != F.col("o.comp"))
-                    .count()
-                )
-            except BaseException:
-                # the action failed mid-round: new_labels would escape
-                # the `labels` rotation below and stay pinned forever
-                new_labels.unpersist()
-                raise
-            # right after a checkpoint rotation the outgoing `labels`
-            # is a localCheckpoint leaf: release frees its blocks (the
-            # new round's labels are already materialized)
-            release(labels)
-            labels = new_labels
-            if changed == 0:
-                converged = True
-                break
-            if checkpoint_every and n_rounds % checkpoint_every == 0:
-                # truncate the round-over-round join lineage (see
-                # docstring); eager so the persisted new_labels can be
-                # released immediately after.
-                cp = labels.localCheckpoint(eager=True)
-                labels.unpersist()
-                labels = cp
-        if not converged:
-            raise RuntimeError(
-                f"dedup_components did not converge in {max_iter} rounds "
-                "(pair-graph diameter exceeds max_iter); raise max_iter"
-            )
-    finally:
-        # sym's checkpoint blocks (the full symmetric pair graph — the
-        # LARGEST relation this loop pins) are released explicitly the
-        # moment the loop is over (r14 ADVICE: GC + ContextCleaner
-        # timing could otherwise hold them for the life of a long
-        # session); on the failure path the current round's labels must
-        # not stay pinned either
-        release(sym)
-        if not converged:
-            release(labels)
-    # Truncate the final lineage before handing the labels out: the
-    # round-over-round plan references the previous round's labels
-    # TWICE per round (the nbr join and the left join), so the
-    # RETURNED relation's logical plan grows ~2^rounds copies of the
-    # upstream pair-generation pipeline — measured 5.4 MB of formatted
-    # plan after 3 rounds on the minhash pair graph, and every
-    # downstream consumer (keep-best window, split join, the caller's
-    # own action) re-pays Catalyst analysis of all of it. The rows are
-    # already materialized by the convergence check, so the eager
-    # localCheckpoint is a cache-to-checkpoint copy of the (tiny)
-    # label relation and the handed-out plan is a leaf.
-    final = checkpoint(labels)
-    labels.unpersist()
-    out = final.select(
-        F.col("id").alias("doc_id"), F.col("comp").alias("component")
-    )
-    out.n_rounds = n_rounds  # label-propagation rounds to convergence
-    return out
-
-
-def dedup_components_stars(
-    pairs: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """(doc_id, component): connected components via alternating
-    large-star / small-star edge rewriting (Kiveris et al. 2014,
-    "Connected Components in MapReduce and Beyond" — public
-    formulation). Same output contract as :func:`dedup_components`
-    (``component`` = smallest reachable doc id; only paired nodes
-    appear — degenerate self-pairs (a == b) carry no connectivity and
-    are dropped entirely), different round complexity: O(log n)
-    rounds instead of
-    O(graph diameter), which is the right trade on adversarial
-    pair graphs — a chain of 10^6 chained near-dups converges in ~20
-    star rounds where min-label propagation needs 10^6. For the
-    shallow star-shaped clusters real near-dup graphs produce,
-    :func:`dedup_components` converges in 2-3 cheaper rounds — keep it
-    as the default and reach for this on high-diameter graphs.
+    Alternating large-star / small-star edge rewriting (Kiveris et al.
+    2014, "Connected Components in MapReduce and Beyond" — public
+    formulation): O(log n) rounds whatever the graph's diameter, so a
+    long chain of near-dups converges about as fast as the shallow
+    star-shaped clusters real corpora produce.
 
     Round shape: edges live canonically as (u, v) with u > v.
     Large-star connects every neighbor LARGER than a node to the min
     of its neighborhood (one symmetric groupBy + join); small-star
     connects each node and its smaller neighbors to the neighborhood
     min (one groupBy + join on the canonical list). Both strictly
-    shrink the component's potential and preserve connectivity; at the
-    fixed point the edge set is a union of stars centered on each
-    component's minimum. State per round is the edge list itself —
-    bounded by the input pair count, shuffled on node keys, AQE
-    splitting skew (a giant component's center is by construction a
-    hot key; the star rewrite is exactly the transformation that keeps
-    its degree bounded per round). Lineage is truncated with an EAGER
-    ``localCheckpoint`` of the input edge list and of EVERY round's
-    output — structural here, not the periodic optimization it is in
-    :func:`dedup_components`: each star operation references its input
-    relation several times (the symmetric union, the min join), so an
-    un-truncated plan grows EXPONENTIALLY in rounds — ~6^r copies of
-    the upstream pair-generation pipeline — and Catalyst plan
-    canonicalization alone OOMs the JVM by round 3 on a minhash pair
-    graph (observed at the sf1 soak). The checkpoint materializes rows
-    the convergence check needs anyway, so it costs nothing extra.
+    shrink the component's potential and preserve connectivity (so
+    every input node keeps an edge); at the fixed point the edge set
+    is a union of stars, each centered on its component's minimum.
+    State per round is the edge list itself — bounded by the input
+    pair count, shuffled on node keys, AQE splitting skew (a giant
+    component's center is by construction a hot key; the star rewrite
+    is exactly the transformation that keeps its degree bounded per
+    round).
 
-    Exposes ``.n_rounds`` (full large+small rounds to stability); the
-    checkpointed final star edges and the persisted node set back the
-    result (relation lifetime: README "Relation lifetime"). Raises
-    ``RuntimeError`` if not stable after ``max_iter`` rounds.
+    Lineage is cut with an EAGER ``localCheckpoint`` of the input edge
+    list and of every round's output: each star operation references
+    its input several times (the symmetric union, the min join), so an
+    un-truncated plan grows exponentially in rounds — ~6^r copies of
+    the upstream pair-generation pipeline, enough for Catalyst plan
+    canonicalization alone to exhaust the JVM heap by round 3 on a
+    minhash pair graph. The checkpoint materializes rows the
+    convergence check reads anyway. Superseded rounds are released as
+    the loop advances; the last round's edges back the result
+    (relation lifetime: README "Relation lifetime"), so the returned
+    plan reads one checkpoint leaf at any diameter. (On a real cluster
+    prefer ``setCheckpointDir`` + ``.checkpoint()`` if executor loss
+    during the loop matters; ``localCheckpoint`` trades that
+    fault-tolerance for zero-copy speed.)
+
+    Exposes ``.n_rounds`` (full large+small rounds to stability).
+    Raises ``RuntimeError`` if not stable after ``max_iter`` rounds
+    instead of returning silently-wrong intermediate labels.
     """
-    # canonical (u > v) edge list; self-pairs dropped. The eager
-    # localCheckpoint cuts the upstream pair-generation plan off the
-    # loop (see docstring).
-    edges = checkpoint(
+    edges = (
         pairs.select(
             F.greatest(F.col("a"), F.col("b")).alias("u"),
             F.least(F.col("a"), F.col("b")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-    )
-    nodes = persist(
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
-        .distinct()
+        .localCheckpoint(eager=True)
     )
 
     def large_star(E: DataFrame) -> DataFrame:
@@ -923,59 +742,35 @@ def dedup_components_stars(
 
     n_rounds = 0
     stable = False
-    first_edges = edges
     try:
         for _ in range(max_iter):
             n_rounds += 1
-            # eager checkpoint each round: truncates the exponential
-            # star lineage AND materializes the rows the convergence
-            # check reads. Round state is released here, not by the
-            # scope; only the last round's edges are handed to it.
-            new_edges = small_star(large_star(edges)).localCheckpoint(
-                eager=True
-            )
-            changed = not (
-                new_edges.exceptAll(edges)
-                .union(edges.exceptAll(new_edges))
-                .isEmpty()
-            )
-            # superseded round's checkpoint blocks: released explicitly
-            # instead of waiting for driver GC + ContextCleaner (r14
-            # ADVICE on the sibling loop); the convergence check above
-            # already consumed the old relation. NEVER the round-0
-            # input leaf — the lazily-persisted `nodes` relation still
-            # reads it at its first materialization (releasing it
-            # raised CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND on the final
-            # labels join; a checkpoint leaf cannot recompute).
-            superseded, edges = edges, new_edges
-            if superseded is not first_edges:
-                release(superseded)
-            if not changed:
-                stable = True
+            rewritten = small_star(large_star(edges))
+            prev, edges = edges, rewritten.localCheckpoint(eager=True)
+            try:
+                stable = (
+                    edges.exceptAll(prev).union(prev.exceptAll(edges)).isEmpty()
+                )
+            finally:
+                release(prev)  # the convergence check was its last reader
+            if stable:
                 break
         if not stable:
             raise RuntimeError(
-                f"dedup_components_stars not stable after {max_iter} "
+                f"dedup_components did not converge in {max_iter} "
                 "rounds; raise max_iter"
             )
     finally:
         if not stable:
-            nodes.unpersist()
-            if edges is not first_edges:
-                release(edges)
-    if edges is not first_edges:
-        own(edges)
-    # at the fixed point every non-center node has exactly one star
-    # edge (u -> component min); centers map to themselves
+            release(edges)
+    own(edges)
+    # at the fixed point every non-center node has exactly one edge
+    # (u -> component min); centers appear only as v and map to
+    # themselves
     out = (
-        nodes.join(
-            edges.select(F.col("u").alias("id"), F.col("v").alias("comp")),
-            "id",
-            "left",
-        )
-        .groupBy("id")
-        .agg(F.min(F.coalesce(F.col("comp"), F.col("id"))).alias("component"))
-        .select(F.col("id").alias("doc_id"), "component")
+        edges.union(edges.select("v", "v"))
+        .groupBy(F.col("u").alias("doc_id"))
+        .agg(F.min("v").alias("component"))
     )
     out.n_rounds = n_rounds
     return out
@@ -1003,16 +798,16 @@ def dedup_keep_best(
     is, but the SQL side pins it explicitly too).
 
     Plan shape: :func:`dedup_components` clusters the pair graph
-    (round state is (id, label) pairs only); the representative pick
+    (round state is the edge list only); the representative pick
     is ONE window over component members — a relation bounded by the
     paired docs, not the corpus — and survivors come back via a
-    left-anti join on the dropped keys. The component label relation
-    backs both the window and the anti-join (relation lifetime: README
+    left-anti join on the dropped keys. The component relation backs
+    both the window and the anti-join (relation lifetime: README
     "Relation lifetime")."""
     q = F.col(quality_col) if isinstance(quality_col, str) else quality_col
     # Resolve the quality expression against df BEFORE clustering: a bad
     # column/expression must fail here, not after dedup_components has
-    # checkpointed the label relation.
+    # run its rounds.
     df.select(q.alias("__q"))
     comp = dedup_components(pairs)
     if key_col != "doc_id":
@@ -1071,109 +866,6 @@ def leakage_safe_split(
             F.lit("test")
         ),
     ).drop("component")
-
-
-def mllib_minhash_candidates(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    num_hash_tables: int = 8,
-    jaccard_distance: float = 0.5,
-    shingle_n: int = 3,
-    num_features: int = 1 << 18,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """MLlib-native variant of :func:`minhash_candidates`:
-    shingle-hash sets → binary feature vectors (``num_features`` dims) →
-    ``MinHashLSH.approxSimilarityJoin``. Returns (a, b, jaccard_dist)
-    with a < b.
-
-    Same asymptotics as the hand-rolled LSH (banded signature join);
-    kept as the MLlib-pipeline integration point — drop-in for ML
-    Pipeline stages, model persistence, and transform reuse across
-    corpora. The hand-rolled path stays the default: no vector
-    materialization and exact (not feature-bucketed) Jaccard verify.
-
-    Vector construction is ``HashingTF(binary=True)`` over the shingle
-    string arrays: the standard MLlib Pipeline stage for exactly this
-    job — JVM-side, SPARSE vectors (size ∝ shingles per doc, not
-    ``num_features``), no Python in the loop. That keeps
-    ``num_features`` free to be 2^18 for low collision without paying
-    dense-vector memory (a dense formulation at 2^18 costs 2 MB/row and
-    OOMs the LSH join's broadcast; sparse costs ~8 B per shingle).
-    MinHashLSH's reported distance is feature-bucketed Jaccard either
-    way; the exact-verify pass in :func:`mllib_minhash_dedup` makes the
-    final answer bucket-free.
-    """
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    if shingles is None:
-        shingles = shingle_arrays(df, key_col, text_col, shingle_n)
-    sh = shingles
-    tf = HashingTF(
-        inputCol="sh", outputCol="features", numFeatures=num_features, binary=True
-    )
-    vecs = tf.transform(sh.filter(F.size(F.col("sh")) > 0)).select("k", "features")
-    model = MinHashLSH(
-        inputCol="features", outputCol="lsh", numHashTables=num_hash_tables, seed=42
-    ).fit(vecs)
-    joined = model.approxSimilarityJoin(
-        vecs, vecs, threshold=jaccard_distance, distCol="jaccard_dist"
-    )
-    return (
-        joined.filter(F.col("datasetA.k") < F.col("datasetB.k"))
-        .select(
-            F.col("datasetA.k").alias("a"),
-            F.col("datasetB.k").alias("b"),
-            F.round("jaccard_dist", 4).alias("jaccard_dist"),
-        )
-    )
-
-
-def mllib_minhash_dedup(
-    df: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    num_hash_tables: int = 8,
-    shingle_n: int = 3,
-    num_features: int = 1 << 18,
-) -> DataFrame:
-    """MLlib-candidate near-dup pairs verified by EXACT shingle Jaccard:
-    ``MinHashLSH`` generates candidates (any colliding hash table,
-    distance threshold wide open), then the same exact-Jaccard verify as
-    :func:`minhash_dedup` filters to >= ``threshold``. Returns
-    (a, b, jaccard_sim) — the same contract (and oracle) as the
-    hand-rolled path, so the two variants are directly comparable.
-
-    Single-scan: one persisted :func:`shingle_arrays` relation feeds
-    both the ``HashingTF`` vectorization and the verify join, and the
-    verify Jaccard runs directly over the distinct string shingle
-    arrays — set cardinalities (hence Jaccard) are identical to the
-    hashed-gram formulation, without a second tokenize pass. Relation
-    lifetime: README "Relation lifetime".
-    """
-    sh = persist(shingle_arrays(df, key_col, text_col, shingle_n))
-    cands = mllib_minhash_candidates(
-        df,
-        key_col,
-        text_col,
-        num_hash_tables=num_hash_tables,
-        jaccard_distance=1.0,
-        shingle_n=shingle_n,
-        num_features=num_features,
-        shingles=sh,
-    ).select("a", "b")
-    return (
-        cands.join(sh.withColumnsRenamed({"k": "a", "sh": "sh_a"}), "a")
-        .join(sh.withColumnsRenamed({"k": "b", "sh": "sh_b"}), "b")
-        .select(
-            "a",
-            "b",
-            F.round(jaccard("sh_a", "sh_b"), 4).alias("jaccard_sim"),
-        )
-        .filter(F.col("jaccard_sim") >= threshold)
-    )
 
 
 # ---------------------------------------------------------------------------

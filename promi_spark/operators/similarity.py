@@ -994,11 +994,12 @@ def ivf_topk(
 
 
 def _cluster_gram_pairs(
-    id_field, threshold: float, block_bytes: int = 32 << 20
+    id_type, threshold: float, block_bytes: int = 32 << 20
 ):
     """Per-cluster pair kernel for :func:`semantic_dedup`'s ``gram``
     verify path: one pandas group = one cluster's (k, v, nrm) rows;
-    emit (a, b, __raw) for every a < b pair whose raw cosine clears
+    emit (a, b, __raw) for every a < b pair (ids typed as the integral
+    Spark ``id_type``) whose raw cosine clears
     ``threshold`` minus a one-ulp-scale safety margin (the EXACT
     ``round(.., 6) >= threshold`` cut happens JVM-side on ``__raw``, so
     the margin only prunes pairs no rounding could rescue).
@@ -1023,11 +1024,13 @@ def _cluster_gram_pairs(
     magnitude to spare."""
     import numpy as np
     import pandas as pd
+    from pyspark.sql.pandas.types import to_arrow_type
 
+    id_dtype = to_arrow_type(id_type).to_pandas_dtype()
     empty = pd.DataFrame(
         {
-            "a": pd.Series(dtype=id_field),
-            "b": pd.Series(dtype=id_field),
+            "a": pd.Series(dtype=id_dtype),
+            "b": pd.Series(dtype=id_dtype),
             "__raw": pd.Series(dtype="float64"),
         }
     )
@@ -1166,7 +1169,7 @@ def semantic_dedup(
             "Spark must sort them identically); use verify='join'"
         )
     if verify != "join" and integral_id and cent:
-        kernel = _cluster_gram_pairs("int64", float(threshold))
+        kernel = _cluster_gram_pairs(id_type, float(threshold))
         raw = assigned.groupBy("cluster").applyInPandas(
             kernel,
             schema=(

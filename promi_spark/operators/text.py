@@ -272,10 +272,10 @@ def repetition_stats(
     back to the narrow stats on the doc key. At 100 TB the explode is
     the unavoidable cost of an exact mode; swap in a per-partition
     count-min sketch when approximate top-grams suffice."""
-    # Two-step projection (same reason as dedup.shingle_arrays /
-    # ngram_overlap): the gram transforms slice a MATERIALIZED token
-    # column. Higher-order functions evaluate interpreted, so a split
-    # written inline under the lambda re-executes per gram index —
+    # Two-step projection (same reason as ngram_overlap): the gram
+    # transforms slice a MATERIALIZED token column. Higher-order
+    # functions evaluate interpreted, so a split written inline under
+    # the lambda re-executes per gram index —
     # O(tokens^2) regex work per document (the sf1 soak measured this
     # exact shape at 79 s vs ~3 s fixed). The boundary survives
     # CollapseProject because __toks is referenced more than once.
@@ -378,9 +378,8 @@ def ngram_overlap(
     Results are identical to the broadcast mode (the bloom only
     prunes; the join stays exact).
     """
-    # Two-step projection, same reason as dedup.shingle_arrays: ``toks``
-    # is materialized as its own column and the gram transform slices
-    # THAT attribute. Higher-order functions evaluate interpreted, so a
+    # Two-step projection: ``toks`` is materialized as its own column
+    # and the gram transform slices THAT attribute. Higher-order functions evaluate interpreted, so a
     # split expression written inline under the lambda is re-executed
     # per gram index — O(tokens^2) regex work per document (measured:
     # this exact shape made decontaminate the slowest query in the

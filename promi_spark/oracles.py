@@ -559,9 +559,8 @@ def _jaccard_pairs_ctes(threshold: float, n: int = 3) -> str:
 
 def exact_jaccard_pairs_sql(threshold: float, n: int = 3) -> str:
     """Exact word-n-gram Jaccard pairs >= threshold over ``documents``
-    — the oracle for minhash_dedup / mllib_minhash_dedup, whose banded
-    LSH has (verified) total recall on the high-similarity injected
-    duplicates."""
+    — the oracle for minhash_dedup, whose banded LSH has (verified)
+    total recall on the high-similarity injected duplicates."""
     return f"""
     WITH {_jaccard_pairs_ctes(threshold, n)}
     SELECT a, b, jaccard_sim FROM jpairs
@@ -572,7 +571,7 @@ def dedup_components_sql(threshold: float, n: int = 3) -> str:
     """Connected components of the near-dup pair graph via a recursive
     transitive-closure CTE: every node's component id is the smallest
     doc id it can reach — the declarative mirror of the iterative
-    min-label propagation in ``dedup.dedup_components``."""
+    star-rewrite loop in ``dedup.dedup_components``."""
     return f"""
     WITH RECURSIVE {_jaccard_pairs_ctes(threshold, n)},
     edges AS MATERIALIZED (

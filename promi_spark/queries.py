@@ -2764,16 +2764,6 @@ def q_minhash_near_dups(spark, sf_dir):
     )
 
 
-@q("mllib_minhash_near_dups", oracles.exact_jaccard_pairs_sql(threshold=0.5))
-def q_mllib_minhash_near_dups(spark, sf_dir):
-    """MLlib MinHashLSH candidates + the same exact-Jaccard verify and
-    oracle as minhash_near_dups — the two variants are directly
-    comparable."""
-    return dedup.mllib_minhash_dedup(
-        load_table(spark, "documents", sf_dir), threshold=0.5
-    )
-
-
 @q(
     "incremental_dedup",
     oracles.exact_jaccard_pairs_sql(threshold=0.5).replace(
@@ -2805,9 +2795,10 @@ def q_incremental_dedup(spark, sf_dir):
 def q_dedup_components(spark, sf_dir):
     """Near-dup pair graph -> connected components (the clustering step
     a production dedup pipeline runs after pair generation). Spark side
-    is iterative min-label propagation; the oracle replays it as a
-    DuckDB recursive transitive-closure CTE — so even this iterative
-    graph algorithm is hash-checked cross-engine."""
+    is the iterative large-star/small-star edge rewrite; the oracle
+    replays the same contract (component = smallest reachable doc id)
+    as a DuckDB recursive transitive-closure CTE — so even this
+    iterative graph algorithm is hash-checked cross-engine."""
     pairs = dedup.minhash_dedup(
         load_table(spark, "documents", sf_dir), threshold=0.5
     )
@@ -2827,21 +2818,6 @@ def q_dedup_keep_best(spark, sf_dir):
     return dedup.dedup_keep_best(
         docs, pairs, F.length("text")
     ).select("doc_id")
-
-
-@q("dedup_components_stars", oracles.dedup_components_sql(threshold=0.5))
-def q_dedup_components_stars(spark, sf_dir):
-    """Same clustering contract as dedup_components, computed by the
-    O(log n)-round large-star/small-star edge rewrite instead of
-    O(diameter) label propagation — the algorithm to reach for when
-    the pair graph chains (adversarial near-dup corpora). Checked
-    against the identical DuckDB recursive transitive-closure oracle,
-    so both distributed CC algorithms are hash-verified cross-engine
-    against one declarative spec."""
-    pairs = dedup.minhash_dedup(
-        load_table(spark, "documents", sf_dir), threshold=0.5
-    )
-    return dedup.dedup_components_stars(pairs)
 
 
 @q("simhash_signatures", oracles.simhash_signatures_sql())
@@ -3514,16 +3490,6 @@ def q_token_heavy_hitters(spark, sf_dir):
 # prefix of this inventory, so the window always holds oracled queries
 # and the genuinely oracle-less iterative / media ops sit last. The
 # window ROTATES each round so no query's last driver-recorded verdict
-# ages out: round 6 completed first-witness coverage (every oracled
-# query now has at least one green driver row); round 7 rotates
-# oldest-witness-first — the 50 queries whose last driver row is
-# r1-r5 (the r1-era TPC-H/knn slots, the r3 filter family, and the
-# r4/r5 text+stats families). Everything rotated out was driver-green
-# in r6 and keeps its local tools/check_oracle.py cross-scale witness.
-# Deliberate registration order: the driver checks a bounded 50-slot
-# prefix of this inventory, so the window always holds oracled queries
-# and the genuinely oracle-less iterative / media ops sit last. The
-# window ROTATES each round so no query's last driver-recorded verdict
 # ages out (first-witness coverage completed r6; every rotated-out
 # query keeps its local tools/check_oracle.py cross-scale witness).
 _ORDER = [
@@ -3542,10 +3508,8 @@ _ORDER = [
     "dfg_endpoints",
     "knn_cosine",
     "minhash_near_dups",
-    "mllib_minhash_near_dups",
     "incremental_dedup",
     "dedup_components",
-    "dedup_components_stars",
     "dedup_keep_best",
     "leakage_safe_split",
     "simhash_near_dups",
@@ -3586,11 +3550,11 @@ _ORDER = [
     "chronology_violations_injected",
     "classifier_counts",
     "cnf_filter",
+    "corpus_cardinality",
+    "cross_doc_substrings",
     # ---- out of the driver window: freshest witnesses (r13/r14
     # driver rows) and the remainder of the r12 block — all re-checked
     # locally by the tools/check_oracle.py cross-scale sweeps ----
-    "corpus_cardinality",
-    "cross_doc_substrings",
     "dfg",
     "eventually_follows",
     "filter_concept_match",

@@ -355,12 +355,13 @@ def test_driver_window_all_oracled_and_sized():
     # then every query whose code changed in r15 — minhash/banding
     # family, semantic_dedup, token_heavy_hitters — then the oldest
     # driver witnesses: the full r11 block and the head of the r12
-    # block)
+    # block; the two slots the retired duplicate dedup witnesses freed
+    # went to corpus_cardinality and cross_doc_substrings)
     assert names[0] == "pq_topk"  # r14-VERDICT-named block starts
     assert names[5] == "minhash_near_dups"  # r15-changed block starts
-    assert names[16] == "value_hour_corr"  # oldest-witness block starts
-    assert names[49] == "cnf_filter"
-    assert names[50] == "corpus_cardinality"  # first out-of-window
+    assert names[14] == "value_hour_corr"  # oldest-witness block starts
+    assert names[49] == "cross_doc_substrings"
+    assert names[50] == "dfg"  # first out-of-window
 
 
 def test_ntile_null_placement_matches_duckdb(spark):

@@ -147,27 +147,6 @@ def test_minhash_identical_docs_are_candidates(spark):
     assert out == {(1, 2): 1.0}
 
 
-def test_mllib_minhash_agrees_on_identicals(spark):
-    """MLlib MinHashLSH variant: exact duplicates at distance 0, near
-    duplicates close, unrelated docs excluded."""
-    from promi_spark.operators.dedup import mllib_minhash_candidates
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again today"),
-        (2, "the quick brown fox jumps over the lazy dog again and again today"),
-        (3, "the quick brown fox jumps over the lazy dog again and again tomorrow"),
-        (4, "completely different content about spark execution plans and shuffles"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        (r["a"], r["b"]): r["jaccard_dist"]
-        for r in mllib_minhash_candidates(df, jaccard_distance=0.6).collect()
-    }
-    assert got[(1, 2)] == 0.0
-    assert 0 < got[(1, 3)] < 0.5
-    assert not any(4 in pair for pair in got)
-
-
 def test_simhash_hamming_zero_for_identical(spark):
     from promi_spark.operators.dedup import simhash_signatures
 
@@ -472,7 +451,7 @@ def test_minhash_candidates_match_python_banding_replay(spark):
     num_hashes, bands = 64, 16
     sigs = minhash_signatures(docs, num_hashes=num_hashes)
     banded = sigs.select(
-        "k", band_buckets(F.col("sig"), num_hashes, bands).alias("bks")
+        "k", band_buckets("sig", num_hashes, bands).alias("bks")
     ).collect()
     from collections import defaultdict
 
@@ -712,6 +691,23 @@ def test_bloom_never_false_negative(spark, values):
     bf = bloom_build(df, "val", m, k)
     res = bloom_probe(df, bf, "val", m, k)
     assert res.filter(~F.col("maybe_member")).count() == 0
+
+
+def test_band_buckets_rejects_non_identifier(spark):
+    """band_buckets and jaccard splice column names into a parsed
+    expression, so anything but a plain identifier is refused up front
+    with a ValueError — never handed to ``F.expr`` to fail as a parse
+    error or, worse, parse as a different expression."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from promi_spark.operators.dedup import band_buckets, jaccard
+
+    for bad in ("sig + 1", "`sig`", "s.sig", "", F.col("sig")):
+        with pytest.raises(ValueError, match="plain column name"):
+            band_buckets(bad, 64, 16)
+        with pytest.raises(ValueError, match="plain column names"):
+            jaccard("sh_a", bad)
 
 
 def test_sql_collapsed_builds_plan_identical_to_column_forms(spark):

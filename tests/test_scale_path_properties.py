@@ -69,12 +69,12 @@ def _union_find_components(edges):
           suppress_health_check=[HealthCheck.too_slow])
 @given(edges=edge_rows)
 def test_stars_components_match_union_find_model(spark, edges):
-    """dedup_components_stars == a driver-side union-find on the same
+    """dedup_components == a driver-side union-find on the same
     edge list (component = min reachable id; self-pairs carry no
     connectivity). Random small graphs hit multi-component shapes,
     cycles, repeated edges, and both edge orientations."""
     from promi_spark.lifetime import scope
-    from promi_spark.operators.dedup import dedup_components_stars
+    from promi_spark.operators.dedup import dedup_components
 
     effective = [(a, b) for a, b in edges if a != b]
     if not effective:
@@ -82,7 +82,7 @@ def test_stars_components_match_union_find_model(spark, edges):
     model = _union_find_components(effective)
     df = spark.createDataFrame(edges, "a long, b long")
     with scope():
-        out = dedup_components_stars(df)
+        out = dedup_components(df)
         got = {r["doc_id"]: r["component"] for r in out.collect()}
     assert got == model
 

@@ -199,6 +199,45 @@ def test_semantic_dedup_gram_kernel_matches_join_verify(spark, sf_dir):
             ).collect()
 
 
+def test_semantic_dedup_gram_empty_cluster_keeps_int_ids(spark):
+    """A >= 2-vector cluster with no pair above the threshold takes the
+    gram kernel's empty-frame path: its id columns carry the dtype of
+    the real id type (int32 for ``int`` ids, not a hard-coded int64
+    that only Arrow's down-cast made fit), and semantic_dedup returns
+    an empty frame with ``a``/``b`` typed ``int``."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from promi_spark.operators.similarity import (
+        _cluster_gram_pairs,
+        semantic_dedup,
+    )
+
+    rows = [(1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+    out = semantic_dedup(
+        df, threshold=0.9, n_clusters=1, init="lowest_ids", n_iter=0
+    )
+    assert out.collect() == []
+    types = {f.name: f.dataType for f in out.schema.fields}
+    assert types["a"] == T.IntegerType() and types["b"] == T.IntegerType()
+
+    pdf = pd.DataFrame(
+        {
+            "k": pd.Series([1, 2], dtype="int32"),
+            "v": [[1.0, 0.0], [0.0, 1.0]],
+            "nrm": [1.0, 1.0],
+        }
+    )
+    for id_type, dtype in (
+        (T.ByteType(), "int8"), (T.ShortType(), "int16"),
+        (T.IntegerType(), "int32"), (T.LongType(), "int64"),
+    ):
+        empty = _cluster_gram_pairs(id_type, 0.9)(pdf)
+        assert empty.empty
+        assert str(empty["a"].dtype) == str(empty["b"].dtype) == dtype
+
+
 def test_winnow_shared_fingerprints(spark):
     """Documents sharing a long substring share fingerprints; unrelated
     documents (different alphabets) share none."""

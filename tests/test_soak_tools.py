@@ -89,14 +89,13 @@ def test_drift_unreadable_prior(tmp_path):
 def test_skew_soak_query_lists_are_oracled_registry_entries():
     """Every query the skew regimes claim to witness must exist in the
     registry WITH a DuckDB oracle — a rename or de-oracling would
-    otherwise silently shrink the adversarial-skew evidence. The MLlib
-    variant is deliberately absent from the boiler list (it runs
-    capped in boiler_special; see skew_soak.py's note)."""
+    otherwise silently shrink the adversarial-skew evidence. No MLlib
+    pair-generation query is registered: the native MinHash path is
+    the one near-dup witness."""
     from promi_spark.queries import QUERIES
     from tools.skew_soak import BOILER_QUERIES, HOT_QUERIES
 
     oracled = {n for n, (_, sql) in QUERIES.items() if sql is not None}
     assert set(HOT_QUERIES) <= oracled, set(HOT_QUERIES) - oracled
     assert set(BOILER_QUERIES) <= oracled, set(BOILER_QUERIES) - oracled
-    assert "mllib_minhash_near_dups" not in BOILER_QUERIES
-    assert "mllib_minhash_near_dups" in oracled
+    assert not [n for n in QUERIES if n.startswith("mllib_")]

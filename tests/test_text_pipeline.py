@@ -138,17 +138,13 @@ def test_dedup_components_chain_and_isolation(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_dedup_components_stars_matches_label_propagation(spark):
-    """Both CC algorithms produce the identical (doc_id, component)
-    map on a graph mixing a chain, a star, an isolated pair, and a
-    cycle; and the star variant converges in O(log n) rounds on a
-    path graph where label propagation needs O(diameter) — path of
-    diameter 200 must stabilize in <= 12 large+small rounds."""
+def test_dedup_components_mixed_graph_and_long_path(spark):
+    """The exact (doc_id, component) map on a graph mixing a chain, a
+    star, an isolated pair, and a cycle; and a path graph of diameter
+    200 converges under the DEFAULT max_iter in O(log n) rounds — <= 12
+    large+small rounds, not the ~200 an O(diameter) loop needs."""
     from promi_spark.lifetime import scope
-    from promi_spark.operators.dedup import (
-        dedup_components,
-        dedup_components_stars,
-    )
+    from promi_spark.operators.dedup import dedup_components
 
     mixed = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 5), (7, 6), (7, 8), (10, 11), (20, 21),
@@ -156,18 +152,20 @@ def test_dedup_components_stars_matches_label_propagation(spark):
         "a long, b long",
     )
     with scope():
-        lp = dedup_components(mixed)
-        st = dedup_components_stars(mixed)
-        got_lp = {r["doc_id"]: r["component"] for r in lp.collect()}
-        got_st = {r["doc_id"]: r["component"] for r in st.collect()}
-    assert got_lp == got_st
-    assert got_st[22] == 20 and got_st[8] == 5 and got_st[3] == 1
+        got = {
+            r["doc_id"]: r["component"]
+            for r in dedup_components(mixed).collect()
+        }
+    assert got == {
+        1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 5, 8: 5, 10: 10, 11: 10,
+        20: 20, 21: 20, 22: 20,
+    }
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "a long, b long"
     )
     with scope():
-        out = dedup_components_stars(chain, max_iter=15)
+        out = dedup_components(chain)
         got = {r["doc_id"]: r["component"] for r in out.collect()}
     assert got == {i: 0 for i in range(201)}
     assert out.n_rounds <= 12, out.n_rounds
@@ -258,33 +256,29 @@ def test_source_mix_shares_sum_to_one(spark):
 
 
 def test_dedup_components_nonconvergence_releases_cache(spark):
-    """The non-convergence RuntimeError path unpersists both round-state
-    relations — a failed run must not leave cached relations pinned in
-    the session."""
+    """The non-convergence RuntimeError path frees every round's state —
+    a failed run must leave no cached relation or checkpoint pinned in
+    the session, inside a scope or outside one."""
     import pytest
 
     from promi_spark.lifetime import scope
-    from promi_spark.operators.dedup import (
-        dedup_components,
-        dedup_components_stars,
-    )
+    from promi_spark.operators.dedup import dedup_components
 
     spark.catalog.clearCache()
-    # a 6-node chain needs ~5 label-propagation rounds; max_iter=2 fails
+    jsc = spark.sparkContext._jsc.sc()
+    before = {i.id() for i in jsc.getRDDStorageInfo()}
+    # a 6-node chain is not a star: one round cannot confirm stability
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 6)], "a long, b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup_components(chain, max_iter=2)
+        dedup_components(chain, max_iter=1)
+    assert {i.id() for i in jsc.getRDDStorageInfo()} == before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
-    # the stars sibling frees its last round's checkpoint itself (round
-    # state is not registered), the scope the rest
-    jsc = spark.sparkContext._jsc.sc()
-    before = {i.id() for i in jsc.getRDDStorageInfo()}
-    with pytest.raises(RuntimeError, match="not stable"):
+    with pytest.raises(RuntimeError, match="did not converge"):
         with scope():
-            dedup_components_stars(chain, max_iter=1)
+            dedup_components(chain, max_iter=1)
     assert {i.id() for i in jsc.getRDDStorageInfo()} == before
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
@@ -541,16 +535,14 @@ def test_corpus_cardinality_null_text_parity_with_oracle(spark, tmp_path):
 
 
 def test_dedup_components_releases_checkpoint_storage(spark):
-    """r15 (r14 ADVICE): the loop's checkpoint leaves — sym's full pair
-    graph above all — are released EXPLICITLY when the loop ends, not
-    left to driver GC + ContextCleaner timing. After a run the only
-    surviving storage entry is the final-labels checkpoint, and the
-    scope's exit frees that too."""
+    """r15 (r14 ADVICE): the loop's checkpoint leaves — the input edge
+    list and every superseded round — are released EXPLICITLY as the
+    loop advances, not left to driver GC + ContextCleaner timing.
+    After a run the only surviving storage entry is the final round's
+    edges, which back the result, and the scope's exit frees that
+    too."""
     from promi_spark.lifetime import scope
-    from promi_spark.operators.dedup import (
-        dedup_components,
-        dedup_components_stars,
-    )
+    from promi_spark.operators.dedup import dedup_components
 
     sc = spark.sparkContext
 
@@ -566,61 +558,46 @@ def test_dedup_components_releases_checkpoint_storage(spark):
         got = {r["doc_id"]: r["component"] for r in out.collect()}
         assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 7: 5, 8: 5}
         leaked = stored() - base
-        assert len(leaked) <= 1, leaked  # only the final labels checkpoint
-    assert stored() - base == set()
-
-    # the stars sibling: superseded round checkpoints are released as
-    # the loop advances; only the final edges, the round-0 edges and
-    # the nodes survive until the scope exits
-    with scope():
-        out2 = dedup_components_stars(pairs)
-        got2 = {r["doc_id"]: r["component"] for r in out2.collect()}
-        assert got2 == got
-        leaked2 = stored() - base
-        assert len(leaked2) <= 3, leaked2
+        assert len(leaked) <= 1, leaked  # only the final edges checkpoint
     assert stored() - base == set()
 
 
 def test_dedup_components_high_diameter_bounded_plan(spark):
-    """A path graph of diameter 26 (near max_iter=30) must converge AND
-    hand out the final label relation as a lineage-TRUNCATED leaf:
-    without checkpointing, each round's plan nests the previous
-    round's join twice, so the returned plan would grow O(2^rounds)
-    copies of the upstream pair pipeline and every downstream consumer
-    would re-pay Catalyst analysis of all of it (round-5 VERDICT item;
-    hardened r14 — the final labels are now localCheckpoint-ed, so the
-    returned plan must be a LogicalRDD leaf with ZERO joins regardless
-    of graph diameter)."""
-    from promi_spark.lifetime import scope
+    """Path graphs of diameter 16 and 200 must converge AND hand out a
+    result whose plan is lineage-TRUNCATED: un-checkpointed, each star
+    round nests its input several times, so the returned plan would
+    grow exponentially many copies of the upstream pair pipeline and
+    every downstream consumer would re-pay Catalyst analysis of all of
+    it (round-5 VERDICT item). The optimized plan must have the same
+    size at both diameters and read only checkpoint leaves — no scan of
+    the upstream pair pipeline (here a ``Range``)."""
+    from pyspark.sql import functions as F
+
+    from promi_spark.lifetime import _leaf_rdd_ids, scope
     from promi_spark.operators.dedup import dedup_components
 
-    # NOTE: the un-checkpointed control arm is deliberately NOT run
-    # here — at this diameter the O(diameter) nest of cached round
-    # plans makes Spark's tree-string generation itself OOM the JVM
-    # heap (observed: java.lang.OutOfMemoryError inside
-    # QueryExecution.explainString during a plain count()). That crash
-    # IS the failure mode this checkpoint prevents.
     def run(n, tag):
-        pairs = spark.createDataFrame(
-            [(i, i + 1) for i in range(n - 1)], "a long, b long"
+        pairs = spark.range(n - 1).select(
+            F.col("id").alias("a"), (F.col("id") + 1).alias("b")
         )
         with scope():
-            out = dedup_components(pairs, max_iter=30, checkpoint_every=5)
+            out = dedup_components(pairs)
             got = {r["doc_id"]: r["component"] for r in out.collect()}
             assert got == {i: 0 for i in range(n)}, tag
-            return out._jdf.queryExecution().optimizedPlan().toString()
+            plan = out._jdf.queryExecution().optimizedPlan()
+            leaves = plan.collectLeaves()
+            kinds = {
+                leaves.apply(i).getClass().getSimpleName()
+                for i in range(leaves.size())
+            }
+            pinned = spark.sparkContext._jsc.sc().getPersistentRDDs()
+            assert kinds == {"LogicalRDD"}, (tag, kinds)
+            assert all(pinned.contains(r) for r in _leaf_rdd_ids(out)), tag
+            text = plan.toString()
+            assert "Range" not in text, (tag, text)
+            return len(text.splitlines())
 
-    # path 0-1-...-16: min-label propagation needs ~16 rounds — three
-    # checkpoint windows deep, which already exercises the truncation
-    # the test pins (the 27-node version proved the same leaf-plan
-    # invariant for ~8 s more of the suite's driver budget)
-    deep = run(17, "diameter 16")
-    shallow = run(12, "diameter 11")
-    for plan, tag in ((deep, "deep"), (shallow, "shallow")):
-        # the handed-out relation is a checkpointed leaf: no round
-        # joins, no upstream pair pipeline, independent of diameter
-        assert "LogicalRDD" in plan, (tag, plan)
-        assert "Join" not in plan, (tag, plan)
+    assert run(17, "diameter 16") == run(201, "diameter 200")
 
 
 def test_incremental_dedup_scope_releases_all_caches(spark, tmp_path, pinned_rdds):

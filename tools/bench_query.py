@@ -1,5 +1,5 @@
 """Time a single registered query: cold then warm wall-clock, with the
-physical-plan exchange count — the per-query developer loop behind
+physical-plan exchange counts — the per-query developer loop behind
 `bench.py`'s round-level numbers.
 
 Usage:
@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -57,6 +56,7 @@ def main() -> int:
 
     from promi_spark.queries import QUERIES
     from promi_spark.session import get_spark
+    from tools.plan_audit import exchange_counts
 
     if name not in QUERIES:
         print(f"unknown query {name!r}", file=sys.stderr)
@@ -86,7 +86,7 @@ def main() -> int:
                     else None
                 ),
                 "runs": times,
-                "exchanges": len(re.findall(r"\(\d+\) Exchange\b", plan)),
+                **exchange_counts(plan),
             }
         )
     )

@@ -11,7 +11,8 @@ For every registered query (or the names given) record:
 - ``plan_bytes``: len of ``explain('formatted')`` text (Catalyst
   re-analyzes the tree on every fresh execution, so bytes ~ driver
   planning cost);
-- ``exchanges``: count of Exchange nodes (shuffle boundaries);
+- ``shuffles`` / ``broadcasts`` / ``reused``: Exchange,
+  BroadcastExchange and ReusedExchange nodes (:func:`exchange_counts`);
 - ``joins``: physical join strategies used;
 - ``py_eval``: BatchEvalPython/ArrowEvalPython/MapInArrow/MapInPandas/
   FlatMapGroupsInPandas nodes (the JVM<->Python boundary);
@@ -30,6 +31,19 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+
+
+def exchange_counts(plan: str) -> dict:
+    """Shuffle, broadcast and reused exchange nodes of an
+    ``explain('formatted')`` text. Each node is counted once, by its
+    numbered detail header ``(N) Exchange``; the tree section names
+    every node a second time and is not counted."""
+    kinds = {"shuffles": "Exchange", "broadcasts": "BroadcastExchange",
+             "reused": "ReusedExchange"}
+    return {
+        key: len(set(re.findall(rf"^\((\d+)\) {node}\b", plan, re.M)))
+        for key, node in kinds.items()
+    }
 
 
 def main() -> int:
@@ -98,8 +112,7 @@ def main() -> int:
         rows[name] = {
             "build_calls": build_calls,
             "plan_bytes": len(plan),
-            "exchanges": plan.count("Exchange"),
-            "reused_exchanges": plan.count("ReusedExchange"),
+            **exchange_counts(plan),
             "joins": joins,
             "py_eval": py_eval,
             "scans": len(reads),

@@ -71,35 +71,17 @@ HOT_QUERIES = [
 # near-dup queries run at their REGISTRY config (uncapped) — the class
 # collapse must keep candidate generation linear per identical class;
 # output size is the contract (all true pairs).
-#
-# mllib_minhash_near_dups is handled SEPARATELY (boiler_special's
-# ``mllib_minhash`` section, capped + keyslice-witnessed) and is
-# deliberately NOT in this list: MLlib's MinHashLSH is a single-hash
-# OR-construction (collision probability per table == the pair's
-# Jaccard itself) with no identical-signature collapse, so on a corpus
-# that is 2/3 byte-identical boilerplate with heavy cross-class
-# shingle overlap its candidate space is effectively quadratic — an
-# uncapped run blocks the whole regime (observed r13: >14 min with no
-# output where the class-collapsed default path takes 35 s). That
-# asymmetry is a finding, not an accident; the special section records
-# it as numbers.
 BOILER_QUERIES = [
     "dedup_exact_docs", "line_dedup_docs", "doc_fingerprint",
     "minhash_near_dups", "simhash_near_dups",
     "simhash_signatures", "winnow_fingerprints", "cross_doc_substrings",
-    "dedup_components", "dedup_components_stars", "dedup_keep_best",
-    "leakage_safe_split", "incremental_dedup", "tfidf_terms",
-    "top_bigrams", "token_counts_docs", "text_quality", "lang_id_docs",
+    "dedup_components", "dedup_keep_best", "leakage_safe_split",
+    "incremental_dedup", "tfidf_terms", "top_bigrams",
+    "token_counts_docs", "text_quality", "lang_id_docs",
     "repetition_stats", "lm_quality", "phrase_search_docs",
     "token_heavy_hitters", "bpe_token_counts", "pii_scrub", "chunk_docs",
     "decontaminate", "corpus_cardinality",
 ]
-
-# Engine-side wall cap for the full-slice MLlib probe (seconds): long
-# enough that a healthy run would finish several times over (the
-# class-collapsed path emits the same 27.9M pairs in 35 s), short
-# enough to bound the regime.
-MLLIB_CAP_SEC = 1200
 
 
 def run_soak(sf_dir: str, out: str, queries: list[str], budget: float,
@@ -149,112 +131,6 @@ def hot_vs_uniform(hot: dict, uniform_path: str) -> None:
         if u and s:
             rec["uniform_sf1_sec"] = u
             rec["skew_vs_uniform"] = round(s / u, 2)
-
-
-def mllib_probe(budget: float) -> dict:
-    """mllib_minhash_near_dups on the boilerplate corpus, in two parts:
-
-    - ``full_slice``: the uncapped-registry config under a HARD wall
-      cap (``timeout`` on a subprocess). MLlib's single-hash
-      OR-construction has no identical-signature collapse, so on this
-      corpus the candidate join is effectively quadratic; if the cap
-      fires, the recorded bound IS the measurement — the number that
-      justifies the class-collapsed default path (35 s for the same
-      27.9M true pairs).
-    - ``keyslice``: the same query hash-verified against its exact
-      -Jaccard oracle on the deterministic 2% key-slice of the SAME
-      corpus (classes of ~10 copies) — boiler-distribution correctness
-      evidence at a size where the MLlib join is tractable.
-    """
-    out: dict = {}
-    probe = "_mllib_probe.json"
-    probe_abs = os.path.join(REPO, probe)
-    if os.path.exists(probe_abs):
-        os.remove(probe_abs)
-    t0 = time.time()
-    proc = subprocess.run(
-        ["timeout", str(MLLIB_CAP_SEC), sys.executable,
-         os.path.join(REPO, "tools", "soak.py"), "--sf1", BOILER_DIR,
-         "--no-oracle", "--out", probe, "mllib_minhash_near_dups"],
-        cwd=REPO, env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "16g"},
-    )
-    wall = round(time.time() - t0, 1)
-    if proc.returncode == 0 and os.path.exists(probe_abs):
-        with open(probe_abs) as f:
-            rec = json.load(f)["queries"]["mllib_minhash_near_dups"]
-        rec["harness_wall_sec"] = wall
-        out["full_slice"] = rec
-    else:
-        out["full_slice"] = {
-            "exceeded_cap": proc.returncode == 124,
-            "cap_sec": MLLIB_CAP_SEC,
-            "rc": proc.returncode,
-            "wall_sec": wall,
-            "note": "single-hash OR-construction LSH with no "
-            "identical-signature collapse: candidate space is "
-            "~quadratic on a 2/3-boilerplate corpus; the class-"
-            "collapsed default path emits the same true-pair set in "
-            "~35 s (see the boiler regime's minhash_near_dups row)",
-        }
-    if os.path.exists(probe_abs):
-        os.remove(probe_abs)
-
-    ks_dir = BOILER_DIR + "_keyslice_p0.02"
-    ks_out = "_mllib_keyslice.json"
-    ks_abs = os.path.join(REPO, ks_out)
-    if os.path.exists(ks_abs):
-        os.remove(ks_abs)
-    if not os.path.exists(os.path.join(ks_dir, "lineitem.parquet")):
-        # completion marker, not bare isdir: make_key_slice mkdirs the
-        # target before writing tables, so an interrupted build would
-        # otherwise permanently satisfy the existence check and poison
-        # every later run with a partial slice (same guard soak.py's
-        # lazy path uses)
-        # soak.py only materializes this slice lazily when a full-data
-        # oracle times out during the boiler regime — running
-        # `--regime special` alone (or a boiler run with no oracle
-        # timeouts, or a fresh checkout) used to silently record
-        # {"err": "no artifact"} and quietly drop the advertised MLlib
-        # correctness witness. Build the slice explicitly instead.
-        if not os.path.isdir(BOILER_DIR):
-            out["keyslice"] = {
-                "err": "boiler corpus missing — run the boiler regime "
-                "first to materialize " + BOILER_DIR
-            }
-            return out
-        build = (
-            "import sys; sys.path.insert(0, %r); "
-            "from tools.soak import make_key_slice; "
-            "from promi_spark.session import get_spark; "
-            "make_key_slice(get_spark('keyslice_build'), %r, %r, 0.02)"
-            % (REPO, BOILER_DIR, ks_dir)
-        )
-        proc = subprocess.run(
-            [sys.executable, "-c", build], cwd=REPO,
-            env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "16g"},
-        )
-        if proc.returncode != 0 or not os.path.exists(
-            os.path.join(ks_dir, "lineitem.parquet")
-        ):
-            out["keyslice"] = {
-                "err": "keyslice build failed rc=%s" % proc.returncode
-            }
-            return out
-    proc = subprocess.run(
-        [sys.executable, os.path.join(REPO, "tools", "soak.py"),
-         "--sf1", ks_dir, "--oracle-budget", str(budget),
-         "--out", ks_out, "mllib_minhash_near_dups"],
-        cwd=REPO, env={**os.environ, "SPARK_GRAFT_DRIVER_MEM": "16g"},
-    )
-    if os.path.exists(ks_abs):
-        with open(ks_abs) as f:
-            rec = json.load(f)["queries"]["mllib_minhash_near_dups"]
-        rec["slice"] = "boiler keyslice p0.02 (classes of ~10 copies)"
-        out["keyslice"] = rec
-        os.remove(ks_abs)
-    else:
-        out["keyslice"] = {"rc": proc.returncode, "err": "no artifact"}
-    return out
 
 
 def boiler_special(budget: float) -> dict:
@@ -393,9 +269,7 @@ def main() -> int:
                           BOILER_QUERIES, budget, slice_fallback=0.02)
         summary["regimes"]["boiler"] = boiler
     if "special" in regimes:
-        special = boiler_special(budget)
-        special["mllib_minhash"] = mllib_probe(budget)
-        summary["regimes"]["boiler_special"] = special
+        summary["regimes"]["boiler_special"] = boiler_special(budget)
 
     summary["wall_sec"] = round(time.time() - t_start, 1)
     with open(out_path, "w") as f:

@@ -207,9 +207,7 @@ DRIFT_TIME_FLOOR = 0.05
 # by wall time: warm-up exists to exercise the JVM, not to pre-run the
 # workload, and on a regime whose early slots are 100s+ near-dup
 # queries (the boiler skew soak) an uncapped 10-query warm-up would
-# silently double the most expensive part of the run (observed r13:
-# the warm-up reached mllib_minhash_near_dups — a ~25M-candidate MLlib
-# join — before the timed loop even started).
+# silently double the most expensive part of the run.
 WARMUP_SLOTS = 10
 WARMUP_MAX_SEC = 120.0
 
@@ -525,9 +523,9 @@ def main() -> int:
         # budget gate BEFORE starting each query, not only after: a
         # single expensive query in an early slot previously ran to
         # completion untimed and unbounded (the r13 failure mode the
-        # cap was added for — warm-up reaching a ~25M-candidate MLlib
-        # join). The cap can still overshoot by at most ONE query's
-        # duration (the one already running when the budget expires).
+        # cap was added for). The cap can still overshoot by at most
+        # ONE query's duration (the one already running when the budget
+        # expires).
         if warmed >= WARMUP_SLOTS or time.time() - t_warm > WARMUP_MAX_SEC:
             break
         try:
