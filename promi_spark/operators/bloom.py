@@ -281,9 +281,7 @@ def _doc_grams(
     df: DataFrame, key_col: str | None, text_col: str, n: int
 ) -> DataFrame:
     """(k, g) distinct word n-grams per doc (``g`` null for gram-less
-    docs, so every doc keeps a row through ``explode_outer``) —
-    byte-identical gram strings to ``text.ngram_overlap`` so the bloom
-    and exact decontamination paths flag the same true overlaps.
+    docs, so every doc keeps a row through ``explode_outer``).
     ``key_col=None`` emits a constant key (gram extraction only).
 
     Deliberately does NOT emit a per-doc gram COUNT column: a
@@ -295,21 +293,13 @@ def _doc_grams(
     defect). Callers that need the count derive it from the exploded
     rows (grams are already distinct per doc): ``sum(g is not null)``
     in their rollup."""
-    from promi_spark.operators.text import tokens
+    from promi_spark.operators.text import tokens, word_ngrams
 
-    toks = F.col("__toks")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    gr = F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " ")
-            )
-        )
-    )
     key = F.lit(0) if key_col is None else F.col(key_col)
     toks_df = df.select(
         key.alias("k"), tokens(F.col(text_col)).alias("__toks")
     )
+    gr = F.array_distinct(word_ngrams("__toks", n))
     return toks_df.select("k", F.explode_outer(gr).alias("g"))
 
 

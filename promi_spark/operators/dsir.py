@@ -52,7 +52,7 @@ from pyspark.sql import functions as F
 from promi_spark.lifetime import persist
 from promi_spark.operators.dedup import norm_text
 from promi_spark.operators.split import coin_hex
-from promi_spark.operators.text import tokens
+from promi_spark.operators.text import tokens, word_ngrams
 
 __all__ = [
     "gram_stream",
@@ -72,30 +72,15 @@ def gram_stream(
     ``coalesce(text, '')``: empty AND NULL text both yield the single
     empty token (both engines — the oracle coalesces identically), so
     EVERY document emits at least one gram and scoring never silently
-    drops rows. The token array is materialized before the bigram
-    transform (the repetition_stats / top_ngrams two-step: an inline
-    split under the higher-order lambda would re-tokenize per gram
-    index)."""
+    drops rows."""
     toks_df = df.select(
         *key_cols,
         tokens(
             norm_text(F.coalesce(F.col(text_col), F.lit("")))
         ).alias("__toks"),
     )
-    toks = F.col("__toks")
-    bigrams = F.when(
-        F.size(toks) < 2, F.array().cast("array<string>")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(toks, i), F.element_at(toks, i + 1)
-            ),
-        )
-    )
-    return toks_df.select(
-        *key_cols, F.explode(F.concat(toks, bigrams)).alias("g")
-    )
+    grams = F.concat(F.col("__toks"), word_ngrams("__toks", 2))
+    return toks_df.select(*key_cols, F.explode(grams).alias("g"))
 
 
 def dsir_bucket(g: Column, buckets: int, seed: int = 0) -> Column:

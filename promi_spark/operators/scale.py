@@ -1,25 +1,21 @@
-"""Scale machinery: skew salting, two-phase aggregation, bucketed
-co-located joins.
+"""Scale machinery: bucketing, sharding, mixture sampling and layout.
 
 The reference runs single-threaded per pipe (``executor.rs:17-68``) so
 skew never surfaces there; at 100 TB it is the dominant failure mode —
 one hot ``case_id`` (a runaway workflow) or one hot join key lands an
-entire executor's worth of rows on one task. Three mitigations, in the
+entire executor's worth of rows on one task. Two mitigations, in the
 order to try them:
 
 1. **AQE** (on by default in the session): runtime skew-join splitting
-   and partition coalescing; zero code.
-2. **Salting / two-phase aggregation** (this module): deterministic
-   fan-out of hot keys across ``n_salts`` sub-keys, partial-aggregate,
-   then final-aggregate on the true key. Turns one hot partition into
-   ``n_salts`` even ones at the cost of a second (tiny) shuffle.
-3. **Bucketing** (this module): pre-shuffle the table ONCE at write
+   and partition coalescing; zero code. A hot key needs no salting for
+   sum/count/min/max: HashAggregate combines map-side, so the key
+   reaches the exchange as one partial row per partition.
+2. **Bucketing** (this module): pre-shuffle the table ONCE at write
    time (``bucketBy`` on the join/agg key); every later join or
    aggregation on that key skips its exchange entirely — the 100 TB
    amortization play when a table is joined on the same key by many
    queries.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -27,67 +23,6 @@ from pyspark.sql import functions as F
 
 from promi_spark.io import read_parquet
 from promi_spark.lifetime import checkpoint
-
-
-def salt(col: Column | str, n_salts: int, *entropy: Column) -> Column:
-    """Deterministic salt in [0, n_salts): derived from extra row
-    content (``entropy`` columns) so re-executed tasks salt identically
-    (F.rand would break retry determinism at scale).
-
-    Without ``entropy`` the salt hashes (key, partition id): hashing the
-    key alone would give every row of a hot key the SAME salt — zero
-    spread, silently defeating the whole point. Partition id is stable
-    for deterministic inputs (file-split layout), so retries still salt
-    identically; prefer passing real entropy columns (a row id, a
-    timestamp) when the upstream partitioning is itself nondeterministic.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    ent = list(entropy) or [c, F.spark_partition_id()]
-    return F.pmod(F.xxhash64(*ent), F.lit(n_salts))
-
-
-def two_phase_agg(
-    df: DataFrame,
-    key: str,
-    aggs: dict[str, tuple[str, str]],
-    n_salts: int = 16,
-    entropy: list[str] | None = None,
-) -> DataFrame:
-    """Skew-proof aggregation: groupBy (key, salt) -> partial, then
-    groupBy key -> final.
-
-    ``aggs`` maps output column -> (input column, fn) with fn in
-    {sum, count, min, max}: the decomposable aggregates (count re-sums
-    partial counts). Hot keys spread over ``n_salts`` partitions in
-    phase 1; phase 2 shuffles only |keys| x n_salts partial rows.
-    """
-    fns = {"sum": F.sum, "count": F.count, "min": F.min, "max": F.max}
-    ent = [F.col(c) for c in (entropy or [])]
-    salted = df.withColumn("_salt", salt(key, n_salts, *ent))
-    partial = salted.groupBy(key, "_salt").agg(
-        *[
-            fns[fn](F.col(src)).alias(f"_p_{out}")
-            for out, (src, fn) in aggs.items()
-        ]
-    )
-    refold = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
-    return partial.groupBy(key).agg(
-        *[
-            refold[fn](F.col(f"_p_{out}")).alias(out)
-            for out, (src, fn) in aggs.items()
-        ]
-    )
-
-
-def skew_hints(df: DataFrame, key: str, top_n: int = 20) -> DataFrame:
-    """Key-frequency profile (driver decision input: which keys need
-    salting / broadcast isolation). One pass, top-N heaviest keys."""
-    return (
-        df.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .orderBy(F.desc("n_rows"))
-        .limit(top_n)
-    )
 
 
 def write_bucketed(

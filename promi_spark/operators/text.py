@@ -38,6 +38,33 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.trim(c), r"\s+")
 
 
+def word_ngrams(toks: str, n: int) -> Column:
+    """Word ``n``-grams of the token-array column named ``toks``: each
+    window of ``n`` consecutive tokens joined by one space, in token
+    order, duplicates kept. An array of fewer than ``n`` tokens gives
+    an empty array; a NULL array gives NULL.
+
+    Pass a MATERIALIZED token column, aliased by an earlier projection
+    and named here, never an inline ``split``: the gram loop is a
+    higher-order-function lambda, which evaluates interpreted, so a
+    split written under it re-runs per gram index — O(tokens^2) regex
+    work per document (measured: decontaminate 171 s at sf0.1 against
+    ~2 s, repetition_stats 79 s at sf1 against ~3 s). The boundary
+    survives CollapseProject because this expression references the
+    column more than once. Built as one parsed expression: one py4j
+    round trip per call.
+    """
+    if n < 1:
+        raise ValueError("n must be >= 1")
+    t = f"`{toks}`"
+    return F.expr(
+        f"CASE WHEN {t} IS NULL THEN NULL "
+        f"WHEN size({t}) < {n} THEN CAST(array() AS array<string>) "
+        f"ELSE transform(sequence(1, size({t}) - {n - 1}), "
+        f"i -> array_join(slice({t}, i, {n}), ' ')) END"
+    )
+
+
 def token_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.when(F.length(F.trim(c)) == 0, F.lit(0)).otherwise(
@@ -138,18 +165,10 @@ def bigram_lm_scores(
             F.col(key_col).alias("k"), tokens(norm_text(text_col)).alias("toks")
         ).filter(F.size("toks") >= 2)
 
-    def bigrams(col: Column) -> Column:
-        return F.transform(
-            F.sequence(F.lit(1), F.size(col) - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(col, i), F.element_at(col, i + 1)
-            ),
-        )
-
     base = persist(toks_of(df))
     train = base if train_df is None else persist(toks_of(train_df))
     c12 = (
-        train.select(F.explode(bigrams(F.col("toks"))).alias("big"))
+        train.select(F.explode(word_ngrams("toks", 2)).alias("big"))
         .groupBy("big")
         .agg(F.count(F.lit(1)).alias("c12"))
     )
@@ -164,7 +183,7 @@ def bigram_lm_scores(
         F.countDistinct("tok").alias("v")
     )
     bg_doc = base.select(
-        "k", F.posexplode(bigrams(F.col("toks"))).alias("pos", "big")
+        "k", F.posexplode(word_ngrams("toks", 2)).alias("pos", "big")
     ).withColumn("w1", F.element_at(F.split("big", " "), 1))
     p = (F.coalesce("c12", F.lit(0)) + F.lit(alpha)) / (
         F.coalesce("c1", F.lit(0)) + F.lit(alpha) * F.col("v")
@@ -272,29 +291,14 @@ def repetition_stats(
     back to the narrow stats on the doc key. At 100 TB the explode is
     the unavoidable cost of an exact mode; swap in a per-partition
     count-min sketch when approximate top-grams suffice."""
-    # Two-step projection (same reason as ngram_overlap): the gram
-    # transforms slice a MATERIALIZED token column. Higher-order
-    # functions evaluate interpreted, so a split written inline under
-    # the lambda re-executes per gram index —
-    # O(tokens^2) regex work per document (the sf1 soak measured this
-    # exact shape at 79 s vs ~3 s fixed). The boundary survives
-    # CollapseProject because __toks is referenced more than once.
     toks_df = df.select(
         F.col(key_col).alias("k"), tokens(F.col(text_col)).alias("__toks")
     )
-    toks = F.col("__toks")
-
-    def grams(n: int) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-        return F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-        )
-
     base = toks_df.select(
         "k",
-        F.size(toks).alias("n_tokens"),
-        grams(2).alias("g2"),
-        grams(3).alias("g3"),
+        F.size("__toks").alias("n_tokens"),
+        word_ngrams("__toks", 2).alias("g2"),
+        word_ngrams("__toks", 3).alias("g3"),
     )
     stats = base.select(
         "k",
@@ -378,21 +382,7 @@ def ngram_overlap(
     Results are identical to the broadcast mode (the bloom only
     prunes; the join stays exact).
     """
-    # Two-step projection: ``toks`` is materialized as its own column
-    # and the gram transform slices THAT attribute. Higher-order functions evaluate interpreted, so a
-    # split expression written inline under the lambda is re-executed
-    # per gram index — O(tokens^2) regex work per document (measured:
-    # this exact shape made decontaminate the slowest query in the
-    # registry, 171 s at sf0.1 / ~28 min single-task at sf1, vs ~2 s
-    # fixed). The column boundary survives CollapseProject because it
-    # is referenced more than once.
-    toks = F.col("__toks")
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    gr = F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, n), " "))
-        )
-    )
+    gr = F.array_distinct(word_ngrams("__toks", n))
     bench_grams = (
         bench.select(tokens(F.col(text_col)).alias("__toks"))
         .select(F.explode(gr).alias("g"))
@@ -913,32 +903,17 @@ def top_ngrams(
     global sort. Normalization matches :func:`~promi_spark.operators.
     dedup.norm_text` so counts line up with the dedup family.
     """
-    if n < 1:
-        raise ValueError("n must be >= 1")
     from promi_spark.operators.dedup import norm_text
 
-    # Materialize the token array before the gram transform (same
-    # two-step shape as repetition_stats / ngram_overlap): an inline
-    # split under the interpreted higher-order lambda re-tokenizes per
-    # gram index, O(tokens^2) per document.
     toks_df = docs.filter(F.length(F.trim(F.col(text_col))) > 0).select(
         tokens(norm_text(text_col)).alias("__toks")
     )
-    toks = F.col("__toks")
     # Short docs fold into the gram expression as an empty array (which
     # explode drops) rather than a separate size() filter: a filter
     # would be pushed through the projection by substitution and
     # re-evaluate the split once more per row.
-    gram = F.when(F.size(toks) < n, F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(n)]
-            ),
-        )
-    )
     return (
-        toks_df.select(F.explode(gram).alias("gram"))
+        toks_df.select(F.explode(word_ngrams("__toks", n)).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), "gram")

@@ -216,12 +216,6 @@ def _generations(flow: Flow) -> list[list[Pipe]]:
     return gens
 
 
-def _toposort(flow: Flow) -> list[Pipe]:
-    """Flat sender-before-receiver pipe order (the pre-r11 contract,
-    kept for callers that only need an ordering)."""
-    return [p for gen in _generations(flow) for p in gen]
-
-
 def _run_segment(ctx: FlowContext, seg: Segment, log, kind: str):
     entry = get(seg.name)
     if kind not in entry.kinds:

@@ -4,7 +4,7 @@ thresholds, XES round-trip on generated logs."""
 
 import string
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # Driver-side properties (no Spark) ------------------------------------------
@@ -301,6 +301,47 @@ def test_gram_hash_rows_matches_python_model(spark, texts):
         by_norm.setdefault(norm, []).append(sorted(got.get(i, [])))
     for same in by_norm.values():
         assert all(h == same[0] for h in same[1:])
+
+
+@settings(deadline=None, max_examples=12,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    st.lists(
+        st.none() | st.text(alphabet="ab \t\n", max_size=24),
+        min_size=1,
+        max_size=8,
+    )
+)
+@example(["", None, "a", " a \t\n b  ", "a b a b a b"])
+def test_word_ngrams_matches_python_model(spark, texts):
+    """``word_ngrams`` over ``tokens`` gives exactly the Python model's
+    space-joined windows for n = 1..5: empty for documents shorter than
+    n (empty text is the one token ``[""]``), empty tokens from
+    whitespace runs at the edges kept as tokens, and NULL for NULL
+    text."""
+    import re as _re
+
+    from pyspark.sql import functions as F
+
+    from promi_spark.operators.text import tokens, word_ngrams
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    toks_df = df.select("doc_id", tokens(F.col("text")).alias("toks"))
+    got = {
+        r["doc_id"]: r
+        for r in toks_df.select(
+            "doc_id", "toks", *[word_ngrams("toks", n).alias(f"g{n}") for n in range(1, 6)]
+        ).collect()
+    }
+    for i, t in enumerate(texts):
+        # text.tokens(): Spark's trim strips spaces only, then split on \s+
+        toks = None if t is None else _re.split(r"\s+", t.strip(" "))
+        assert got[i]["toks"] == toks, (t, got[i]["toks"])
+        for n in range(1, 6):
+            want = None if toks is None else [
+                " ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)
+            ]
+            assert got[i][f"g{n}"] == want, (t, n, got[i][f"g{n}"])
 
 
 def test_leakage_safe_split_never_straddles(spark):

@@ -534,6 +534,57 @@ def test_corpus_cardinality_null_text_parity_with_oracle(spark, tmp_path):
                 g["distinct_tokens"]) == (o[1], o[2], o[3], o[4]), (src, g, o)
 
 
+def test_null_text_gram_stats_parity_with_oracle(spark, tmp_path):
+    """A NULL-text doc has no token array, so it has no grams: both
+    engines report NULL gram counts and ratios for it, and no top
+    gram. Gram-building that turns the NULL into a one-element [NULL]
+    gram array instead reports one gram with containment 0.0 and a
+    top-2-gram count of 1. No committed fixture has NULL text, so the
+    oracle sweep cannot see this."""
+    import duckdb
+
+    from promi_spark.oracles import ngram_overlap_sql, repetition_stats_sql
+
+    df = spark.createDataFrame(
+        [
+            (0, "the quick brown fox jumps over the lazy dog"),
+            (1, "the quick brown fox jumps again"),
+            (2, None),
+            (3, ""),
+        ],
+        "doc_id long, text string",
+    )
+    p = str(tmp_path / "documents.parquet")
+    df.coalesce(1).write.mode("overwrite").parquet(p)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{p}/*.parquet')"
+    )
+
+    def rows(frame, cols):
+        return sorted(tuple(r[c] for c in cols) for r in frame.collect())
+
+    overlap_cols = ["doc_id", "n_grams", "n_shared", "containment", "contaminated"]
+    want = sorted(con.execute(ngram_overlap_sql(n=5, modulus=10)).fetchall())
+    assert want[1] == (2, None, 0, None, False)
+    for broadcast in (True, False):
+        got = ngram_overlap(
+            df.filter(F.col("doc_id") % 10 != 0),
+            df.filter(F.col("doc_id") % 10 == 0),
+            n=5,
+            broadcast=broadcast,
+        )
+        assert rows(got, overlap_cols) == want, broadcast
+
+    rep_cols = [
+        "doc_id", "n_tokens", "dup_2gram_frac", "dup_3gram_frac",
+        "top_2gram_count", "top_2gram_token_frac",
+    ]
+    want = sorted(con.execute(repetition_stats_sql()).fetchall())
+    assert want[2] == (2, None, None, None, 0, None)
+    assert rows(repetition_stats(df), rep_cols) == want
+
+
 def test_dedup_components_releases_checkpoint_storage(spark):
     """r15 (r14 ADVICE): the loop's checkpoint leaves — the input edge
     list and every superseded round — are released EXPLICITLY as the

@@ -1,17 +1,24 @@
-"""Time a single registered query: cold then warm wall-clock, with the
-physical-plan exchange counts — the per-query developer loop behind
-`bench.py`'s round-level numbers.
+"""Time or explain one registered query — the per-query developer loop
+behind `bench.py`'s round-level numbers, and the audit surface for the
+plan-shape properties that tests/test_plan_shapes.py gates.
 
 Usage:
     python tools/bench_query.py <query_name> [sf_dir] [--runs N]
+    python tools/bench_query.py <query_name> [sf_dir] --mode formatted|extended|cost
+    python tools/bench_query.py --list
 
-Runs the query `--runs` times (default 3: first = cold, rest = warm)
-against `sf_dir` (default $SPARK_GRAFT_SF_DIR or /root/testdata/sf0.1)
-and prints one JSON line.
+Timing runs the query `--runs` times (default 3: first = cold, rest =
+warm) against `sf_dir` (default `bench.SF_DIR`: $SPARK_GRAFT_SF_DIR,
+else the sf0.1 test tables) and prints one JSON line: wall seconds per run,
+the build layer per run (py4j calls and seconds spent constructing the
+DataFrame, counted at the gateway by perfbench's `Py4JCounter`) and the
+physical-plan exchange counts. `--mode` prints the plan in that explain
+mode instead of timing; `--list` prints the registry.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -23,69 +30,68 @@ sys.path.insert(
 
 
 def main() -> int:
-    # Hand-rolled so `--runs N` and `--runs=N` both work (the bare N
-    # after a space must be consumed as the flag's value, not left to
-    # become a positional sf_dir).
-    argv = sys.argv[1:]
-    args: list[str] = []
-    runs = 3
-    i = 0
-    while i < len(argv):
-        a = argv[i]
-        if a.startswith("--runs"):
-            if "=" in a:
-                runs = int(a.split("=", 1)[1])
-            elif i + 1 < len(argv):
-                i += 1
-                runs = int(argv[i])
-            else:
-                print("--runs needs a value", file=sys.stderr)
-                return 2
-        else:
-            args.append(a)
-        i += 1
-    if not args:
-        print(__doc__)
-        return 2
-    name = args[0]
-    sf_dir = (
-        args[1]
-        if len(args) > 1
-        else os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from bench import SF_DIR
+
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
     )
+    ap.add_argument("name", nargs="?")
+    ap.add_argument("sf_dir", nargs="?", default=SF_DIR)
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--mode", choices=("formatted", "extended", "cost"))
+    ap.add_argument("--list", action="store_true")
+    # Intermixed, so flags may sit between the two optional positionals
+    # (`q --runs 5 sf_dir`) without `sf_dir` being rejected as extra.
+    args = ap.parse_intermixed_args()
 
     from promi_spark.queries import QUERIES
+
+    if args.list:
+        for name, (_, sql) in QUERIES.items():
+            print(("oracled  " if sql else "rows-only") + "  " + name)
+        return 0
+    if args.name is None:
+        ap.print_help()
+        return 2
+    if args.name not in QUERIES:
+        print(f"unknown query {args.name!r}; --list shows the registry", file=sys.stderr)
+        return 2
+
+    from perfbench.tracing import Py4JCounter
     from promi_spark.session import get_spark
     from tools.plan_audit import exchange_counts
 
-    if name not in QUERIES:
-        print(f"unknown query {name!r}", file=sys.stderr)
-        return 2
     spark = get_spark("bench_query")
-    fn = QUERIES[name][0]
-    times = []
-    for _ in range(max(1, runs)):
-        t0 = time.monotonic()
-        df = fn(spark, sf_dir)
+    fn = QUERIES[args.name][0]
+    explain_mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
+    if args.mode:
+        df = fn(spark, args.sf_dir)
+        print(df._jdf.queryExecution().explainString(explain_mode.fromString(args.mode)))
+        return 0
+
+    counter = Py4JCounter()
+    counter.install()
+    times, build_sec, build_py4j = [], [], []
+    for _ in range(max(1, args.runs)):
+        calls0, t0 = counter.n, time.monotonic()
+        df = fn(spark, args.sf_dir)
+        build_sec.append(round(time.monotonic() - t0, 3))
+        build_py4j.append(counter.n - calls0)
         df.count()
         times.append(round(time.monotonic() - t0, 3))
-    plan = df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
+    counter.uninstall()
+    plan = df._jdf.queryExecution().explainString(explain_mode.fromString("formatted"))
+    warm = times[1:]
     print(
         json.dumps(
             {
-                "query": name,
-                "sf_dir": sf_dir,
+                "query": args.name,
+                "sf_dir": args.sf_dir,
                 "cold_sec": times[0],
-                "warm_sec": (
-                    round(sum(times[1:]) / len(times[1:]), 3)
-                    if len(times) > 1
-                    else None
-                ),
+                "warm_sec": round(sum(warm) / len(warm), 3) if warm else None,
                 "runs": times,
+                "build_sec": build_sec,
+                "build_py4j_calls": build_py4j,
                 **exchange_counts(plan),
             }
         )
