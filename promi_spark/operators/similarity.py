@@ -804,7 +804,7 @@ def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
     return (F.array_position(arr, F.array_max(arr)) - 1).cast("int")
 
 
-# auto switches unrolled -> kernel above this centroid count. r15
+# ivf_assign switches unrolled -> kernel above this centroid count. r15
 # re-measured the break-even (quiet window, noop sink, min-of-4): the
 # interpreted zip_with fold loses to the Arrow kernel from k=32 up at
 # EVERY corpus size tried (sf1 k=64: 8.45 s vs 1.89 s; k=32: 3.5 vs
@@ -814,7 +814,7 @@ def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
 # plans Python-free. 128 was far past the crossover — semantic_dedup
 # at the sf1 soak spent 8.6 s of its 15.8 s in the 80-centroid
 # interpreted fold.
-_ASSIGN_JOIN_THRESHOLD = 16
+_ASSIGN_KERNEL_THRESHOLD = 16
 
 
 def ivf_assign(
@@ -822,118 +822,77 @@ def ivf_assign(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    strategy: str = "auto",
 ) -> DataFrame:
     """Corpus -> (id, vector, cluster): the build side of an IVF index.
     At scale this is written out partitioned by ``cluster`` so probes
     read only their clusters' files (partition pruning).
 
-    Three physical strategies, identical semantics (argmax of
-    ``2 v.c - ||c||^2``, ties to the lowest centroid index — the exact
-    scores match bit-for-bit because every path accumulates the dot in
-    the same sequential IEEE order and takes ``||c||^2`` from the same
-    Python double):
+    Two physical paths, chosen by centroid count, identical semantics
+    (argmax of ``2 v.c - ||c||^2``, ties to the lowest centroid index —
+    the exact scores match bit-for-bit because both paths accumulate
+    the dot in the same sequential IEEE order and take ``||c||^2`` from
+    the same Python double):
 
-    - ``unrolled`` (auto default up to 16 centroids — the oracle-config
-      quantizer regime): the literal
-      expression — zero joins, the right shape for a coarse quantizer.
-      Literal unrolling beyond that is a PLAN-scale failure, not a
-      data-scale one: k x dim literal nodes (an 800-centroid codebook
-      puts ~51k expression nodes in every operator referencing the
-      cluster column) and analysis/canonicalization cost grows with k.
-    - ``kernel`` (auto default above 16): Arrow-batched numpy — the
-      centroid matrix rides the task closure, scores accumulate
-      dimension-by-dimension across the (batch x k) matrix in fold
-      order, ``np.argmax`` takes the first maximum (= lowest index).
-      Plan is O(1) in k, per-row cost is SIMD instead of the
-      interpreted fold (the r6 sf10 soak measured the join strategy's
-      1.6e8 interpreted folds at ~6 min for 200k vectors x 800 cells;
-      the kernel does the same flops in seconds). Requires fixed-width
-      non-NULL vectors — what an embedding table is.
-    - ``join``: broadcast centroid table + map-side-combined
-      ``min_by`` argmax — the width-agnostic JVM-only fallback with
-      the same O(1) plan; k scored rows per vector stream through a
-      partial aggregate.
-
-    ``strategy`` pins a path explicitly ('unrolled' | 'kernel' |
-    'join'); 'auto' switches unrolled -> kernel at the 16-centroid
-    threshold.
+    - unrolled (up to 16 centroids — the oracle-config quantizer
+      regime): the literal expression — zero joins, the right shape for
+      a coarse quantizer. Literal unrolling beyond that is a PLAN-scale
+      failure, not a data-scale one: k x dim literal nodes (an
+      800-centroid codebook puts ~51k expression nodes in every
+      operator referencing the cluster column) and analysis/
+      canonicalization cost grows with k.
+    - kernel (above 16): Arrow-batched numpy — the centroid matrix
+      rides the task closure, scores accumulate dimension-by-dimension
+      across the (batch x k) matrix in fold order, ``np.argmax`` takes
+      the first maximum (= lowest index). Plan is O(1) in k, per-row
+      cost is SIMD instead of an interpreted fold (the r6 sf10 soak
+      measured 1.6e8 interpreted folds at ~6 min for 200k vectors x 800
+      cells; the kernel does the same flops in seconds). Requires
+      fixed-width non-NULL vectors — what an embedding table is.
     """
-    if strategy not in ("auto", "unrolled", "join", "kernel"):
-        raise ValueError(f"unknown ivf_assign strategy: {strategy!r}")
-    if strategy == "unrolled" or (
-        strategy == "auto" and len(centroids) <= _ASSIGN_JOIN_THRESHOLD
-    ):
+    if len(centroids) <= _ASSIGN_KERNEL_THRESHOLD:
         v = _as_double(F.col(vec_col))
         return df.select(
             F.col(id_col),
             F.col(vec_col),
             _nearest_centroid(v, centroids).alias("cluster"),
         )
-    if strategy in ("auto", "kernel"):
-        import numpy as np
+    import numpy as np
 
-        C = np.array([[float(x) for x in c] for c in centroids])
-        c2 = np.array([float(sum(x * x for x in c)) for c in centroids])
-        id_type = df.schema[id_col].dataType.simpleString()
-        vec_type = df.schema[vec_col].dataType.simpleString()
+    C = np.array([[float(x) for x in c] for c in centroids])
+    c2 = np.array([float(sum(x * x for x in c)) for c in centroids])
+    id_type = df.schema[id_col].dataType.simpleString()
+    vec_type = df.schema[vec_col].dataType.simpleString()
 
-        def assign(batches):
-            import pandas as pd
+    def assign(batches):
+        import pandas as pd
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                try:
-                    V = np.stack(
-                        [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-                    )
-                except ValueError as exc:
-                    raise ValueError(
-                        "ivf_assign kernel strategy needs fixed-width "
-                        "vectors; use strategy='join' for ragged data"
-                    ) from exc
-                acc = np.zeros((len(V), len(C)))
-                for i in range(V.shape[1]):
-                    acc = acc + np.multiply.outer(V[:, i], C[:, i])
-                scores = 2.0 * acc - c2[None, :]
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col],
-                        vec_col: pdf[vec_col],
-                        "cluster": np.argmax(scores, axis=1).astype("int32"),
-                    }
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            try:
+                V = np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
                 )
+            except ValueError as exc:
+                raise ValueError(
+                    "ivf_assign needs fixed-width non-NULL vectors above "
+                    f"{_ASSIGN_KERNEL_THRESHOLD} centroids"
+                ) from exc
+            acc = np.zeros((len(V), len(C)))
+            for i in range(V.shape[1]):
+                acc = acc + np.multiply.outer(V[:, i], C[:, i])
+            scores = 2.0 * acc - c2[None, :]
+            yield pd.DataFrame(
+                {
+                    id_col: pdf[id_col],
+                    vec_col: pdf[vec_col],
+                    "cluster": np.argmax(scores, axis=1).astype("int32"),
+                }
+            )
 
-        return df.select(id_col, vec_col).mapInPandas(
-            assign,
-            schema=f"{id_col} {id_type}, {vec_col} {vec_type}, cluster int",
-        )
-    spark = df.sparkSession
-    cent_df = spark.createDataFrame(
-        [
-            (i, [float(x) for x in c], float(sum(x * x for x in c)))
-            for i, c in enumerate(centroids)
-        ],
-        "c_idx int, c array<double>, c2 double",
-    )
-    scored = (
-        df.select(
-            F.col(id_col), F.col(vec_col), _as_double(F.col(vec_col)).alias("__v")
-        )
-        .crossJoin(F.broadcast(cent_df))
-        .select(
-            id_col,
-            vec_col,
-            "c_idx",
-            (2.0 * dot(F.col("__v"), F.col("c")) - F.col("c2")).alias("__s"),
-        )
-    )
-    return scored.groupBy(id_col).agg(
-        F.first(vec_col).alias(vec_col),
-        F.min_by(
-            F.col("c_idx"), F.struct((-F.col("__s")).alias("s"), F.col("c_idx"))
-        ).alias("cluster"),
+    return df.select(id_col, vec_col).mapInPandas(
+        assign,
+        schema=f"{id_col} {id_type}, {vec_col} {vec_type}, cluster int",
     )
 
 

@@ -122,8 +122,9 @@ def load_flow(config: str | dict) -> Flow:
 def validate_flow(flow: Flow) -> None:
     """Check every segment against its registry entry's typed parameter
     declarations (reference ``Declaration``, ``plugin.rs:19-371``):
-    unknown operator names, unknown/mistyped attributes, and missing
-    required parameters raise :class:`FlowConfigError` naming the pipe,
+    unknown operator names, unknown/mistyped attributes, missing
+    required parameters, and stream channels on a segment whose
+    function takes none raise :class:`FlowConfigError` naming the pipe,
     segment, and parameter — before anything executes."""
     sent: set[str] = set()
     received: list[tuple[str, str, str]] = []
@@ -152,6 +153,14 @@ def validate_flow(flow: Flow) -> None:
                     f"used as a {kind} (kinds: {sorted(entry.kinds)})"
                 )
             entry.validate(seg.attributes, f"{pipe.name}/{seg.name}")
+            for chans, arg, key in ((seg.stream_sender, "_send", "stream_sender"),
+                                    (seg.stream_receiver, "_recv", "stream_receiver")):
+                if chans and arg not in entry.channels:
+                    raise FlowConfigError(
+                        f"pipe {pipe.name!r}: segment {seg.name!r} takes no "
+                        f"{key} (channels {chans}); its function has no "
+                        f"{arg} parameter"
+                    )
             for ch in list(seg.stream_sender) + list(seg.artifact_sender):
                 where = f"{pipe.name}/{seg.name}"
                 if ch in senders:
@@ -216,10 +225,8 @@ def _generations(flow: Flow) -> list[list[Pipe]]:
     return gens
 
 
-def _run_segment(ctx: FlowContext, seg: Segment, log, kind: str):
+def _run_segment(ctx: FlowContext, seg: Segment, log):
     entry = get(seg.name)
-    if kind not in entry.kinds:
-        raise ValueError(f"{seg.name} cannot be used as a {kind}")
     attrs = dict(seg.attributes)
     if seg.stream_sender:
         attrs["_send"] = seg.stream_sender
@@ -236,11 +243,11 @@ def _run_segment(ctx: FlowContext, seg: Segment, log, kind: str):
 
 
 def _run_pipe(ctx: FlowContext, pipe: Pipe) -> None:
-    log = _run_segment(ctx, pipe.source, None, "source")
+    log = _run_segment(ctx, pipe.source, None)
     for seg in pipe.streams:
-        log = _run_segment(ctx, seg, log, "stream")
+        log = _run_segment(ctx, seg, log)
     if pipe.sink is not None:
-        _run_segment(ctx, pipe.sink, log, "sink")
+        _run_segment(ctx, pipe.sink, log)
 
 
 # Concurrent pipes per generation. Spark's scheduler accepts job

@@ -10,6 +10,11 @@ sinks consume one (returning None or an artifact). ``ctx`` carries the
 SparkSession, the named stream/artifact channels, and the base dir for
 relative paths.
 
+The signature is the declaration: each named parameter after ``(ctx,
+log)`` is an attribute of its annotated type (``T | None`` is ``T``;
+``Annotated[T, "..."]`` adds a description) and default (none =
+required); ``_send``/``_recv`` take stream_sender/receiver channels.
+
 Pre-loaded entries mirror the reference's
 (``void.rs:33-57``, ``duplicator.rs:70-92``, ``stats.rs:143-163``,
 ``validator.rs:35-54``, ``repair.rs:40-59``, ``split.rs:90-147``,
@@ -19,8 +24,10 @@ Pre-loaded entries mirror the reference's
 
 from __future__ import annotations
 
+import inspect
+import types
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Annotated, Any, Callable, Union, get_args, get_origin, get_type_hints
 
 from promi_spark.lifetime import persist
 from promi_spark.log import EventLog
@@ -54,9 +61,9 @@ _TYPE_NAMES = {str: "String", float: "Float", int: "Int", bool: "Boolean",
 
 @dataclass(frozen=True)
 class Param:
-    """Typed parameter declaration (reference ``Declaration`` attribute
-    specs with defaults, ``plugin.rs:19-371``; registration e.g.
-    ``split.rs:90-147``). ``default=_REQUIRED`` marks a mandatory
+    """One declared attribute, read from a segment function's signature
+    (reference ``Declaration`` attribute specs with defaults,
+    ``plugin.rs:19-371``). ``default=_REQUIRED`` marks a mandatory
     attribute; ``type`` is the expected Python scalar type (``float``
     accepts ints; ``bool`` is NOT accepted for ``int``/``float``)."""
 
@@ -64,6 +71,16 @@ class Param:
     type: type
     default: Any = _REQUIRED
     description: str = ""
+
+    @classmethod
+    def from_signature(cls, p: inspect.Parameter, hint: Any) -> Param:
+        description = ""
+        if get_origin(hint) is Annotated:
+            hint, description = hint.__origin__, hint.__metadata__[0]
+        if get_origin(hint) in (Union, types.UnionType):  # T | None is T
+            (hint,) = [a for a in get_args(hint) if a is not type(None)]
+        default = _REQUIRED if p.default is p.empty else p.default
+        return cls(p.name, hint, default, description)
 
     @property
     def required(self) -> bool:
@@ -90,7 +107,18 @@ class OpEntry:
     description: str
     kinds: frozenset[str]  # subset of {source, stream, sink}
     fn: Callable
-    params: tuple[Param, ...] = ()
+    # read from fn's signature once, here: the attribute declarations,
+    # and which of the _send/_recv channel parameters fn takes
+    params: tuple[Param, ...] = field(init=False)
+    channels: frozenset[str] = field(init=False)
+
+    def __post_init__(self):
+        hints = get_type_hints(self.fn, include_extras=True)
+        named = [p for p in list(inspect.signature(self.fn).parameters.values())[2:]
+                 if p.kind is not p.VAR_KEYWORD]
+        self.params = tuple(Param.from_signature(p, hints[p.name])
+                            for p in named if not p.name.startswith("_"))
+        self.channels = frozenset(p.name for p in named if p.name.startswith("_"))
 
     def __call__(self, ctx, log, **attrs):
         return self.fn(ctx, log, **attrs)
@@ -126,15 +154,20 @@ class OpEntry:
 REGISTRY: dict[str, OpEntry] = {}
 
 
-def register(name: str, description: str, kinds: set[str],
-             params: list[Param] | None = None):
+def register(name: str, description: str, kinds: set[str]):
     def deco(fn):
-        REGISTRY[name] = OpEntry(
-            name, description, frozenset(kinds), fn, tuple(params or ())
-        )
+        REGISTRY[name] = OpEntry(name, description, frozenset(kinds), fn)
         return fn
 
     return deco
+
+
+def _received(ctx, recv, needs: str):
+    """The relation on a segment's first stream_receiver channel."""
+    if not recv:
+        raise FlowConfigError(f"{needs} on a stream_receiver channel")
+    got = ctx.streams[recv[0]]
+    return got.df if hasattr(got, "df") else got
 
 
 def get(name: str) -> OpEntry:
@@ -164,20 +197,18 @@ def _void(ctx, log, **attrs):
     return None
 
 
-@register("XesReader", "XES file source (xes.rs:562-714)", {"source"},
-          params=[Param("path", str, description="XES file path"),
-                  Param("distributed", bool, False)])
-def _xes_reader(ctx, log, path: str, distributed: bool = False, **_):
+@register("XesReader", "XES file source (xes.rs:562-714)", {"source"})
+def _xes_reader(ctx, log, path: Annotated[str, "XES file path"],
+                distributed: bool = False, **_):
     from promi_spark.io.xes import read_xes, read_xes_distributed
 
     fn = read_xes_distributed if distributed else read_xes
     return fn(ctx.spark, ctx.path(path))
 
 
-@register("XesWriter", "XES file sink (xes.rs:717-796)", {"sink"},
-          params=[Param("path", str, description="output XES path"),
-                  Param("indent", int, 1)])
-def _xes_writer(ctx, log, path: str, indent: int = 1, **_):
+@register("XesWriter", "XES file sink (xes.rs:717-796)", {"sink"})
+def _xes_writer(ctx, log, path: Annotated[str, "output XES path"],
+                indent: int = 1, **_):
     from promi_spark.io.xes import write_xes
 
     write_xes(log, ctx.path(path))
@@ -193,9 +224,7 @@ def _statistics(ctx, log, **_):
 
 
 @register("Validator", "meta/global/chronology validation (validator.rs:19-116)",
-          {"stream"},
-          params=[Param("strict", bool, False),
-                  Param("max_collect", int, 100)])
+          {"stream"})
 def _validator(ctx, log, strict: bool = False, max_collect: int = 100, **_):
     from promi_spark.operators.validate import classifier_name_violations, validate
 
@@ -220,10 +249,9 @@ def _repair(ctx, log, **_):
 
 
 @register("Sample", "seeded Bernoulli keep-ratio sample (split.rs:121-144)",
-          {"stream"},
-          params=[Param("ratio", float, description="keep probability in [0,1]"),
-                  Param("seed", int, 0)])
-def _sample(ctx, log, ratio: float, seed: int = 0, **_):
+          {"stream"})
+def _sample(ctx, log, ratio: Annotated[float, "keep probability in [0,1]"],
+            seed: int = 0, **_):
     from promi_spark.operators.split import sample
 
     # per-operator salt decorrelates from a same-seed Split downstream
@@ -231,10 +259,9 @@ def _sample(ctx, log, ratio: float, seed: int = 0, **_):
 
 
 @register("Split", "seeded train/test split (split.rs:18-88); test side "
-          "goes to the segment's stream_sender channel", {"stream"},
-          params=[Param("ratio", float, description="train fraction in [0,1]"),
-                  Param("seed", int, 0)])
-def _split(ctx, log, ratio: float, seed: int = 0, _send=None, **_):
+          "goes to the segment's stream_sender channel", {"stream"})
+def _split(ctx, log, ratio: Annotated[float, "train fraction in [0,1]"],
+           seed: int = 0, _send=None, **_):
     from promi_spark.operators.split import split
 
     train, test = split(log, float(ratio), seed=int(seed), salt="Split")
@@ -265,11 +292,10 @@ def _sender(ctx, log, _send=None, **_):
 @register("Receiver", "stream-channel receiver endpoint (channel.rs:75-159)",
           {"source"})
 def _receiver(ctx, log, _recv=None, **_):
-    chans = _recv or []
-    if not chans:
-        raise ValueError("Receiver needs a stream_receiver channel")
-    out = ctx.streams[chans[0]]
-    for ch in chans[1:]:  # fan-in = UNION (segment.rs:186-199)
+    if not _recv:
+        raise FlowConfigError("Receiver needs a stream_receiver channel")
+    out = ctx.streams[_recv[0]]
+    for ch in _recv[1:]:  # fan-in = UNION (segment.rs:186-199)
         out = out.union(ctx.streams[ch])
     return out
 
@@ -279,20 +305,16 @@ def _receiver(ctx, log, _recv=None, **_):
 # ---------------------------------------------------------------------------
 
 
-@register("ParquetReader", "events parquet -> EventLog", {"source"},
-          params=[Param("path", str, description="parquet path")])
-def _parquet_reader(ctx, log, path: str, **_):
+@register("ParquetReader", "events parquet -> EventLog", {"source"})
+def _parquet_reader(ctx, log, path: Annotated[str, "parquet path"], **_):
     from promi_spark.io import read_parquet
 
     return EventLog.from_events(read_parquet(ctx.spark, ctx.path(path)))
 
 
-@register("ParquetWriter", "EventLog -> parquet (partitionable)", {"sink"},
-          params=[Param("path", str, description="parquet output path"),
-                  Param("mode", str, "overwrite"),
-                  Param("partition_by", str, None)])
-def _parquet_writer(ctx, log, path: str, mode: str = "overwrite",
-                    partition_by: str | None = None, **_):
+@register("ParquetWriter", "EventLog -> parquet (partitionable)", {"sink"})
+def _parquet_writer(ctx, log, path: Annotated[str, "parquet output path"],
+                    mode: str = "overwrite", partition_by: str | None = None, **_):
     # sinks both log pipes (EventLog) and document pipes (DataFrame)
     df = log.df if hasattr(log, "df") else log
     w = df.write.mode(mode)
@@ -302,9 +324,8 @@ def _parquet_writer(ctx, log, path: str, mode: str = "overwrite",
 
 
 @register("EventsTable", "driver synthetic events table -> EventLog",
-          {"source"},
-          params=[Param("sf_dir", str, description="testdata sf directory")])
-def _events_table(ctx, log, sf_dir: str, **_):
+          {"source"})
+def _events_table(ctx, log, sf_dir: Annotated[str, "testdata sf directory"], **_):
     from promi_spark.io import load_event_log
 
     return load_event_log(ctx.spark, sf_dir)
@@ -323,9 +344,8 @@ def _events_table(ctx, log, sf_dir: str, **_):
 
 
 @register("DocumentsTable", "documents parquet -> DataFrame corpus",
-          {"source"},
-          params=[Param("sf_dir", str, description="testdata sf directory")])
-def _documents_table(ctx, log, sf_dir: str, **_):
+          {"source"})
+def _documents_table(ctx, log, sf_dir: Annotated[str, "testdata sf directory"], **_):
     from promi_spark.io import load_table
 
     return load_table(ctx.spark, "documents", sf_dir)
@@ -334,14 +354,10 @@ def _documents_table(ctx, log, sf_dir: str, **_):
 @register("QualityFilter",
           "drop documents failing quality thresholds (token count, "
           "punctuation ratio, stopword ratio, language) — one narrow "
-          "codegen pass, no shuffle", {"stream"},
-          params=[Param("min_tokens", int, 0),
-                  Param("max_punct_ratio", float, 1.0),
-                  Param("min_stopword_ratio", float, 0.0),
-                  Param("lang", str, None, "keep only this lang_pred"),
-                  Param("text_col", str, "text")])
+          "codegen pass, no shuffle", {"stream"})
 def _quality_filter(ctx, df, min_tokens: int = 0, max_punct_ratio: float = 1.0,
-                    min_stopword_ratio: float = 0.0, lang: str | None = None,
+                    min_stopword_ratio: float = 0.0,
+                    lang: Annotated[str | None, "keep only this lang_pred"] = None,
                     text_col: str = "text", **_):
     from pyspark.sql import functions as F
 
@@ -378,8 +394,7 @@ def _quality_filter(ctx, df, min_tokens: int = 0, max_punct_ratio: float = 1.0,
 
 @register("CorpusStats", "pass-through corpus profile artifact: doc "
           "count, token totals, mean quality signals (one aggregation "
-          "job — the documents analog of Statistics)", {"stream"},
-          params=[Param("text_col", str, "text")])
+          "job — the documents analog of Statistics)", {"stream"})
 def _corpus_stats(ctx, df, text_col: str = "text", **_):
     from pyspark.sql import functions as F
 
@@ -398,8 +413,7 @@ def _corpus_stats(ctx, df, text_col: str = "text", **_):
 @register("DfgArtifact", "pass-through directly-follows artifact: the "
           "alphabet^2-bounded DFG edge list released on an artifact "
           "channel (reference observer family, observer.rs:44-47 — "
-          "the model-mining analog of Statistics)", {"stream"},
-          params=[Param("endpoints", bool, False)])
+          "the model-mining analog of Statistics)", {"stream"})
 def _dfg_artifact(ctx, log, endpoints: bool = False, **_):
     from promi_spark.operators.dfg import directly_follows
 
@@ -414,8 +428,7 @@ def _dfg_artifact(ctx, log, endpoints: bool = False, **_):
 
 @register("PiiScrub", "replace emails/IPv4s/phone numbers with typed "
           "placeholders in-place (narrow codegen regexp pass)",
-          {"stream"},
-          params=[Param("text_col", str, "text")])
+          {"stream"})
 def _pii_scrub(ctx, df, text_col: str = "text", **_):
     from promi_spark.operators.text import scrubbed_text
 
@@ -424,11 +437,8 @@ def _pii_scrub(ctx, df, text_col: str = "text", **_):
 
 @register("ExactDedup", "keep the min-key representative per identical "
           "normalized text: one window over the md5 fingerprint, single "
-          "shuffle, no join", {"stream"},
-          params=[Param("key_col", str, "doc_id"),
-                  Param("text_col", str, "text")])
-def _exact_dedup(ctx, df, key_col: str = "doc_id", text_col: str = "text",
-                 **_):
+          "shuffle, no join", {"stream"})
+def _exact_dedup(ctx, df, key_col: str = "doc_id", text_col: str = "text", **_):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -450,17 +460,13 @@ def _exact_dedup(ctx, df, key_col: str = "doc_id", text_col: str = "text",
           "transitive=true clusters the pair graph into connected "
           "components and keeps one representative per component "
           "(min key, or the keep_best_col-maximal member when set)",
-          {"stream"},
-          params=[Param("threshold", float, 0.7, "Jaccard threshold"),
-                  Param("transitive", bool, False),
-                  Param("key_col", str, "doc_id"),
-                  Param("text_col", str, "text"),
-                  Param("keep_best_col", str, "",
-                        "quality column: keep the highest-quality "
-                        "member per component (implies clustering)")])
-def _near_dup_dedup(ctx, df, threshold: float = 0.7,
-                    transitive: bool = False, key_col: str = "doc_id",
-                    text_col: str = "text", keep_best_col: str = "", **_):
+          {"stream"})
+def _near_dup_dedup(
+        ctx, df, threshold: Annotated[float, "Jaccard threshold"] = 0.7,
+        transitive: bool = False, key_col: str = "doc_id", text_col: str = "text",
+        keep_best_col: Annotated[str, "quality column: keep the highest-quality "
+                                 "member per component (implies clustering)"] = "",
+        **_):
     from pyspark.sql import functions as F
 
     from promi_spark.operators.dedup import (
@@ -485,15 +491,9 @@ def _near_dup_dedup(ctx, df, threshold: float = 0.7,
 @register("MixtureSample", "deterministic stratified sampling: keep "
           "each row with the per-stratum rate via the engine-portable "
           "md5 coin (zero shuffles; rate increases are supersets)",
-          {"stream"},
-          params=[Param("rates", dict,
-                        description="stratum -> keep rate in [0, 1]"),
-                  Param("strata_col", str, "source"),
-                  Param("key", str, "doc_id"),
-                  Param("seed", int, 0),
-                  Param("default_rate", float, 0.0)])
-def _mixture_sample(ctx, df, rates: dict, strata_col: str = "source",
-                    key: str = "doc_id", seed: int = 0,
+          {"stream"})
+def _mixture_sample(ctx, df, rates: Annotated[dict, "stratum -> keep rate in [0, 1]"],
+                    strata_col: str = "source", key: str = "doc_id", seed: int = 0,
                     default_rate: float = 0.0, **_):
     from promi_spark.operators.scale import mixture_sample
 
@@ -517,21 +517,15 @@ def _mixture_sample(ctx, df, rates: dict, strata_col: str = "source",
           "(the multilingual-LM sampling rule): per-source keep rates "
           "(n_i/n_ref)^(alpha-1) derived in-plan from exact integer "
           "token sums; same md5 coin family as MixtureSample",
-          {"stream"},
-          params=[Param("alpha", float,
-                        description="temperature in (0, inf); <1 flattens"
-                        " the mix, 1 is the identity"),
-                  Param("source_col", str, "source"),
-                  Param("text_col", str, "text"),
-                  Param("key", str, "doc_id"),
-                  Param("seed", int, 0)])
-def _temperature_mixture(ctx, df, alpha: float, source_col: str = "source",
-                         text_col: str = "text", key: str = "doc_id",
-                         seed: int = 0, **_):
+          {"stream"})
+def _temperature_mixture(
+        ctx, df, alpha: Annotated[float, "temperature in (0, inf); <1 flattens"
+                                  " the mix, 1 is the identity"],
+        source_col: str = "source", text_col: str = "text", key: str = "doc_id",
+        seed: int = 0, **_):
     from promi_spark.operators.scale import temperature_mixture
 
-    if isinstance(alpha, bool) or not isinstance(alpha, (int, float)) \
-            or not float(alpha) > 0.0:
+    if not alpha > 0.0:
         raise FlowConfigError(
             f"TemperatureMixture: alpha must be a positive number, "
             f"got {alpha!r}"
@@ -546,18 +540,13 @@ def _temperature_mixture(ctx, df, alpha: float, source_col: str = "source",
           "PERSISTED benchmark Bloom sketch (write_bench_bloom): "
           "batch-proportional probe, fixed-size broadcast, zero false "
           "negatives",
-          {"stream"},
-          params=[Param("index_path", str,
-                        description="path written by write_bench_bloom"),
-                  Param("key", str, "doc_id"),
-                  Param("text_col", str, "text"),
-                  Param("min_shared", int, 1),
-                  Param("action", str, "drop",
-                        "'drop' removes flagged docs; 'flag' keeps all "
-                        "rows and adds the contaminated column")])
-def _bloom_decontaminate(ctx, df, index_path: str, key: str = "doc_id",
-                         text_col: str = "text", min_shared: int = 1,
-                         action: str = "drop", **_):
+          {"stream"})
+def _bloom_decontaminate(
+        ctx, df, index_path: Annotated[str, "path written by write_bench_bloom"],
+        key: str = "doc_id", text_col: str = "text", min_shared: int = 1,
+        action: Annotated[str, "'drop' removes flagged docs; 'flag' keeps all "
+                          "rows and adds the contaminated column"] = "drop",
+        **_):
     from pyspark.sql import functions as F
 
     from promi_spark.operators.bloom import decontaminate_bloom
@@ -584,27 +573,15 @@ def _bloom_decontaminate(ctx, df, index_path: str, key: str = "doc_id",
           "keep the k raw docs Gumbel-top-k-sampled proportional to the "
           "hashed-n-gram target/raw likelihood ratio; the TARGET corpus "
           "arrives on the segment's stream_receiver channel",
-          {"stream"},
-          params=[Param("k", int, description="rows to select"),
-                  Param("key", str, "doc_id"),
-                  Param("text_col", str, "text"),
-                  Param("buckets", int, 8192),
-                  Param("smoothing", float, 1.0),
-                  Param("seed", int, 0)])
-def _dsir_select(ctx, df, k: int, key: str = "doc_id",
+          {"stream"})
+def _dsir_select(ctx, df, k: Annotated[int, "rows to select"], key: str = "doc_id",
                  text_col: str = "text", buckets: int = 8192,
                  smoothing: float = 1.0, seed: int = 0, _recv=None, **_):
     from promi_spark.operators.dsir import dsir_select
 
-    if not _recv:
-        raise FlowConfigError(
-            "DsirSelect needs the target corpus on a stream_receiver "
-            "channel"
-        )
-    if isinstance(k, bool) or not isinstance(k, int) or k < 1:
+    target_df = _received(ctx, _recv, "DsirSelect needs the target corpus")
+    if k < 1:
         raise FlowConfigError(f"DsirSelect: k must be a positive int, got {k!r}")
-    target = ctx.streams[_recv[0]]
-    target_df = target.df if hasattr(target, "df") else target
     raw_df = df.df if hasattr(df, "df") else df
     picked = dsir_select(
         raw_df, target_df, k, key_cols=key, text_col=text_col,
@@ -616,20 +593,14 @@ def _dsir_select(ctx, df, k: int, key: str = "doc_id",
 @register("ClusterPrune", "prototype-based data pruning (Sorscher et "
           "al. 2022): drop the frac most-prototypical rows per "
           "embedding cluster, keep the informative tail",
-          {"stream"},
-          params=[Param("frac", float,
-                        description="fraction dropped per cluster, [0, 1)"),
-                  Param("n_clusters", int, 16),
-                  Param("id_col", str, "vec_id"),
-                  Param("vec_col", str, "embedding"),
-                  Param("seed", int, 42)])
-def _cluster_prune(ctx, df, frac: float, n_clusters: int = 16,
-                   id_col: str = "vec_id", vec_col: str = "embedding",
-                   seed: int = 42, **_):
+          {"stream"})
+def _cluster_prune(
+        ctx, df, frac: Annotated[float, "fraction dropped per cluster, [0, 1)"],
+        n_clusters: int = 16, id_col: str = "vec_id", vec_col: str = "embedding",
+        seed: int = 42, **_):
     from promi_spark.operators.similarity import cluster_prune
 
-    if isinstance(frac, bool) or not isinstance(frac, (int, float)) \
-            or not 0.0 <= float(frac) < 1.0:
+    if not 0.0 <= frac < 1.0:
         raise FlowConfigError(
             f"ClusterPrune: frac must be a number in [0, 1), got {frac!r}"
         )
@@ -645,15 +616,13 @@ def _cluster_prune(ctx, df, frac: float, n_clusters: int = 16,
           "of every value at or above the threshold; identical to "
           "GROUP BY ... HAVING with the long tail filtered before the "
           "exchange",
-          {"stream"},
-          params=[Param("col", str, description="column to count"),
-                  Param("min_count", int, None,
-                        "absolute threshold (exactly one of min_count /"
-                        " min_frac)"),
-                  Param("min_frac", float, None,
-                        "fractional threshold in (0, 1)")])
-def _heavy_hitters(ctx, df, col: str, min_count: int | None = None,
-                   min_frac: float | None = None, **_):
+          {"stream"})
+def _heavy_hitters(
+        ctx, df, col: Annotated[str, "column to count"],
+        min_count: Annotated[int | None, "absolute threshold (exactly one of "
+                             "min_count / min_frac)"] = None,
+        min_frac: Annotated[float | None, "fractional threshold in (0, 1)"] = None,
+        **_):
     from promi_spark.operators.sketch import heavy_hitters
 
     try:
@@ -666,16 +635,12 @@ def _heavy_hitters(ctx, df, col: str, min_count: int | None = None,
 @register("PerKeyCap", "domain cap: keep at most n rows per key by "
           "md5-coin rank (C4/RefinedWeb-style 'no domain contributes "
           "more than n docs'; partitioning-invariant kept set)",
-          {"stream"},
-          params=[Param("n", int, description="max rows kept per key"),
-                  Param("key_col", str, "source"),
-                  Param("id_col", str, "doc_id"),
-                  Param("seed", int, 0)])
-def _per_key_cap(ctx, df, n: int, key_col: str = "source",
-                 id_col: str = "doc_id", seed: int = 0, **_):
+          {"stream"})
+def _per_key_cap(ctx, df, n: Annotated[int, "max rows kept per key"],
+                 key_col: str = "source", id_col: str = "doc_id", seed: int = 0, **_):
     from promi_spark.operators.split import per_key_cap
 
-    if isinstance(n, bool) or not isinstance(n, int) or n < 1:
+    if n < 1:
         raise FlowConfigError(f"PerKeyCap: n must be a positive int, got {n!r}")
     return per_key_cap(df, key_col, n, id_col, seed=seed)
 
@@ -683,22 +648,16 @@ def _per_key_cap(ctx, df, n: int, key_col: str = "source",
 @register("WeightedSample", "weighted sampling without replacement "
           "(Efraimidis-Spirakis A-ES on the engine-portable md5 "
           "uniform); k per key, or global top-k when key_col is unset",
-          {"stream"},
-          params=[Param("k", int, description="rows kept (per key)"),
-                  Param("weight_col", str,
-                        description="positive weight column"),
-                  Param("id_col", str, "doc_id"),
-                  Param("key_col", str, None, "stratify key; None = global"),
-                  Param("seed", int, 0)])
-def _weighted_sample(ctx, df, k: int, weight_col: str,
-                     id_col: str = "doc_id", key_col: str | None = None,
-                     seed: int = 0, **_):
+          {"stream"})
+def _weighted_sample(
+        ctx, df, k: Annotated[int, "rows kept (per key)"],
+        weight_col: Annotated[str, "positive weight column"], id_col: str = "doc_id",
+        key_col: Annotated[str | None, "stratify key; None = global"] = None,
+        seed: int = 0, **_):
     from promi_spark.operators.split import weighted_sample
 
-    if isinstance(k, bool) or not isinstance(k, int) or k < 1:
-        raise FlowConfigError(
-            f"WeightedSample: k must be a positive int, got {k!r}"
-        )
+    if k < 1:
+        raise FlowConfigError(f"WeightedSample: k must be a positive int, got {k!r}")
     return weighted_sample(df, k, weight_col, id_col, key_col=key_col,
                            seed=seed)
 
@@ -706,17 +665,13 @@ def _weighted_sample(ctx, df, k: int, weight_col: str,
 @register("ChunkDocs", "overlapping fixed-size character chunking "
           "(narrow sequence-explode + substring; feeds embedding / "
           "retrieval indexing)",
-          {"stream"},
-          params=[Param("chunk_chars", int, 512),
-                  Param("stride", int, 384),
-                  Param("text_col", str, "text"),
-                  Param("id_col", str, "doc_id")])
+          {"stream"})
 def _chunk_docs(ctx, df, chunk_chars: int = 512, stride: int = 384,
                 text_col: str = "text", id_col: str = "doc_id", **_):
     from promi_spark.operators.text import chunk_docs
 
     for nm, v in (("chunk_chars", chunk_chars), ("stride", stride)):
-        if isinstance(v, bool) or not isinstance(v, int) or v < 1:
+        if v < 1:
             raise FlowConfigError(
                 f"ChunkDocs: {nm} must be a positive int, got {v!r}"
             )
@@ -728,16 +683,12 @@ def _chunk_docs(ctx, df, chunk_chars: int = 512, stride: int = 384,
           "component (MinHash pairs -> connected components) so no "
           "test doc has a train-side near-duplicate; adds a 'split' "
           "column, or filters to one side when 'side' is set",
-          {"stream"},
-          params=[Param("ratio", float, description="train fraction"),
-                  Param("side", str, None, "'train' or 'test' to filter"),
-                  Param("threshold", float, 0.7, "Jaccard threshold"),
-                  Param("key_col", str, "doc_id"),
-                  Param("text_col", str, "text"),
-                  Param("seed", int, 0)])
-def _leakage_safe_split(ctx, df, ratio: float, side: str | None = None,
-                        threshold: float = 0.7, key_col: str = "doc_id",
-                        text_col: str = "text", seed: int = 0, **_):
+          {"stream"})
+def _leakage_safe_split(
+        ctx, df, ratio: Annotated[float, "train fraction"],
+        side: Annotated[str | None, "'train' or 'test' to filter"] = None,
+        threshold: Annotated[float, "Jaccard threshold"] = 0.7,
+        key_col: str = "doc_id", text_col: str = "text", seed: int = 0, **_):
     from pyspark.sql import functions as F
 
     from promi_spark.operators.dedup import leakage_safe_split, minhash_dedup
@@ -755,22 +706,16 @@ def _leakage_safe_split(ctx, df, ratio: float, side: str | None = None,
 
 @register("QualityScore", "learned quality filter: weak-label bootstrap "
           "-> hashed-ngram logistic fit (MLlib) -> score every doc; "
-          "adds quality_prob, drops rows under min_prob", {"stream"},
-          params=[Param("min_prob", float, 0.0),
-                  Param("num_features", int, 2**14),
-                  Param("min_tokens", int, 20, "weak-label clean bar"),
-                  Param("max_punct_ratio", float, 0.12),
-                  Param("train_fraction", float, None,
-                        "fit on this sample of the weak labels — a "
-                        "linear model saturates long before the full "
-                        "corpus; unset trains on everything"),
-                  Param("seed", int, 0),
-                  Param("text_col", str, "text")])
-def _quality_score(ctx, df, min_prob: float = 0.0,
-                   num_features: int = 2**14, min_tokens: int = 20,
-                   max_punct_ratio: float = 0.12,
-                   train_fraction: float | None = None, seed: int = 0,
-                   text_col: str = "text", **_):
+          "adds quality_prob, drops rows under min_prob", {"stream"})
+def _quality_score(
+        ctx, df, min_prob: float = 0.0, num_features: int = 2**14,
+        min_tokens: Annotated[int, "weak-label clean bar"] = 20,
+        max_punct_ratio: float = 0.12,
+        train_fraction: Annotated[
+            float | None, "fit on this sample of the weak labels — a linear model "
+            "saturates long before the full corpus; unset trains on everything"
+        ] = None,
+        seed: int = 0, text_col: str = "text", **_):
     from pyspark.sql import functions as F
 
     from promi_spark.operators.ml import (
@@ -794,25 +739,14 @@ def _quality_score(ctx, df, min_prob: float = 0.0,
 @register("Decontaminate", "drop documents sharing word n-grams with a "
           "benchmark corpus received on the segment's stream_receiver "
           "channel (benchmark gram set broadcast; single corpus scan)",
-          {"stream"},
-          params=[Param("n", int, 5, "gram width"),
-                  Param("min_shared", int, 1),
-                  Param("key_col", str, "doc_id"),
-                  Param("text_col", str, "text")])
-def _decontaminate(ctx, df, n: int = 5, min_shared: int = 1,
-                   key_col: str = "doc_id", text_col: str = "text",
-                   _recv=None, **_):
+          {"stream"})
+def _decontaminate(ctx, df, n: Annotated[int, "gram width"] = 5, min_shared: int = 1,
+                   key_col: str = "doc_id", text_col: str = "text", _recv=None, **_):
     from pyspark.sql import functions as F
 
     from promi_spark.operators.text import ngram_overlap
 
-    if not _recv:
-        raise ValueError(
-            "Decontaminate needs the benchmark corpus on a "
-            "stream_receiver channel"
-        )
-    bench = ctx.streams[_recv[0]]
-    bench_df = bench.df if hasattr(bench, "df") else bench
+    bench_df = _received(ctx, _recv, "Decontaminate needs the benchmark corpus")
     verdicts = ngram_overlap(df, bench_df, key_col, text_col,
                              n=n, min_shared=min_shared)
     clean = verdicts.filter(~F.col("contaminated")).select(key_col)
@@ -822,33 +756,24 @@ def _decontaminate(ctx, df, n: int = 5, min_shared: int = 1,
 @register("AsofEnrich", "as-of temporal enrichment: attach the most "
           "recent state row (received on the segment's stream_receiver "
           "channel) at or before each event's timestamp — the "
-          "single-shuffle union-window as-of join", {"stream"},
-          params=[Param("on", str, description="join key column"),
-                  Param("left_ts", str, "ts"),
-                  Param("right_ts", str, None, "defaults to left_ts"),
-                  Param("direction", str, "backward"),
-                  Param("tolerance", str, None,
-                        "max staleness, e.g. '7 DAYS' — stale matches "
-                        "become NULL")])
-def _asof_enrich(ctx, df, on: str, left_ts: str = "ts",
-                 right_ts: str | None = None, direction: str = "backward",
-                 tolerance: str | None = None, _recv=None, **_):
+          "single-shuffle union-window as-of join", {"stream"})
+def _asof_enrich(
+        ctx, df, on: Annotated[str, "join key column"], left_ts: str = "ts",
+        right_ts: Annotated[str | None, "defaults to left_ts"] = None,
+        direction: str = "backward",
+        tolerance: Annotated[str | None, "max staleness, e.g. '7 DAYS' — stale "
+                             "matches become NULL"] = None,
+        _recv=None, **_):
     from pyspark.sql import functions as F
 
     from promi_spark.operators.joins import asof_join
 
-    if not _recv:
-        raise FlowConfigError(
-            "AsofEnrich needs the state/right side on a stream_receiver "
-            "channel"
-        )
+    right_df = _received(ctx, _recv, "AsofEnrich needs the state/right side")
     if direction not in ("backward", "forward"):
         raise FlowConfigError(
             f"AsofEnrich: direction must be backward|forward, got "
             f"{direction!r}"
         )
-    right = ctx.streams[_recv[0]]
-    right_df = right.df if hasattr(right, "df") else right
     left_df = df.df if hasattr(df, "df") else df
     tol = F.expr(f"INTERVAL {tolerance}") if tolerance else None
     return asof_join(
@@ -859,13 +784,9 @@ def _asof_enrich(ctx, df, on: str, left_ts: str = "ts",
 
 @register("ShardExport", "deterministic fixed-shard parquet export: "
           "stable md5 shard ids, repartitioned on the shard column so "
-          "each task owns whole shards (one file per shard)", {"sink"},
-          params=[Param("path", str, description="output parquet path"),
-                  Param("n_shards", int, 16),
-                  Param("key", str, "doc_id"),
-                  Param("seed", int, 0)])
-def _shard_export(ctx, df, path: str, n_shards: int = 16,
-                  key: str = "doc_id", seed: int = 0, **_):
+          "each task owns whole shards (one file per shard)", {"sink"})
+def _shard_export(ctx, df, path: Annotated[str, "output parquet path"],
+                  n_shards: int = 16, key: str = "doc_id", seed: int = 0, **_):
     from promi_spark.operators.scale import write_shards
 
     write_shards(df, ctx.path(path), key, n_shards=n_shards, seed=seed)
@@ -873,13 +794,11 @@ def _shard_export(ctx, df, path: str, n_shards: int = 16,
 
 @register("FailingSource",
           "events source with deterministic corrupt-row injection "
-          "(reference FailingStream, dev_util.rs:81-135)", {"source"},
-          params=[Param("sf_dir", str, description="testdata sf directory"),
-                  Param("corrupt_every", int, 10,
-                        "null out activity/ts on every k-th event"),
-                  Param("seed", int, 0)])
-def _failing_source(ctx, log, sf_dir: str, corrupt_every: int = 10,
-                    seed: int = 0, **_):
+          "(reference FailingStream, dev_util.rs:81-135)", {"source"})
+def _failing_source(
+        ctx, log, sf_dir: Annotated[str, "testdata sf directory"],
+        corrupt_every: Annotated[int, "null out activity/ts on every k-th event"] = 10,
+        seed: int = 0, **_):
     """Failure-injection source: loads the events table, then corrupts a
     deterministic subset of rows (NULL ``activity`` on every k-th event
     id, NULL ``ts`` on every 2k-th) — the batch analog of the
@@ -905,10 +824,10 @@ def _failing_source(ctx, log, sf_dir: str, corrupt_every: int = 10,
           "validator checks go to the segment's stream_sender channel "
           "as the dead-letter side; strict mode aborts the flow "
           "(reference Buffer error storage buffer.rs:53-56 + strict "
-          "channel abort channel.rs:373-466)", {"stream"},
-          params=[Param("strict", bool, False,
-                        "abort the flow if any row fails")])
-def _quarantine(ctx, log, strict: bool = False, _send=None, **_):
+          "channel abort channel.rs:373-466)", {"stream"})
+def _quarantine(
+        ctx, log, strict: Annotated[bool, "abort the flow if any row fails"] = False,
+        _send=None, **_):
     from promi_spark.streaming.engine import quarantine
 
     good, bad = quarantine(log.df)
@@ -926,11 +845,11 @@ def _quarantine(ctx, log, strict: bool = False, _send=None, **_):
     return log.with_df(good)
 
 
-@register("Filter", "CNF filter from config (filter.rs:19-112)", {"stream"},
-          params=[Param("cnf", list, None,
-                        "list of disjunctions of SQL boolean strings"),
-                  Param("scope", str, "event", "event|trace")])
-def _filter(ctx, log, cnf: list | None = None, scope: str = "event", **_):
+@register("Filter", "CNF filter from config (filter.rs:19-112)", {"stream"})
+def _filter(
+        ctx, log, cnf: Annotated[
+            list | None, "list of disjunctions of SQL boolean strings"] = None,
+        scope: Annotated[str, "event|trace"] = "event", **_):
     """``cnf`` is a list of disjunctions; each literal is a SQL boolean
     expression string evaluated over the flat schema."""
     from pyspark.sql import functions as F

@@ -226,6 +226,63 @@ def test_unsent_receive_channel_rejected_at_load(spark):
         load_flow(flow)
 
 
+def test_channel_on_segment_without_channel_param_rejected_at_load():
+    """Stream channels follow the segment function's signature: a
+    stream_sender on a segment that takes no _send (or a stream_receiver
+    on one that takes no _recv) is a load-time FlowConfigError — not a
+    KeyError after the sending pipe has already run through its sink."""
+    from promi_spark.plans import load_flow
+    from promi_spark.plans.registry import FlowConfigError
+
+    docs = {"name": "DocumentsTable", "attributes": {"sf_dir": "sf0.001"}}
+    unsent = {
+        "pipes": [
+            {"name": "A", "source": docs,
+             "streams": [{"name": "Filter", "stream_sender": ["x"]}],
+             "sink": {"name": "Void"}},
+            {"name": "B",
+             "source": {"name": "Receiver", "stream_receiver": ["x"]}},
+        ]
+    }
+    with pytest.raises(FlowConfigError, match=r"'A'.*'Filter'.*stream_sender"):
+        load_flow(unsent)
+
+    unreceived = {
+        "pipes": [
+            {"name": "A", "source": docs,
+             "sink": {"name": "Sender", "stream_sender": ["x"]}},
+            {"name": "B", "source": docs,
+             "streams": [{"name": "PiiScrub", "stream_receiver": ["x"]}],
+             "sink": {"name": "Void"}},
+        ]
+    }
+    with pytest.raises(
+        FlowConfigError, match=r"'B'.*'PiiScrub'.*stream_receiver"
+    ):
+        load_flow(unreceived)
+
+
+def test_missing_required_parameter_shows_its_description():
+    """The missing-required error carries the parameter's description
+    from its Annotated signature metadata as the hint."""
+    from promi_spark.plans import load_flow
+    from promi_spark.plans.registry import FlowConfigError
+
+    flow = {
+        "pipes": [{
+            "name": "P",
+            "source": {"name": "EventsTable", "attributes": {"sf_dir": "sf0.001"}},
+            "streams": [{"name": "Sample", "attributes": {"seed": 3}}],
+        }]
+    }
+    with pytest.raises(
+        FlowConfigError,
+        match=r"P/Sample.*required.*'ratio' "
+              r"\(Float — keep probability in \[0,1\]\)",
+    ):
+        load_flow(flow)
+
+
 def test_duplicate_channel_sender_rejected_at_load(spark):
     """Two senders on one channel are a load-time FlowConfigError:
     channels are single-sender (a send ASSIGNS the binding; _generations
@@ -971,6 +1028,19 @@ def test_r10_selection_segments(spark):
     assert got == exact
     with _pytest.raises(FlowConfigError, match="exactly one"):
         REGISTRY["HeavyHitters"].fn(ctx, docs, col="source")
+
+
+def test_decontaminate_without_receiver_channel_is_config_error():
+    """Decontaminate called without its benchmark channel raises the
+    same FlowConfigError as DsirSelect and AsofEnrich."""
+    from types import SimpleNamespace
+
+    from promi_spark.plans.registry import REGISTRY, FlowConfigError
+
+    with pytest.raises(FlowConfigError, match="stream_receiver"):
+        REGISTRY["Decontaminate"].fn(SimpleNamespace(streams={}), None)
+    with pytest.raises(FlowConfigError, match="stream_receiver"):
+        REGISTRY["Receiver"].fn(SimpleNamespace(streams={}), None)
 
 
 def test_dsir_curated_mix_example_flow(spark, tmp_path):

@@ -58,30 +58,30 @@ def test_lsh_near_dups_subset_of_exact(spark, sf_dir):
     assert len(approx) / len(exact) > 0.3
 
 
-def test_ivf_assign_join_matches_unrolled(spark, sf_dir):
-    """The broadcast-join assign (the >128-centroid plan-scale path)
-    produces the identical (id -> cluster) map as the unrolled literal
+def test_ivf_assign_join_matches_unrolled(spark, sf_dir, monkeypatch):
+    """The Arrow-kernel assign (above the centroid threshold) produces
+    the identical (id -> cluster) map as the unrolled literal
     expression — same sequential dot fold, same ||c||^2 double, same
-    lowest-index tie-break — on a 40-centroid seeded-Voronoi codebook."""
+    lowest-index tie-break — on a 40-centroid seeded-Voronoi codebook.
+    Each path is forced by moving the threshold."""
+    from promi_spark.operators import similarity
     from promi_spark.operators.similarity import ivf_assign, ivf_centroids
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cent = ivf_centroids(emb, n_clusters=40, init="lowest_ids", n_iter=0)
-    unrolled = {
-        r["vec_id"]: r["cluster"]
-        for r in ivf_assign(emb, cent, strategy="unrolled").collect()
-    }
-    joined = {
-        r["vec_id"]: r["cluster"]
-        for r in ivf_assign(emb, cent, strategy="join").collect()
-    }
-    kernel = {
-        r["vec_id"]: r["cluster"]
-        for r in ivf_assign(emb, cent, strategy="kernel").collect()
-    }
-    assert unrolled == joined
+
+    def assigned(threshold):
+        monkeypatch.setattr(similarity, "_ASSIGN_KERNEL_THRESHOLD", threshold)
+        df = ivf_assign(emb, cent)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return {r["vec_id"]: r["cluster"] for r in df.collect()}, plan
+
+    unrolled, unrolled_plan = assigned(len(cent))
+    kernel, kernel_plan = assigned(len(cent) - 1)
+    assert "MapInPandas" not in unrolled_plan
+    assert "MapInPandas" in kernel_plan
     assert unrolled == kernel
-    assert len(set(joined.values())) > 1
+    assert len(set(kernel.values())) > 1
 
 
 def test_cosine_near_dups_blocked_matches_expression(spark, sf_dir):

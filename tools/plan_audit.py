@@ -5,8 +5,10 @@ plan shape and driver round-trip counts can).
 
 For every registered query (or the names given) record:
 
-- ``build_calls``: py4j commands issued while *building* the DataFrame
-  (each is ~2-4 ms of serialized driver latency in-sandbox — the
+- ``build_calls``: py4j commands issued while *building* the DataFrame,
+  counted by ``perfbench.tracing.Py4JCounter`` (memory deletes, which
+  the garbage collector sends at arbitrary times, are not counted; each
+  command is ~2-4 ms of serialized driver latency on a 4-core VM — the
   structural proxy for driver-side query-construction cost);
 - ``plan_bytes``: len of ``explain('formatted')`` text (Catalyst
   re-analyzes the tree on every fresh execution, so bytes ~ driver
@@ -54,32 +56,22 @@ def main() -> int:
         json_out = args[i + 1]
         del args[i : i + 2]
 
+    from perfbench.tracing import Py4JCounter
     from promi_spark.queries import QUERIES
     from promi_spark.session import get_spark
 
     spark = get_spark("plan_audit")
-
-    # Instrument the py4j gateway client: every JVM command (method
-    # call, field access) goes through GatewayClient.send_command.
-    from py4j import java_gateway as jg
-
-    counter = {"n": 0}
-    orig = jg.GatewayClient.send_command
-
-    def counting(self, *a, **kw):
-        counter["n"] += 1
-        return orig(self, *a, **kw)
-
-    jg.GatewayClient.send_command = counting
+    counter = Py4JCounter()
+    counter.install()
 
     names = args or list(QUERIES)
     rows = {}
     for name in names:
         fn, _ = QUERIES[name]
         try:
-            before = counter["n"]
+            before = counter.n
             df = fn(spark, SF_DIR)
-            build_calls = counter["n"] - before
+            build_calls = counter.n - before
             plan = df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted"
