@@ -48,13 +48,27 @@ HEADLINE = [
 ]
 
 
+def timed_count(spark, fn) -> float:
+    """Seconds to build and count one registered query. The query runs
+    inside a lifetime scope, so what it pins — checkpoints too, which
+    ``clearCache()`` cannot free — is freed before the next one; the
+    release is not timed."""
+    from promi_spark.lifetime import scope
+
+    with scope():
+        t0 = time.time()
+        fn(spark, SF_DIR).count()
+        return round(time.time() - t0, 3)
+
+
 def bench_neardup_pipeline(spark) -> dict:
     """The production dedup path as ONE headline: minhash_dedup (banded
     candidates + exact-Jaccard verify) -> dedup_components (transitive
     clustering) -> keep-representative anti-join — the NearDupDedup
     transitive=true segment, end to end. Reports wall time plus the
-    plan-note counters (verified pairs, components, convergence rounds,
-    surviving docs)."""
+    plan-note counters (verified pairs, components, star-rewrite rounds
+    — 0 when the pair graph already is a star forest — and surviving
+    docs)."""
     from pyspark.sql import functions as F
 
     from promi_spark.io import load_table
@@ -169,16 +183,10 @@ def bench_headline2(spark) -> dict:
     rep3: dict[str, float] = {}
     for name in HEADLINE2:
         fn, _ = QUERIES[name]
-        t0 = time.time()
-        fn(spark, SF_DIR).count()
-        cold[name] = round(time.time() - t0, 3)
-        t0 = time.time()
-        fn(spark, SF_DIR).count()
-        warm[name] = round(time.time() - t0, 3)
-        t0 = time.time()
-        fn(spark, SF_DIR).count()
-        rep3[name] = round(time.time() - t0, 3)
-        spark.catalog.clearCache()  # dedup/index paths persist relations
+        cold[name] = timed_count(spark, fn)
+        warm[name] = timed_count(spark, fn)
+        rep3[name] = timed_count(spark, fn)
+        spark.catalog.clearCache()  # drops what was cached outside a scope
     # clearCache above wiped EVERYTHING, including relations the earlier
     # headline passes warmed — re-warm the fixture scans so the sections
     # that follow (neardup/streaming/extras) run under the same cache
@@ -275,13 +283,9 @@ def bench_extras(spark) -> dict:
     out: dict[str, float] = {}
     for name in EXTRAS:
         fn, _ = QUERIES[name]
-        t0 = time.time()
-        fn(spark, SF_DIR).count()
-        out[name] = round(time.time() - t0, 3)
-        t0 = time.time()
-        fn(spark, SF_DIR).count()
-        out[f"{name}_warm"] = round(time.time() - t0, 3)
-        spark.catalog.clearCache()  # dedup paths persist shared relations
+        out[name] = timed_count(spark, fn)
+        out[f"{name}_warm"] = timed_count(spark, fn)
+        spark.catalog.clearCache()  # drops what was cached outside a scope
     return out
 
 
@@ -385,13 +389,7 @@ def main() -> int:
     QUERIES["media_decode_stats"][0](spark, SF_DIR).count()
 
     def run_pass() -> dict[str, float]:
-        out: dict[str, float] = {}
-        for name in HEADLINE:
-            fn, _ = QUERIES[name]
-            t0 = time.time()
-            fn(spark, SF_DIR).count()
-            out[name] = round(time.time() - t0, 3)
-        return out
+        return {name: timed_count(spark, QUERIES[name][0]) for name in HEADLINE}
 
     # Pass 1 = cold (fresh JVM; comparable round-over-round). Pass 2 =
     # warm (code/codegen caches hot) — closer to steady-state cluster

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from promi_spark.io import read_parquet
-from promi_spark.lifetime import own, persist, release
+from promi_spark.lifetime import checkpoint, own, release
 from promi_spark.operators.text import tokens
 
 
@@ -218,9 +218,9 @@ def minhash_candidates(
     band index) and split by AQE skew-join; ``max_bucket_size``
     additionally caps it hard.
 
-    The (k, sig, rep) signature-class tagging relation is persisted
-    (:func:`_sig_classes`). Relation lifetime: README "Relation
-    lifetime".
+    The (k, sig, rep) signature-class tagging relation is checkpointed
+    (:func:`_sig_classes`), so this call runs the signature jobs before
+    it returns. Relation lifetime: README "Relation lifetime".
     """
     sigs = minhash_signatures(df, key_col, text_col, num_hashes, shingle_n)
     return _banded_pairs(_sig_classes(sigs), num_hashes, bands, max_bucket_size)
@@ -229,21 +229,24 @@ def minhash_candidates(
 def _sig_classes(sigs: DataFrame, cache: bool = True) -> DataFrame:
     """(k, sig, rep): each row of a (k, sig) relation tagged with its
     exact-signature class representative (min key) — the relation every
-    banding core reads, persisted unless ``cache=False``: the
-    collapse/expansion plan reads it four times, and without the
-    persist each read re-runs the signature pipeline (measured 2.7x on
-    the LSH sibling at sf1). Verify sides may read it as their (k, sig)
-    source instead of recomputing the signature pipeline."""
+    banding core reads, checkpointed unless ``cache=False``: the
+    collapse/expansion plan reads it four times, and without the pin
+    each read re-runs the signature pipeline (measured 2.7x on the LSH
+    sibling at sf1). The checkpoint is eager, so with ``cache=True``
+    this call runs the signature jobs before it returns. Verify sides
+    may read it as their (k, sig) source instead of recomputing the
+    signature pipeline."""
     # rep via a sig-partitioned window, NOT groupBy(sig) + self-join:
     # the join form evaluates the upstream signature pipeline once per
     # side (measured 2.7x on lsh_near_dups at sf1, whose 64-hyperplane
     # sign pipeline is the costliest expression in the family); the
     # window form is one evaluation and one exchange on sig, then the
-    # persist makes every downstream reference a cache read
+    # checkpoint makes every downstream reference a plain leaf scan (a
+    # cache entry would add one AQE query stage per reader)
     tagged = sigs.selectExpr(
         "k", "sig", "min(k) OVER (PARTITION BY sig) AS rep"
     )
-    return persist(tagged) if cache else tagged
+    return checkpoint(tagged) if cache else tagged
 
 
 def _banded_pairs(
@@ -288,7 +291,7 @@ def _banded_pairs(
     case): classes == docs, and the extra collapse/expansion joins are
     doc-count-sized shuffles of (key, rep) pairs — noise next to the
     tokenize/explode/signature stages. The (k, sig, rep) tagging
-    relation is persisted (docs × ~0.5 KB) so the signature aggregate
+    relation is checkpointed (docs × ~0.5 KB) so the signature aggregate
     upstream runs once, not once per downstream reference.
     """
     return _collapsed_banded_pairs(
@@ -393,28 +396,31 @@ def minhash_dedup(
     default).
 
     Single-scan by construction: the (k, gram-hash) row relation — the
-    output of the dominant tokenize→explode stage — is persisted
-    (memory, disk-spill) and feeds BOTH aggregations: the 64-way MIN
-    signature build (codegen HashAggregate) and the ``collect_set``
-    verify side (ObjectHashAggregate). The two are deliberately NOT one
-    combined groupBy: a single ``collect_set`` aggregate would drag the
-    64 MIN updates onto the non-codegen object-hash path (measured 5x
-    slower cold). The two doc-level aggregates are each referenced
-    twice (banding / verify self-join sides) and deliberately NOT
-    persisted themselves: both re-aggregate from the gram-row cache,
-    which measures faster than stacking nested InMemoryRelations (the
-    aggs are cheap once tokenization is paid), and the self-join form —
-    rather than a collect_list-per-bucket pair generator — keeps
-    pathological LSH buckets splittable by AQE skew-join at scale.
-    Cached gram rows are ~(corpus tokens × 16 B)
-    — at 100 TB that spills to executor disk, which still beats paying
+    output of the dominant tokenize→explode stage — is checkpointed and
+    feeds BOTH aggregations: the 64-way MIN signature build (codegen
+    HashAggregate) and the ``collect_set`` verify side
+    (ObjectHashAggregate). The two are deliberately NOT one combined
+    groupBy: a single ``collect_set`` aggregate would drag the 64 MIN
+    updates onto the non-codegen object-hash path (measured 5x slower
+    cold). The signature side is pinned once more, as the
+    signature-class relation (:func:`_sig_classes`); the verify side's
+    ``collect_set`` is referenced twice (the self-join sides) and
+    re-aggregates from the gram-row leaf (cheap once tokenization is
+    paid). The self-join form — rather than a collect_list-per-bucket
+    pair generator — keeps pathological LSH buckets splittable by AQE
+    skew-join at scale. Pinned gram rows are ~(corpus tokens × 16 B) —
+    at 100 TB that spills to executor disk, which still beats paying
     the tokenize+explode stage twice; a production pipeline would
-    persist it as the dedup index anyway. The verify join itself touches
-    only candidate keys.
+    persist it as the dedup index anyway. The verify join itself
+    touches only candidate keys.
 
+    Both pins are eager checkpoints, not cache entries: under AQE every
+    reader of a cache entry is its own query stage, while a checkpoint
+    leaf is a plain scan. So this call runs the tokenize and signature
+    jobs before it returns; the returned plan reads the two leaves.
     Relation lifetime: README "Relation lifetime".
     """
-    rows = persist(gram_hash_rows(df, key_col, text_col, shingle_n))
+    rows = checkpoint(gram_hash_rows(df, key_col, text_col, shingle_n))
     cands = _banded_pairs(
         _sig_classes(_sigs_from_rows(rows, num_hashes)),
         num_hashes,
@@ -539,11 +545,11 @@ def minhash_dedup_incremental(
     path. ExactDedup before the ingest gate (as in
     ``examples/clean_corpus.yml``) remains the cheapest front line.
 
-    ``cache=True`` persists the batch's gram rows and, with
-    ``include_new_pairs``, its signature-class tagging (relation
-    lifetime: README "Relation lifetime"); ``cache=False`` (the
-    streaming gate) pins nothing at the cost of re-evaluating the batch
-    pipeline per downstream reference.
+    ``cache=True`` checkpoints the batch's gram rows and, with
+    ``include_new_pairs``, its signature-class tagging, so the call runs
+    those jobs before it returns (relation lifetime: README "Relation
+    lifetime"); ``cache=False`` (the streaming gate) pins nothing at the
+    cost of re-evaluating the batch pipeline per downstream reference.
     """
     import json
 
@@ -558,7 +564,7 @@ def minhash_dedup_incremental(
     idx = read_parquet(spark, index_path)
     rows_new = gram_hash_rows(new_df, key_col, text_col, meta["shingle_n"])
     if cache:
-        rows_new = persist(rows_new)
+        rows_new = checkpoint(rows_new)
     sigs_new = _sigs_from_rows(rows_new, num_hashes)
     sh_new = rows_new.groupBy("k").agg(F.collect_set("h").alias("sh"))
 
@@ -582,7 +588,7 @@ def minhash_dedup_incremental(
         # per-doc banding exactly as before the guard
         idx = idx.withColumn("rep", F.col("k"))
     # the within-batch pair generator and the cross probe read the
-    # same (k, sig, rep) tagging relation, persisted only when both do
+    # same (k, sig, rep) tagging relation, pinned only when both do
     tag_n = _sig_classes(sigs_new, cache and include_new_pairs)
     reps_n = tag_n.filter("k = rep").select("k", "sig")
     mem_n = tag_n.select("k", "rep")
@@ -681,6 +687,18 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     shrink the component's potential and preserve connectivity (so
     every input node keeps an edge); at the fixed point the edge set
     is a union of stars, each centered on its component's minimum.
+
+    Stop rule: the loop stops as soon as the edge list is a star
+    forest — no node is ``u`` in two edges and no node is both a ``u``
+    and a ``v``. One aggregate over the node roles decides it (one
+    shuffle, then ``isEmpty``), run before the first round and after
+    each. Because connectivity is preserved, each star of such a forest
+    is a whole component, and its center (every edge points from the
+    larger to the smaller key) is the component minimum: the labels are
+    the fixed point's, without a confirming round or a diff of two
+    rounds. A pair graph that already is a star forest (isolated pairs,
+    one doc paired with larger ones) takes no round at all.
+
     State per round is the edge list itself — bounded by the input
     pair count, shuffled on node keys, AQE splitting skew (a giant
     component's center is by construction a hot key; the star rewrite
@@ -694,7 +712,7 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     the upstream pair-generation pipeline, enough for Catalyst plan
     canonicalization alone to exhaust the JVM heap by round 3 on a
     minhash pair graph. The checkpoint materializes rows the
-    convergence check reads anyway. Superseded rounds are released as
+    star-forest test reads anyway. Superseded rounds are released as
     the loop advances; the last round's edges back the result
     (relation lifetime: README "Relation lifetime"), so the returned
     plan reads one checkpoint leaf at any diameter. (On a real cluster
@@ -702,9 +720,11 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     during the loop matters; ``localCheckpoint`` trades that
     fault-tolerance for zero-copy speed.)
 
-    Exposes ``.n_rounds`` (full large+small rounds to stability).
-    Raises ``RuntimeError`` if not stable after ``max_iter`` rounds
-    instead of returning silently-wrong intermediate labels.
+    Exposes ``.n_rounds``: the large+small rewrite rounds run, 0 when
+    the input is already a star forest. ``max_iter`` bounds them; an
+    edge list that is still not a star forest after ``max_iter`` rounds
+    raises ``RuntimeError`` instead of returning silently-wrong
+    intermediate labels.
     """
     edges = (
         pairs.select(
@@ -740,33 +760,35 @@ def dedup_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
         center = mins.select("u", F.col("m").alias("v"))
         return to_min.union(center).distinct()
 
+    def star_forest(E: DataFrame) -> bool:
+        # a node breaks the forest when it is a u (a leaf) with any
+        # second role: a second edge as u, or an edge as v
+        return (
+            E.selectExpr("stack(2, u, 1, v, 0) AS (n, is_u)")
+            .groupBy("n")
+            .agg(F.sum("is_u").alias("n_u"), F.count(F.lit(1)).alias("deg"))
+            .filter("n_u > 0 AND deg > 1")
+            .isEmpty()
+        )
+
     n_rounds = 0
-    stable = False
     try:
-        for _ in range(max_iter):
-            n_rounds += 1
-            rewritten = small_star(large_star(edges))
-            prev, edges = edges, rewritten.localCheckpoint(eager=True)
-            try:
-                stable = (
-                    edges.exceptAll(prev).union(prev.exceptAll(edges)).isEmpty()
+        while not star_forest(edges):
+            if n_rounds == max_iter:
+                raise RuntimeError(
+                    f"dedup_components did not converge in {max_iter} "
+                    "rounds; raise max_iter"
                 )
-            finally:
-                release(prev)  # the convergence check was its last reader
-            if stable:
-                break
-        if not stable:
-            raise RuntimeError(
-                f"dedup_components did not converge in {max_iter} "
-                "rounds; raise max_iter"
-            )
-    finally:
-        if not stable:
-            release(edges)
+            n_rounds += 1
+            prev = edges
+            edges = small_star(large_star(prev)).localCheckpoint(eager=True)
+            release(prev)
+    except BaseException:
+        release(edges)
+        raise
     own(edges)
-    # at the fixed point every non-center node has exactly one edge
-    # (u -> component min); centers appear only as v and map to
-    # themselves
+    # in a star forest every leaf has exactly one edge (u -> component
+    # min); centers appear only as v and map to themselves
     out = (
         edges.union(edges.select("v", "v"))
         .groupBy(F.col("u").alias("doc_id"))
@@ -1014,7 +1036,7 @@ def simhash_candidates(
     :func:`_collapsed_banded_pairs` core — byte-identical docs have
     identical simhash bits, so they collapse to one banded
     representative exactly like the MinHash path (the same boilerplate
-    mega-bucket guard), and the verify join reads the persisted
+    mega-bucket guard), and the verify join reads the checkpointed
     (k, bits) tagging relation instead of re-running the
     tokenize→simhash pipeline per side. ``max_bucket_size`` caps
     residual near-identical bucket skew (counts classes, off by

@@ -123,9 +123,10 @@ def validate_flow(flow: Flow) -> None:
     """Check every segment against its registry entry's typed parameter
     declarations (reference ``Declaration``, ``plugin.rs:19-371``):
     unknown operator names, unknown/mistyped attributes, missing
-    required parameters, and stream channels on a segment whose
-    function takes none raise :class:`FlowConfigError` naming the pipe,
-    segment, and parameter — before anything executes."""
+    required parameters, stream channels on a segment whose function
+    takes none, and a segment whose function takes ``_recv`` without a
+    stream_receiver channel raise :class:`FlowConfigError` naming the
+    pipe, segment, and parameter — before anything executes."""
     sent: set[str] = set()
     received: list[tuple[str, str, str]] = []
     # channel -> first sender seen; channels are single-sender in this
@@ -161,6 +162,11 @@ def validate_flow(flow: Flow) -> None:
                         f"{key} (channels {chans}); its function has no "
                         f"{arg} parameter"
                     )
+            if "_recv" in entry.channels and not seg.stream_receiver:
+                raise FlowConfigError(
+                    f"pipe {pipe.name!r}: segment {seg.name!r} reads its "
+                    "input from a stream_receiver channel, but none is set"
+                )
             for ch in list(seg.stream_sender) + list(seg.artifact_sender):
                 where = f"{pipe.name}/{seg.name}"
                 if ch in senders:

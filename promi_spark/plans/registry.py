@@ -29,7 +29,7 @@ import types
 from dataclasses import dataclass, field
 from typing import Annotated, Any, Callable, Union, get_args, get_origin, get_type_hints
 
-from promi_spark.lifetime import persist
+from promi_spark.lifetime import checkpoint, persist
 from promi_spark.log import EventLog
 from promi_spark.schema import EVENTS_SCHEMA, Meta
 
@@ -475,6 +475,10 @@ def _near_dup_dedup(
         minhash_dedup,
     )
 
+    # the pair pipeline, the anti-join below and every downstream reader
+    # of the output read one leaf instead of re-running the document
+    # pipeline upstream of this segment
+    df = checkpoint(df)
     pairs = minhash_dedup(df, key_col, text_col, threshold=threshold)
     if keep_best_col:
         return dedup_keep_best(df, pairs, keep_best_col, key_col=key_col)

@@ -94,29 +94,32 @@ def test_minhash_map_side_combine(spark, sf):
 
 
 def test_minhash_dedup_single_gram_subtree(spark, sf):
-    """minhash_dedup tokenizes/explodes the corpus exactly once: the
-    gram-row relation is persisted and every consumer reads the cache.
-    Formatted explain prints the cached subtree once — exactly one
-    arrays_zip (the gram zip-explode) and one scan of
-    documents.parquet must appear, and every doc-level reader must be
-    an InMemoryTableScan. Since the r8 class-collapse rewrite there
-    are NINE cached readers across TWO caches: 3 of the gram cache
-    (ONE signature aggregate — the rep tagging is a sig-partitioned
-    window over it, not a groupBy + self-join, so the signature
-    pipeline evaluates once — and the collect_set verify x2) and 6 of
-    the ~0.5 KB/doc (k, sig, rep) tagging cache (rep banding x2,
-    within-class pairs x2, cross-class expansion x2)."""
+    """minhash_dedup tokenizes/explodes the corpus exactly once and
+    every reader reads a pinned relation: the gram rows and the
+    (k, sig, rep) signature classes are eager checkpoints, so the
+    returned plan holds no scan of documents.parquet and no gram
+    zip-explode, only checkpoint leaves. EIGHT leaf readers: 2 of the
+    gram rows (the collect_set verify x2 — the signature aggregate ran
+    before the class checkpoint) and 6 of the ~0.5 KB/doc signature
+    classes (rep banding x2, within-class pairs x2, cross-class
+    expansion x2). A checkpoint leaf is a plain scan, where each reader
+    of a cache entry would be its own AQE query stage. Both leaves are
+    pinned while the scope is open and freed when it exits."""
+    from promi_spark.lifetime import _leaf_rdd_ids, scope
     from promi_spark.operators.dedup import minhash_dedup
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    out = minhash_dedup(docs, threshold=0.5)
-    try:
+    pinned = spark.sparkContext._jsc.sc().getPersistentRDDs
+    with scope():
+        out = minhash_dedup(docs, threshold=0.5)
         plan = explain(out)
-        assert plan.count("arrays_zip") == 1
-        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
-        assert len(re.findall(r"\(\d+\) InMemoryTableScan", plan)) == 9
-    finally:
-        out.sparkSession.catalog.clearCache()
+        assert plan.count("arrays_zip") == 0
+        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 0
+        assert len(re.findall(r"\(\d+\) Scan ExistingRDD", plan)) == 8
+        ids = _leaf_rdd_ids(out)
+        assert len(ids) == 2
+        assert all(pinned().contains(i) for i in ids)
+    assert not any(pinned().contains(i) for i in ids)
 
 
 def test_lsh_verify_after_pair_distinct(spark, sf):

@@ -262,6 +262,31 @@ def test_channel_on_segment_without_channel_param_rejected_at_load():
         load_flow(unreceived)
 
 
+def test_missing_receive_channel_rejected_at_load():
+    """A segment whose function reads a stream_receiver channel
+    (Receiver, Decontaminate, DsirSelect, AsofEnrich) without one is a
+    load-time FlowConfigError — not an error at execute, after the
+    upstream segments have run."""
+    from promi_spark.plans import load_flow
+    from promi_spark.plans.registry import FlowConfigError
+
+    docs = {"name": "DocumentsTable", "attributes": {"sf_dir": "sf0.001"}}
+    flow = {
+        "pipes": [
+            {"name": "P", "source": docs,
+             "streams": [{"name": "Decontaminate"}],
+             "sink": {"name": "Void"}},
+        ]
+    }
+    with pytest.raises(
+        FlowConfigError, match=r"'P'.*'Decontaminate'.*stream_receiver"
+    ):
+        load_flow(flow)
+    with pytest.raises(FlowConfigError, match=r"'R'.*'Receiver'.*stream_receiver"):
+        load_flow({"pipes": [{"name": "R", "source": {"name": "Receiver"},
+                              "sink": {"name": "Void"}}]})
+
+
 def test_missing_required_parameter_shows_its_description():
     """The missing-required error carries the parameter's description
     from its Annotated signature metadata as the hint."""
@@ -530,10 +555,12 @@ pipes:
     assert ids1 == ids2
 
 
-def test_neardup_flow_releases_caches(spark, tmp_path):
-    """NearDupDedup persists the gram-row relation (and, with
-    transitive=true, the component labels) for the flow's duration only:
-    after execute() returns, no cached relation remains in the session."""
+def test_neardup_flow_releases_caches(spark, tmp_path, pinned_rdds):
+    """NearDupDedup pins its input, the gram rows, the signature classes
+    and, with transitive=true, the component edges for the flow's
+    duration only: after execute() returns, no cached relation remains
+    in the session, and the block manager pins no RDD it did not pin
+    before the run (checkpoints are not in the cache manager)."""
     from promi_spark.plans import execute
 
     spark.catalog.clearCache()
@@ -550,7 +577,11 @@ def test_neardup_flow_releases_caches(spark, tmp_path):
                      "attributes": {"path": out, "n_shards": 2}},
         }]
     }
+    before = pinned_rdds()
     execute(spark, flow)
+    # a subset, not equality: Spark's cleaner may free an RDD an earlier
+    # test left pinned at any moment
+    assert pinned_rdds() <= before
     assert spark.read.parquet(out).count() > 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 

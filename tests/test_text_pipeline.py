@@ -171,6 +171,25 @@ def test_dedup_components_mixed_graph_and_long_path(spark):
     assert out.n_rounds <= 12, out.n_rounds
 
 
+def test_dedup_components_star_forest_stop(spark):
+    """A pair set that already is a star forest (isolated pairs, one doc
+    paired with larger ones) takes no rewrite round and keeps the
+    component-minimum labels."""
+    from promi_spark.lifetime import scope
+    from promi_spark.operators.dedup import dedup_components
+
+    forest = spark.createDataFrame(
+        [(1, 2), (1, 3), (4, 1), (10, 11), (20, 22), (21, 20)],
+        "a long, b long",
+    )
+    with scope():
+        out = dedup_components(forest)
+        got = {r["doc_id"]: r["component"] for r in out.collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20,
+                   21: 20, 22: 20}
+    assert out.n_rounds == 0
+
+
 def test_bigram_lm_scores_rank_noise_below_fluent(spark):
     """Cross-entropy under the corpus-trained bigram LM ranks a
     gibberish document above (= less probable than) the fluent

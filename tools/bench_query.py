@@ -11,8 +11,11 @@ Timing runs the query `--runs` times (default 3: first = cold, rest =
 warm) against `sf_dir` (default `bench.SF_DIR`: $SPARK_GRAFT_SF_DIR,
 else the sf0.1 test tables) and prints one JSON line: wall seconds per run,
 the build layer per run (py4j calls and seconds spent constructing the
-DataFrame, counted at the gateway by perfbench's `Py4JCounter`) and the
-physical-plan exchange counts. `--mode` prints the plan in that explain
+DataFrame, counted at the gateway by perfbench's `Py4JCounter`), the
+Spark jobs and tasks per run (perfbench's `stage_rollup` over the run's
+job group) and the physical-plan exchange counts. Each run is one
+lifetime scope: what the query pins, checkpoints included, is freed
+before the next run. `--mode` prints the plan in that explain
 mode instead of timing; `--list` prints the registry.
 """
 
@@ -57,7 +60,8 @@ def main() -> int:
         print(f"unknown query {args.name!r}; --list shows the registry", file=sys.stderr)
         return 2
 
-    from perfbench.tracing import Py4JCounter
+    from perfbench.tracing import Py4JCounter, stage_rollup
+    from promi_spark.lifetime import scope
     from promi_spark.session import get_spark
     from tools.plan_audit import exchange_counts
 
@@ -71,14 +75,20 @@ def main() -> int:
 
     counter = Py4JCounter()
     counter.install()
-    times, build_sec, build_py4j = [], [], []
-    for _ in range(max(1, args.runs)):
-        calls0, t0 = counter.n, time.monotonic()
-        df = fn(spark, args.sf_dir)
-        build_sec.append(round(time.monotonic() - t0, 3))
-        build_py4j.append(counter.n - calls0)
-        df.count()
-        times.append(round(time.monotonic() - t0, 3))
+    times, build_sec, build_py4j, jobs, tasks = [], [], [], [], []
+    for run in range(max(1, args.runs)):
+        group = f"bench_query_{args.name}_{run}"
+        spark.sparkContext.setJobGroup(group, args.name)
+        with scope():
+            calls0, t0 = counter.n, time.monotonic()
+            df = fn(spark, args.sf_dir)
+            build_sec.append(round(time.monotonic() - t0, 3))
+            build_py4j.append(counter.n - calls0)
+            df.count()
+            times.append(round(time.monotonic() - t0, 3))
+        rollup = stage_rollup(spark, group)
+        jobs.append(int(rollup["jobs"]))
+        tasks.append(int(rollup["tasks"]))
     counter.uninstall()
     plan = df._jdf.queryExecution().explainString(explain_mode.fromString("formatted"))
     warm = times[1:]
@@ -92,6 +102,8 @@ def main() -> int:
                 "runs": times,
                 "build_sec": build_sec,
                 "build_py4j_calls": build_py4j,
+                "jobs": jobs,
+                "tasks": tasks,
                 **exchange_counts(plan),
             }
         )
