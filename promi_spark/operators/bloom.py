@@ -3,11 +3,12 @@ for huge reference sets (benchmark-suite n-grams, a committed corpus'
 fingerprints) probed by later batches without re-scanning — the
 membership analog of :func:`operators.dedup.write_minhash_index`.
 
-Spark's own runtime bloom filter (used by ``text.ngram_overlap
-(broadcast=False)``) is built per-query and thrown away; this module
-makes the sketch a first-class ARTIFACT: build once over the reference
-side, persist as parquet, probe from every ingest batch at a cost
-proportional to the batch. The filter is represented as a sparse
+Spark's own runtime bloom filter is built per-query and thrown away
+(``text.ngram_overlap`` instead broadcasts the benchmark's gram set,
+which needs it to fit in memory); this module makes the sketch a
+first-class ARTIFACT: build once over the reference side, persist as
+parquet, probe from every ingest batch at a cost proportional to the
+batch. The filter is represented as a sparse
 ``(word: long, mask: long)`` relation — ``m_bits/64`` rows max, i.e.
 up to ``m_bits/4`` bytes in-plan — independent of the reference set's
 CARDINALITY but not of its sizing: a real benchmark suite

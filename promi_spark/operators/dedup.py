@@ -484,9 +484,7 @@ def write_minhash_index(
         # re-measured r15: computing band_buckets over the index reps
         # cost ~0.12 s per probe at sf0.1 vs ~0.03 s once at build;
         # every future probe reads the stored array instead). NULL for
-        # non-rep member rows — compresses away; probes on an index
-        # written before this column existed recompute it (fallback in
-        # minhash_dedup_incremental).
+        # non-rep member rows — compresses away.
         bb = _band_buckets_sql("sig", num_hashes, bands)
         tagged = tagged.selectExpr(
             "*", f"CASE WHEN k = rep THEN {bb} ELSE NULL END AS bb"
@@ -540,9 +538,7 @@ def minhash_dedup_incremental(
     pre-distinct rows; the true m_batch x m_index member pairs are
     reconstructed losslessly only for classes that actually collide
     (they all still verify — that output size is the real answer, as
-    everywhere in this family). An index written before the ``rep``
-    column existed degrades to per-doc banding through the same code
-    path. ExactDedup before the ingest gate (as in
+    everywhere in this family). ExactDedup before the ingest gate (as in
     ``examples/clean_corpus.yml``) remains the cheapest front line.
 
     ``cache=True`` checkpoints the batch's gram rows and, with
@@ -568,14 +564,6 @@ def minhash_dedup_incremental(
     sigs_new = _sigs_from_rows(rows_new, num_hashes)
     sh_new = rows_new.groupBy("k").agg(F.collect_set("h").alias("sh"))
 
-    def banded(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "k",
-            F.posexplode(
-                band_buckets("sig", num_hashes, bands)
-            ).alias("band", "bucket"),
-        )
-
     # band ONE doc per exact-signature class on both probe sides (the
     # r8 boilerplate guard, extended to the cross probe): the index
     # carries its class representative from build time, so no
@@ -583,29 +571,27 @@ def minhash_dedup_incremental(
     # own classes (batch-proportional). Identical signatures collide on
     # exactly the same buckets, so expanding representative collisions
     # back to member pairs reproduces the per-doc join's pair set.
-    if "rep" not in idx.columns:
-        # pre-class index: every doc is its own class — same code path,
-        # per-doc banding exactly as before the guard
-        idx = idx.withColumn("rep", F.col("k"))
-    # the within-batch pair generator and the cross probe read the
+    # The within-batch pair generator and the cross probe read the
     # same (k, sig, rep) tagging relation, pinned only when both do
     tag_n = _sig_classes(sigs_new, cache and include_new_pairs)
     reps_n = tag_n.filter("k = rep").select("k", "sig")
     mem_n = tag_n.select("k", "rep")
     mem_i = idx.select("k", "rep")
-    if "bb" in idx.columns:
-        # r15 pre-banded index: the reps' band-bucket codes were
-        # computed once at build time (write_minhash_index stores them
-        # on rep rows only) — every probe reads the array instead of
-        # re-hashing |classes| x bands slices. Identical codes by
-        # construction: the stored expression IS band_buckets(sig).
-        banded_i = idx.filter("k = rep").select(
-            "k", F.posexplode("bb").alias("band", "bucket")
-        )
-    else:
-        banded_i = banded(idx.filter("k = rep").select("k", "sig"))
+    # the reps' band-bucket codes were computed once at build time
+    # (write_minhash_index stores them on rep rows only) — every probe
+    # reads the array instead of re-hashing |classes| x bands slices.
+    # Identical codes by construction: the stored expression IS
+    # band_buckets(sig).
+    banded_i = idx.filter("k = rep").select(
+        "k", F.posexplode("bb").alias("band", "bucket")
+    )
     rep_cross = (
-        banded(reps_n)
+        reps_n.select(
+            "k",
+            F.posexplode(
+                band_buckets("sig", num_hashes, bands)
+            ).alias("band", "bucket"),
+        )
         .alias("n")
         .join(
             banded_i.alias("i"),
@@ -900,7 +886,7 @@ def _md5_bit(md5_col: Column, i: int) -> Column:
     digits of an md5 string: digit ``i // 4``, bit ``i % 4`` of its
     value. Engine-portable by construction — any SQL dialect with
     ``md5``/``substring``/``strpos`` computes the identical bit, which
-    is what makes the md5 hash mode oracle-checkable.
+    is what makes the SimHash signature oracle-checkable.
 
     This per-digit form is the SPECIFICATION; the production path in
     :func:`simhash_bits_df` decodes two 32-bit halves and shifts
@@ -917,7 +903,6 @@ def simhash_bits_df(
     key_col: str = "doc_id",
     text_col: str = "text",
     bits: int = 64,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """(k, bits): SimHash bit array per document — bit ``i`` is the sign
     of the sum over tokens of ±1 votes from token-hash bit ``i``.
@@ -925,36 +910,27 @@ def simhash_bits_df(
     Same explode → groupBy shape as MinHash: 64 unrolled SUM aggregates
     in codegen with map-side combine; no interpreted HOF loops.
 
-    ``hash_mode='md5'`` swaps the token hash for md5 (bits read from the
-    hex digits) — slower than xxhash64 but computable by any SQL engine,
-    so the whole signature is cross-engine checkable. xxhash64 stays the
-    fast default.
+    The token hash is md5 (bits read from the hex digits): computable
+    by any SQL engine, so the whole signature is cross-engine checkable.
     """
+    # Decode the first 16 hex digits ONCE into two 32-bit longs and
+    # read every bit with a shift/AND — value-identical to the
+    # per-bit ``_md5_bit`` (digit i//4, bit i%4: digit d of an
+    # 8-digit hex number occupies value bits 4*(7-d)..4*(7-d)+3),
+    # but 2 conv() calls per token instead of 64 substring+conv
+    # pairs (measured 2.5x on the signature build at sf0.1).
     tok_rows = df.select(
         F.col(key_col).alias("k"), F.explode(tokens(_norm(text_col))).alias("tok")
+    ).selectExpr(
+        "k",
+        "cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) AS hi",
+        "cast(conv(substring(md5(tok), 9, 8), 16, 10) as bigint) AS lo",
     )
-    if hash_mode == "md5":
-        # Decode the first 16 hex digits ONCE into two 32-bit longs and
-        # read every bit with a shift/AND — value-identical to the
-        # per-bit ``_md5_bit`` (digit i//4, bit i%4: digit d of an
-        # 8-digit hex number occupies value bits 4*(7-d)..4*(7-d)+3),
-        # but 2 conv() calls per token instead of 64 substring+conv
-        # pairs (measured 2.5x on the signature build at sf0.1).
-        tok_rows = tok_rows.selectExpr(
-            "k",
-            "cast(conv(substring(md5(tok), 1, 8), 16, 10) as bigint) AS hi",
-            "cast(conv(substring(md5(tok), 9, 8), 16, 10) as bigint) AS lo",
-        )
 
-        def bit_sql(i: int) -> str:
-            src = "hi" if i < 32 else "lo"
-            d = i // 4 if i < 32 else i // 4 - 8
-            return f"(shiftright({src}, {4 * (7 - d) + i % 4}) & 1)"
-    else:
-        tok_rows = tok_rows.selectExpr("k", "xxhash64(tok) AS h")
-
-        def bit_sql(i: int) -> str:
-            return f"(shiftrightunsigned(h, {i}) & 1)"
+    def bit_sql(i: int) -> str:
+        src = "hi" if i < 32 else "lo"
+        d = i // 4 if i < 32 else i // 4 - 8
+        return f"(shiftright({src}, {4 * (7 - d) + i % 4}) & 1)"
 
     # the 64 ±1-vote SUMs and the sign readout as ONE parsed aggregate
     # expression (same aggregates/values as the old per-bit Column
@@ -997,10 +973,9 @@ def simhash_signatures(
     df: DataFrame,
     key_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """(key, simhash hex string) per document."""
-    return simhash_bits_df(df, key_col, text_col, hash_mode=hash_mode).select(
+    return simhash_bits_df(df, key_col, text_col).select(
         F.col("k").alias(key_col), simhash_hex(F.col("bits")).alias("simhash")
     )
 
@@ -1020,7 +995,6 @@ def simhash_candidates(
     text_col: str = "text",
     bands: int = 4,
     max_hamming: int | None = None,
-    hash_mode: str = "xxhash64",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Hamming-near candidate pairs: docs sharing any 16-bit chunk of
@@ -1029,8 +1003,7 @@ def simhash_candidates(
 
     The band key is the chunk's bit pattern read as an integer (Horner)
     — the chunk is already <= 16 bits, so it needs no hashing, and the
-    integer code keeps the candidate join SQL-replayable for the oracle
-    (paired with ``hash_mode='md5'``).
+    integer code keeps the candidate join SQL-replayable for the oracle.
 
     r8: candidate generation runs through the shared
     :func:`_collapsed_banded_pairs` core — byte-identical docs have
@@ -1042,7 +1015,7 @@ def simhash_candidates(
     residual near-identical bucket skew (counts classes, off by
     default). Relation lifetime: README "Relation lifetime"."""
     chunk = 64 // bands
-    bits_df = simhash_bits_df(df, key_col, text_col, hash_mode=hash_mode)
+    bits_df = simhash_bits_df(df, key_col, text_col)
 
     def codes(sig):
         return F.transform(

@@ -88,32 +88,19 @@ def filter_events(log: EventLog, cond: Column) -> EventLog:
     return log.with_df(log.df.filter(cond))
 
 
-def filter_traces(log: EventLog, trace_cond: Column, how: str = "window") -> EventLog:
+def filter_traces(log: EventLog, trace_cond: Column) -> EventLog:
     """Trace-scope: keep *whole traces* where any event satisfies
     ``trace_cond``; standalone events (NULL case_id) are untouched by
     trace conditions (reference pseudo-filter, ``filter.rs:56-58``).
 
-    ``how='window'``: one windowed ``max`` over case_id — no join, one
-    shuffle. ``how='semijoin'``: distinct surviving case_ids semi-joined
-    back — better when the case list is tiny (broadcast) or when the
-    events DF is already partitioned by case_id.
+    One windowed ``max`` over case_id — no join, one shuffle.
     """
-    if how == "window":
-        w = Window.partitionBy("case_id")
-        keep = F.max(drop_err(trace_cond).cast("int")).over(w) == 1
-        out = log.df.withColumn("_keep", keep).filter(
-            F.col("case_id").isNull() | F.col("_keep")
-        ).drop("_keep")
-        return log.with_df(out)
-    cases = (
-        log.df.filter(F.col("case_id").isNotNull())
-        .filter(drop_err(trace_cond))
-        .select("case_id")
-        .distinct()
-    )
-    in_trace = log.df.join(F.broadcast(cases), "case_id", "left_semi")
-    standalone = log.df.filter(F.col("case_id").isNull())
-    return log.with_df(in_trace.unionByName(standalone))
+    w = Window.partitionBy("case_id")
+    keep = F.max(drop_err(trace_cond).cast("int")).over(w) == 1
+    out = log.df.withColumn("_keep", keep).filter(
+        F.col("case_id").isNull() | F.col("_keep")
+    ).drop("_keep")
+    return log.with_df(out)
 
 
 # ---------------------------------------------------------------------------

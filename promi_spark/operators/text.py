@@ -354,7 +354,6 @@ def ngram_overlap(
     text_col: str = "text",
     n: int = 5,
     min_shared: int = 1,
-    broadcast: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing word
     ``n``-grams with a benchmark corpus (the standard train/test-overlap
@@ -368,19 +367,9 @@ def ngram_overlap(
     its gram counts, shared-gram count, containment ratio, and the
     ``contaminated`` verdict (>= ``min_shared`` shared grams).
 
-    ``broadcast=False`` is the huge-benchmark escape hatch (a held-out
-    suite too big for executor memory): hit-marking becomes a shuffle
-    LEFT SEMI join on the gram — the prunable join shape, since a left
-    OUTER join must emit every left row and so can never be pre-
-    filtered — letting Catalyst's runtime bloom filter
-    (``spark.sql.optimizer.runtime.bloomFilter.enabled``, on in the
-    tuned session) build the benchmark-side bloom and drop
-    non-candidate corpus grams BEFORE their exchange: the
-    bloom-prefilter-then-exact-verify design with the sketch managed
-    by the engine instead of hand-rolled. The per-doc totals come from
-    a second, purely narrow corpus scan joined back on the doc key.
-    Results are identical to the broadcast mode (the bloom only
-    prunes; the join stays exact).
+    A benchmark too big to broadcast goes through
+    :func:`promi_spark.operators.bloom.decontaminate_bloom`, which
+    switches to a shuffled join above its size ceiling.
     """
     gr = F.array_distinct(word_ngrams("__toks", n))
     bench_grams = (
@@ -401,28 +390,14 @@ def ngram_overlap(
         F.size(gr).alias("n_grams"),
         F.explode_outer(gr).alias("g"),
     )
-    if broadcast:
-        agg = (
-            ex.join(F.broadcast(bench_grams), "g", "left")
-            .groupBy("k")
-            .agg(
-                F.first("n_grams").alias("n_grams"),
-                F.sum(F.coalesce("_hit", F.lit(0))).alias("n_shared"),
-            )
+    agg = (
+        ex.join(F.broadcast(bench_grams), "g", "left")
+        .groupBy("k")
+        .agg(
+            F.first("n_grams").alias("n_grams"),
+            F.sum(F.coalesce("_hit", F.lit(0))).alias("n_shared"),
         )
-    else:
-        base = train_toks.select("k", F.size(gr).alias("n_grams"))
-        hits = (
-            ex.select("k", "g")
-            .join(bench_grams.select("g"), "g", "semi")
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-        )
-        agg = base.join(hits, "k", "left").select(
-            "k",
-            "n_grams",
-            F.coalesce("n_shared", F.lit(0)).alias("n_shared"),
-        )
+    )
     return agg.select(
         F.col("k").alias(key_col),
         "n_grams",
@@ -466,7 +441,6 @@ def winnow_fingerprints(
     text_col: str = "text",
     k: int = 8,
     w: int = 4,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer et al. 2003, public
     algorithm): hash all character k-grams, slide a window of ``w``
@@ -483,14 +457,9 @@ def winnow_fingerprints(
     (measured: ~1 s/doc at 300 chars — quadratic), while the shifted
     fold is linear. No shuffle, no UDF.
 
-    ``hash_mode='md5'`` hashes k-grams with md5 instead of xxhash64 —
-    window minima are then taken over hex strings (same total order in
-    every engine), making the fingerprint set oracle-checkable in plain
-    SQL. xxhash64 stays the fast default (longs beat 32-char strings
-    through the window mins and the distinct)."""
-    gram_hash = (
-        (lambda g: F.md5(g)) if hash_mode == "md5" else (lambda g: F.xxhash64(g))
-    )
+    k-grams hash with md5, so window minima are taken over hex strings
+    (same total order in every engine), making the fingerprint set
+    oracle-checkable in plain SQL."""
     norm = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     normed = df.select(F.col(key_col).alias("k"), norm.alias("txt"))
     hashed = normed.select(
@@ -499,7 +468,7 @@ def winnow_fingerprints(
             F.sequence(
                 F.lit(0), F.greatest(F.length("txt") - k, F.lit(0))
             ),
-            lambda i: gram_hash(F.col("txt").substr(i + 1, F.lit(k))),
+            lambda i: F.md5(F.col("txt").substr(i + 1, F.lit(k))),
         ).alias("hashes"),
     )
     # n_windows = max(L - w + 1, 1); shorter shifted slices zip-pad with
@@ -525,7 +494,6 @@ def cross_doc_substrings(
     k: int = 8,
     w: int = 4,
     min_docs: int = 2,
-    hash_mode: str = "xxhash64",
 ) -> DataFrame:
     """Cross-document repeated-substring signal — the distributed form
     of exact substring deduplication (Lee et al. 2022, "Deduplicating
@@ -551,13 +519,11 @@ def cross_doc_substrings(
     exploded relation is shuffled once, not joined against its own
     aggregate. Hot fingerprints (corpus-wide boilerplate) skew the fp
     exchange; AQE skew handling splits those partitions, and raising
-    ``k`` shrinks their mass. ``hash_mode='md5'`` makes the whole
+    ``k`` shrinks their mass. The md5 fingerprints make the whole
     computation engine-portable for the DuckDB oracle."""
     from pyspark.sql import Window
 
-    fps = winnow_fingerprints(
-        df, key_col=key_col, text_col=text_col, k=k, w=w, hash_mode=hash_mode
-    )
+    fps = winnow_fingerprints(df, key_col=key_col, text_col=text_col, k=k, w=w)
     # explode_outer, NOT explode: plain explode makes the optimizer
     # infer a `size(fingerprints) > 0` filter and push the entire
     # winnow expression below this projection, re-evaluating the

@@ -5,8 +5,8 @@ design, so "compare against exact brute force" is only a valid oracle
 when recall happens to be total. Instead these builders REPLAY the
 approximation itself in portable SQL: hyperplanes are embedded as
 float literals, band buckets are the bit slices read as integers (no
-engine-specific hashing), SimHash/winnowing run in an md5 hash mode
-that any SQL engine can evaluate, and IVF uses a seeded-Voronoi
+engine-specific hashing), SimHash/winnowing hash with md5, which
+any SQL engine can evaluate, and IVF uses a seeded-Voronoi
 quantizer whose seeds are data rows. The DuckDB result is then
 pair-for-pair identical to the Spark result — including the pairs the
 approximation legitimately misses.
@@ -660,7 +660,7 @@ def leakage_safe_split_sql(
     """
 
 
-# --- SimHash (md5 hash mode) -----------------------------------------------
+# --- SimHash (md5 token hashes) --------------------------------------------
 
 _HEX = "0123456789abcdef"
 
@@ -692,8 +692,8 @@ def _simhash_sig_cte(bits: int = 64) -> str:
 
 
 def simhash_signatures_sql(bits: int = 64, chunk: int = 16) -> str:
-    """Replay of dedup.simhash_signatures(hash_mode='md5'): packed hex
-    signature, ``chunk`` bits per hex group, MSB-first within a group."""
+    """Replay of dedup.simhash_signatures: packed hex signature,
+    ``chunk`` bits per hex group, MSB-first within a group."""
     parts = []
     for c in range(bits // chunk):
         horner = _horner([f"t{c * chunk + t}" for t in range(chunk)])
@@ -707,8 +707,8 @@ def simhash_signatures_sql(bits: int = 64, chunk: int = 16) -> str:
 def simhash_near_dups_sql(
     bands: int = 4, max_hamming: int = 10, bits: int = 64
 ) -> str:
-    """Replay of dedup.simhash_candidates(hash_mode='md5'): pairs
-    sharing any ``bits/bands``-bit chunk code, exact Hamming distance."""
+    """Replay of dedup.simhash_candidates: pairs sharing any
+    ``bits/bands``-bit chunk code, exact Hamming distance."""
     chunk = bits // bands
     chunk_cols = ", ".join(
         f"{_horner([f't{c * chunk + t}' for t in range(chunk)])} AS c{c}"
@@ -730,9 +730,9 @@ def simhash_near_dups_sql(
 
 
 def winnow_fingerprints_sql(k: int = 8, w: int = 4) -> str:
-    """Replay of text.winnow_fingerprints(hash_mode='md5'): md5 char
-    k-gram hashes, window-of-w minima (lexicographic on hex), distinct
-    selected fingerprints per doc."""
+    """Replay of text.winnow_fingerprints: md5 char k-gram hashes,
+    window-of-w minima (lexicographic on hex), distinct selected
+    fingerprints per doc."""
     return f"""
     WITH t AS (SELECT doc_id, {_NORM_TXT} AS txt FROM documents),
     grams AS (
@@ -774,9 +774,9 @@ def mixture_sample_sql(
 
 
 def cross_doc_substrings_sql(k: int = 8, w: int = 4, min_docs: int = 2) -> str:
-    """Replay of text.cross_doc_substrings(hash_mode='md5'): winnowing
-    fingerprints (shared CTE with winnow_fingerprints_sql), per-
-    fingerprint doc count via window, per-doc shared-fraction rollup."""
+    """Replay of text.cross_doc_substrings: winnowing fingerprints
+    (shared CTE with winnow_fingerprints_sql), per-fingerprint doc
+    count via window, per-doc shared-fraction rollup."""
     shared = f"CASE WHEN n_docs >= {min_docs} THEN 1 ELSE 0 END"
     return f"""
     WITH fps AS ({winnow_fingerprints_sql(k, w)}),

@@ -11,7 +11,7 @@ integers) to dodge timezone/precision representation drift.
 
 The approximate / hash-based operators (MinHash, SimHash, winnowing,
 hyperplane LSH, IVF) run here in an oracle-checkable configuration —
-md5 hash mode, literal-embedded hyperplanes, integer band codes — and
+md5 token hashes, literal-embedded hyperplanes, integer band codes — and
 their SQL (``promi_spark.oracles``) replays the approximation
 pair-for-pair, so even "approximate" results are hash-compared. The
 only ``sql=None`` entries left are genuinely iterative algorithms
@@ -2373,8 +2373,11 @@ def q_bloom_decontaminate(spark, sf_dir):
     benchmark n-grams (probe cost ∝ batch, fixed-size broadcast, no
     false negatives). Rows-only: the sketch hashes with Spark's
     xxhash64, which DuckDB cannot replay; the superset-of-exact and
-    FP-rate contracts are pinned by tests/test_bloom.py. r9."""
+    FP-rate contracts are pinned by tests/test_bloom.py. r9. The
+    sketch path carries the process id, so two processes querying the
+    same ``sf_dir`` never overwrite each other's sketch."""
     import hashlib
+    import os
 
     from promi_spark.operators.bloom import (
         decontaminate_bloom,
@@ -2387,6 +2390,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     path = (
         "/tmp/promi_spark_bench_bloom_"
         + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+        + f"_{os.getpid()}"
     )
     write_bench_bloom(bench, path, n=5)
     return decontaminate_bloom(train, path)
@@ -2537,7 +2541,7 @@ def q_bpe_token_counts(spark, sf_dir):
 
 # Approximate operators in oracle-checkable configuration: the SQL
 # (promi_spark.oracles) replays the approximation itself — embedded
-# hyperplane literals, integer band codes, md5 hash mode — so DuckDB
+# hyperplane literals, integer band codes, md5 token hashes — so DuckDB
 # reproduces the Spark output pair-for-pair.
 
 # Hyperplanes for the oracle-mode LSH queries. dim=64 is the embedding
@@ -2732,9 +2736,7 @@ def q_ivf_indexed_topk(spark, sf_dir):
 
 @q("winnow_fingerprints", oracles.winnow_fingerprints_sql(k=8, w=4))
 def q_winnow_fingerprints(spark, sf_dir):
-    out = text.winnow_fingerprints(
-        load_table(spark, "documents", sf_dir), hash_mode="md5"
-    )
+    out = text.winnow_fingerprints(load_table(spark, "documents", sf_dir))
     # explode_outer: avoids the inferred size()>0 filter that would
     # inline the winnow expression below the projection (session.py
     # note); arrays are never empty so rows are identical.
@@ -2746,11 +2748,9 @@ def q_winnow_fingerprints(spark, sf_dir):
 @q("cross_doc_substrings", oracles.cross_doc_substrings_sql(k=8, w=4, min_docs=2))
 def q_cross_doc_substrings(spark, sf_dir):
     """Cross-document repeated-substring coverage (exact-substring-dedup
-    signal, Lee et al. 2022) over winnowing fingerprints in the
-    engine-portable md5 hash mode."""
-    return text.cross_doc_substrings(
-        load_table(spark, "documents", sf_dir), hash_mode="md5"
-    )
+    signal, Lee et al. 2022) over engine-portable md5 winnowing
+    fingerprints."""
+    return text.cross_doc_substrings(load_table(spark, "documents", sf_dir))
 
 
 @q("minhash_near_dups", oracles.exact_jaccard_pairs_sql(threshold=0.5))
@@ -2822,9 +2822,7 @@ def q_dedup_keep_best(spark, sf_dir):
 
 @q("simhash_signatures", oracles.simhash_signatures_sql())
 def q_simhash_signatures(spark, sf_dir):
-    return dedup.simhash_signatures(
-        load_table(spark, "documents", sf_dir), hash_mode="md5"
-    )
+    return dedup.simhash_signatures(load_table(spark, "documents", sf_dir))
 
 
 @q("ann_lsh_topk", oracles.ann_lsh_topk_sql(_PLANES_ANN6, k=10))
@@ -2862,7 +2860,7 @@ def q_ann_multiprobe_topk(spark, sf_dir):
 @q("simhash_near_dups", oracles.simhash_near_dups_sql(bands=4, max_hamming=10))
 def q_simhash_near_dups(spark, sf_dir):
     return dedup.simhash_candidates(
-        load_table(spark, "documents", sf_dir), max_hamming=10, hash_mode="md5"
+        load_table(spark, "documents", sf_dir), max_hamming=10
     )
 
 

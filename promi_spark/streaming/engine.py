@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from promi_spark.lifetime import persist, scope
 from promi_spark.schema import EVENTS_SCHEMA
 
 
@@ -368,8 +369,8 @@ def streaming_neardup_ingest(
         )
         # persist: rejects feeds BOTH sinks — without it the whole
         # shingle -> minhash -> band-probe pipeline runs twice per batch
-        rejects.persist()
-        try:
+        with scope():
+            rejects = persist(rejects)
             survivors = batch.join(
                 rejects.select(key_col), key_col, "left_anti"
             )
@@ -377,8 +378,6 @@ def streaming_neardup_ingest(
                 survivors, rejects, good_path, reject_path,
                 batch_id, exactly_once,
             )
-        finally:
-            rejects.unpersist()
 
     return (
         docs.writeStream.foreachBatch(_gate)
@@ -410,13 +409,16 @@ def streaming_decontaminate_ingest(
     reused for both the anti-join and the reject write) plus a
     fixed-size broadcast of the sparse bloom relation — the index
     parquet + meta sidecar are read once at stream start (r9 advice:
-    they used to be re-read every micro-batch) and pinned in the
-    executor cache across batches; the benchmark corpus itself is
-    never read at ingest time. Bloom semantics guarantee zero false
-    negatives (a truly contaminated doc can never reach ``good_path``;
-    the per-gram FP rate set at build time bounds over-rejection). The
-    sketch is refreshed only when the benchmark suite changes —
-    restart the stream to pick up a new index.
+    they used to be re-read every micro-batch) and a ``(word, mask)``
+    projection of it is pinned in the executor cache across batches.
+    The caller's :func:`promi_spark.lifetime.scope` owns that pin:
+    start the gate inside a scope and exit it after the query
+    terminates. The benchmark corpus itself is never read at ingest
+    time. Bloom semantics guarantee zero false negatives (a truly
+    contaminated doc can never reach ``good_path``; the per-gram FP
+    rate set at build time bounds over-rejection). The sketch is
+    refreshed only when the benchmark suite changes — restart the
+    stream to pick up a new index.
 
     Delivery semantics: the same contract as the sibling near-dup gate
     — AT-LEAST-ONCE appends by default (consumers dedup by ``key_col``
@@ -426,8 +428,8 @@ def streaming_decontaminate_ingest(
     (availableNow trigger; caller awaits/stops)."""
     from promi_spark.operators.bloom import decontaminate_bloom, read_bloom_index
 
-    index = read_bloom_index(docs.sparkSession, bloom_index_path)
-    index[0].persist()
+    bloom, meta = read_bloom_index(docs.sparkSession, bloom_index_path)
+    index = (persist(bloom.select("word", "mask")), meta)
 
     def _gate(batch: DataFrame, batch_id: int):
         if not batch.head(1):
@@ -444,8 +446,8 @@ def streaming_decontaminate_ingest(
         )
         # persist: flagged feeds BOTH sinks — without it the whole
         # tokenize -> gram-explode -> probe pipeline runs twice per batch
-        flagged.persist()
-        try:
+        with scope():
+            flagged = persist(flagged)
             survivors = batch.join(
                 flagged.select(key_col), key_col, "left_anti"
             )
@@ -453,8 +455,6 @@ def streaming_decontaminate_ingest(
                 survivors, flagged, good_path, reject_path,
                 batch_id, exactly_once,
             )
-        finally:
-            flagged.unpersist()
 
     return (
         docs.writeStream.foreachBatch(_gate)

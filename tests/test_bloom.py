@@ -5,6 +5,8 @@ decontamination superset contract (bloom-flagged ⊇ exact-flagged)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -309,3 +311,31 @@ def test_decontaminate_rejects_non_gram_index(spark, tmp_path):
     df = spark.createDataFrame([(1, "some text here")], "doc_id long, text string")
     with pytest.raises(ValueError, match="not a benchmark n-gram sketch"):
         decontaminate_bloom(df, path)
+
+
+def test_bench_bloom_query_sketch_path_per_process(spark, sf_dir, monkeypatch):
+    """The ``bloom_decontaminate`` query writes its sketch to a path
+    that carries the process id: two processes querying the same
+    ``sf_dir`` write two sketches, never one shared directory."""
+    import shutil
+
+    import promi_spark.operators.bloom as bloom_mod
+    from promi_spark.queries import QUERIES
+
+    paths = []
+    real = bloom_mod.write_bench_bloom
+
+    def recording(bench, path, *args, **kwargs):
+        paths.append(path)
+        return real(bench, path, *args, **kwargs)
+
+    monkeypatch.setattr(bloom_mod, "write_bench_bloom", recording)
+    fn, _ = QUERIES["bloom_decontaminate"]
+    try:
+        for pid in (40001, 40002):
+            monkeypatch.setattr(os, "getpid", lambda pid=pid: pid)
+            fn(spark, sf_dir)
+    finally:
+        for p in paths:
+            shutil.rmtree(p, ignore_errors=True)
+    assert len(paths) == 2 and paths[0] != paths[1], paths

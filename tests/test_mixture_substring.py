@@ -57,19 +57,6 @@ def test_shared_substring_detected(spark):
     assert dup[0]["shared_frac"] == 1.0 == dup[1]["shared_frac"]
 
 
-def test_hash_modes_agree_on_counts(spark):
-    """md5 (oracle) and xxhash64 (fast default) modes pick different
-    window minima but identical shared/unshared verdicts come from the
-    same substring structure on exact-duplicate content."""
-    df = _docs(spark, ["alpha beta gamma delta epsilon", "alpha beta gamma delta epsilon", "zeta"])
-    for mode in ("md5", "xxhash64"):
-        rows = {
-            r["doc_id"]: r["shared_frac"]
-            for r in cross_doc_substrings(df, hash_mode=mode).collect()
-        }
-        assert rows[0] == 1.0 == rows[1] and rows[2] == 0.0
-
-
 def test_cross_doc_plan_two_exchanges(spark):
     """One exchange on the fingerprint (window doc-count), one on the
     doc key (rollup) — no self-join, no third shuffle."""

@@ -635,45 +635,6 @@ def test_incremental_cross_probe_rides_the_class_guard(spark, tmp_path):
         assert full.exceptAll(inc).count() == 0
 
 
-def test_incremental_probe_pre_class_index_fallback(spark, tmp_path):
-    """An index written without the build-time ``rep`` column (pre-r8.5
-    layout) degrades to per-doc banding through the same probe code
-    path — identical pair set, nothing raises."""
-    from pyspark.sql import functions as F
-
-    from promi_spark.io import load_table
-    from promi_spark.operators.dedup import (
-        minhash_dedup_incremental,
-        write_minhash_index,
-    )
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    old = docs.filter(F.col("doc_id") % 5 != 0)
-    new = docs.filter(F.col("doc_id") % 5 == 0)
-    path = str(tmp_path / "mh_legacy_index")
-    write_minhash_index(old, path)
-
-    with_rep = {
-        (r["a"], r["b"]): r["jaccard_sim"]
-        for r in minhash_dedup_incremental(
-            new, path, threshold=0.5, cache=False
-        ).collect()
-    }
-    # strip the rep column in place to simulate the legacy layout
-    legacy = str(tmp_path / "mh_legacy_stripped")
-    spark.read.parquet(path).drop("rep").write.parquet(legacy)
-    import shutil
-
-    shutil.copy(f"{path}/_index_meta.json", f"{legacy}/_index_meta.json")
-    without_rep = {
-        (r["a"], r["b"]): r["jaccard_sim"]
-        for r in minhash_dedup_incremental(
-            new, legacy, threshold=0.5, cache=False
-        ).collect()
-    }
-    assert with_rep == without_rep and with_rep
-
-
 # r9: alpha-temperature sampling invariants -----------------------------------
 
 

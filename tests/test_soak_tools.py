@@ -9,13 +9,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# soak.py parses argv at import; neutralize first (same dance the
-# tool itself does for check_oracle).
-_argv = sys.argv
-sys.argv = [sys.argv[0]]
 from tools.soak import DRIFT_FLAG_RATIO, drift_section  # noqa: E402
-
-sys.argv = _argv
 
 
 def _prior(tmp_path, queries):
@@ -99,3 +93,15 @@ def test_skew_soak_query_lists_are_oracled_registry_entries():
     assert set(HOT_QUERIES) <= oracled, set(HOT_QUERIES) - oracled
     assert set(BOILER_QUERIES) <= oracled, set(BOILER_QUERIES) - oracled
     assert not [n for n in QUERIES if n.startswith("mllib_")]
+
+
+def test_check_oracle_import_leaves_argv_alone(monkeypatch):
+    """The oracle checker parses its command line in ``main()``, not at
+    import: a caller whose own argv holds ``--json`` can still import
+    its hashing helpers."""
+    import importlib
+
+    monkeypatch.setattr(sys, "argv", ["x", "--json"])
+    monkeypatch.delitem(sys.modules, "tools.check_oracle", raising=False)
+    mod = importlib.import_module("tools.check_oracle")
+    assert mod.table_hash(["a"], [(1,)]) == mod.table_hash(["a"], [(1,)])

@@ -552,6 +552,46 @@ def test_streaming_decontaminate_loads_index_once(spark, tmp_path, monkeypatch):
     assert good == {1, 2}
 
 
+def test_streaming_decontaminate_releases_pins_with_scope(spark, tmp_path):
+    """The gate's pinned Bloom index and its per-batch verdicts belong
+    to scopes: with the query started inside ``scope()`` and awaited,
+    exiting the scope leaves the cache manager empty."""
+    from promi_spark.lifetime import scope
+    from promi_spark.operators.bloom import write_bench_bloom
+    from promi_spark.streaming import streaming_decontaminate_ingest
+
+    bench = spark.createDataFrame(
+        [(0, "unique benchmark phrase about orbital mechanics and tides")],
+        "doc_id long, text string",
+    )
+    idx = str(tmp_path / "idx")
+    write_bench_bloom(bench, idx, n=5)
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(
+        [
+            (1, "clean text one"),
+            (2, "a unique benchmark phrase about orbital mechanics and tides"),
+        ],
+        "doc_id long, text string",
+    ).repartition(1).write.parquet(in_dir)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        in_dir
+    )
+    spark.catalog.clearCache()
+    with scope():
+        q = streaming_decontaminate_ingest(
+            stream,
+            idx,
+            good_path=str(tmp_path / "good"),
+            reject_path=str(tmp_path / "reject"),
+            checkpoint=str(tmp_path / "ckpt"),
+        )
+        q.awaitTermination(120)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    rej = spark.read.parquet(str(tmp_path / "reject")).collect()
+    assert [r["doc_id"] for r in rej] == [2]
+
+
 def test_accreting_benchmark_gate_end_to_end(spark, tmp_path):
     """Verdict #7: the intended production loop — release A sketch +
     release B sketch (explicit shared geometry via write_bench_bloom(

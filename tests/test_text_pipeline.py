@@ -277,7 +277,9 @@ def test_source_mix_shares_sum_to_one(spark):
 def test_dedup_components_nonconvergence_releases_cache(spark):
     """The non-convergence RuntimeError path frees every round's state —
     a failed run must leave no cached relation or checkpoint pinned in
-    the session, inside a scope or outside one."""
+    the session, inside a scope or outside one. Only RDDs created by
+    the call count: Spark's cleaner may free RDDs that earlier unscoped
+    callers left stored, so the stored set may shrink meanwhile."""
     import pytest
 
     from promi_spark.lifetime import scope
@@ -292,13 +294,13 @@ def test_dedup_components_nonconvergence_releases_cache(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup_components(chain, max_iter=1)
-    assert {i.id() for i in jsc.getRDDStorageInfo()} == before
+    assert {i.id() for i in jsc.getRDDStorageInfo()} - before == set()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     with pytest.raises(RuntimeError, match="did not converge"):
         with scope():
             dedup_components(chain, max_iter=1)
-    assert {i.id() for i in jsc.getRDDStorageInfo()} == before
+    assert {i.id() for i in jsc.getRDDStorageInfo()} - before == set()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -347,25 +349,6 @@ def test_length_quantiles_approx_matches_exact_at_small_scale(spark):
         # (~100 docs/group here -> neighbor gaps can reach a few %)
         assert abs(a50 - p50) <= max(5.0, 0.1 * p50)
         assert abs(a95 - p95) <= max(5.0, 0.1 * p95)
-
-
-def test_decontaminate_shuffle_mode_matches_broadcast(spark):
-    """broadcast=False (huge-benchmark semi-join path, bloom-prunable)
-    returns row-identical results to the broadcast mode on the sf
-    corpus — the bloom only prunes, the join stays exact."""
-    from promi_spark.io import load_table
-
-    train = load_table(spark, "documents", "/root/testdata/sf0.001")
-    bench = train.filter("doc_id < 15")
-    a = {
-        r["doc_id"]: (r["n_grams"], r["n_shared"], r["contaminated"])
-        for r in ngram_overlap(train, bench, n=5).collect()
-    }
-    b = {
-        r["doc_id"]: (r["n_grams"], r["n_shared"], r["contaminated"])
-        for r in ngram_overlap(train, bench, n=5, broadcast=False).collect()
-    }
-    assert a == b and any(v[2] for v in a.values())
 
 
 def test_line_dedup_removes_corpus_boilerplate(spark):
@@ -586,14 +569,12 @@ def test_null_text_gram_stats_parity_with_oracle(spark, tmp_path):
     overlap_cols = ["doc_id", "n_grams", "n_shared", "containment", "contaminated"]
     want = sorted(con.execute(ngram_overlap_sql(n=5, modulus=10)).fetchall())
     assert want[1] == (2, None, 0, None, False)
-    for broadcast in (True, False):
-        got = ngram_overlap(
-            df.filter(F.col("doc_id") % 10 != 0),
-            df.filter(F.col("doc_id") % 10 == 0),
-            n=5,
-            broadcast=broadcast,
-        )
-        assert rows(got, overlap_cols) == want, broadcast
+    got = ngram_overlap(
+        df.filter(F.col("doc_id") % 10 != 0),
+        df.filter(F.col("doc_id") % 10 == 0),
+        n=5,
+    )
+    assert rows(got, overlap_cols) == want
 
     rep_cols = [
         "doc_id", "n_tokens", "dup_2gram_frac", "dup_3gram_frac",

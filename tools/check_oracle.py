@@ -23,19 +23,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-_args = sys.argv[1:]
-ALL_ORACLED = "--all-oracled" in _args
-JSON_OUT = None
-if "--json" in _args:
-    i = _args.index("--json")
-    if i + 1 >= len(_args) or _args[i + 1].startswith("--"):
-        sys.exit("usage: --json requires an output path argument")
-    JSON_OUT = _args[i + 1]
-    del _args[i: i + 2]
-_args = [a for a in _args if a != "--all-oracled"]
-SF_DIR = _args[0] if _args else "/root/testdata/sf0.01"
-ONLY = set(_args[1:])
-
 
 def norm_cell(v) -> str:
     import datetime
@@ -79,6 +66,19 @@ def table_hash(cols: list[str], rows: list[tuple]) -> str:
 
 
 def main() -> int:
+    args = sys.argv[1:]
+    all_oracled = "--all-oracled" in args
+    json_out = None
+    if "--json" in args:
+        i = args.index("--json")
+        if i + 1 >= len(args) or args[i + 1].startswith("--"):
+            sys.exit("usage: --json requires an output path argument")
+        json_out = args[i + 1]
+        del args[i: i + 2]
+    args = [a for a in args if a != "--all-oracled"]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    only = set(args[1:])
+
     import duckdb
 
     from promi_spark.queries import QUERIES
@@ -91,19 +91,19 @@ def main() -> int:
         "documents embeddings".split()
     ):
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
     failures = []
     results: dict[str, dict] = {}
     for name, (fn, sql) in QUERIES.items():
-        if ONLY and name not in ONLY:
+        if only and name not in only:
             continue
-        if ALL_ORACLED and sql is None:
+        if all_oracled and sql is None:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR)
+            sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
@@ -171,13 +171,13 @@ def main() -> int:
         else:
             print(f"OK   {name} ({len(srows)} rows, {time.time()-t0:.1f}s)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    if JSON_OUT:
+    if json_out:
         ok = sum(1 for r in results.values() if r["ok"])
         hash_matched = sum(1 for r in results.values() if r.get("hash_match"))
-        with open(JSON_OUT, "w") as f:
+        with open(json_out, "w") as f:
             json.dump(
                 {
-                    "sf_dir": SF_DIR,
+                    "sf_dir": sf_dir,
                     "oracled_checked": len(results),
                     "ok": ok,
                     "hash_matched": hash_matched,
@@ -187,7 +187,7 @@ def main() -> int:
                 f,
                 indent=1,
             )
-        print(f"wrote {JSON_OUT}: {ok}/{len(results)} ok")
+        print(f"wrote {json_out}: {ok}/{len(results)} ok")
     return 1 if failures else 0
 
 

@@ -63,13 +63,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# check_oracle parses argv at import; neutralize before importing its
-# hashing helpers.
-_real_argv = sys.argv
-sys.argv = [sys.argv[0]]
 from tools.check_oracle import norm_cell, table_hash  # noqa: E402
-
-sys.argv = _real_argv
 from tools.witness import duck_witness, spark_witness  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
