@@ -382,13 +382,17 @@ def ngram_overlap(
     # broadcast join marks hits, one map-side-combined aggregation
     # rebuilds the per-doc verdict. The only exchange is the final
     # groupBy on the doc key.
-    train_toks = train.select(
+    # The distinct gram array is its own projection, read by both the
+    # count and the explode: written inline, the count lands in the
+    # Project above the Generate and re-runs the interpreted gram
+    # lambda once per exploded gram, O(grams^2) per document.
+    train_grams = train.select(
         F.col(key_col).alias("k"), tokens(F.col(text_col)).alias("__toks")
-    )
-    ex = train_toks.select(
+    ).select("k", gr.alias("__grams"))
+    ex = train_grams.select(
         "k",
-        F.size(gr).alias("n_grams"),
-        F.explode_outer(gr).alias("g"),
+        F.size("__grams").alias("n_grams"),
+        F.explode_outer("__grams").alias("g"),
     )
     agg = (
         ex.join(F.broadcast(bench_grams), "g", "left")

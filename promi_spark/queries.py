@@ -22,6 +22,12 @@ registration order so every driver-checked slot carries an oracle.
 
 from __future__ import annotations
 
+import atexit
+import functools
+import hashlib
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from datetime import datetime
 
@@ -67,6 +73,22 @@ def q(name: str, sql: str | None = None):
 
 def _log(spark: SparkSession, sf_dir: str) -> EventLog:
     return load_event_log(spark, sf_dir)
+
+
+@functools.cache
+def _scratch_root() -> str:
+    root = tempfile.mkdtemp(prefix="promi_spark_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
+
+
+def _scratch_dir(name: str, sf_dir: str) -> str:
+    """Where a query writes the index or sketch it then serves from:
+    ``name`` and a hash of ``sf_dir`` under a root private to this
+    process, removed at interpreter exit. Two processes never share a
+    directory, and none is left behind."""
+    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    return os.path.join(_scratch_root(), f"{name}_{digest}")
 
 
 # The DuckDB mirror of the event-log lens (io.load_event_log): user_id
@@ -509,14 +531,11 @@ def q_xes_roundtrip(spark, sf_dir):
     event order, and activity labels (reference round-trip oracle:
     src/stream/xes.rs:966-1005). Export is the documented driver-side
     path — bounded here to 15 traces."""
-    import os
-    import tempfile
-
     from promi_spark.io.xes import read_xes, write_xes
 
     log = _log(spark, sf_dir)
     sub = log.with_df(log.df.filter(F.col("case_id").cast("long") < 15))
-    path = os.path.join(tempfile.mkdtemp(prefix="promi_rt_"), "roundtrip.xes")
+    path = _scratch_dir("roundtrip", sf_dir) + ".xes"
     write_xes(sub, path)
     back = read_xes(spark, path)
     ordered = F.transform(
@@ -2374,11 +2393,9 @@ def q_bloom_decontaminate(spark, sf_dir):
     false negatives). Rows-only: the sketch hashes with Spark's
     xxhash64, which DuckDB cannot replay; the superset-of-exact and
     FP-rate contracts are pinned by tests/test_bloom.py. r9. The
-    sketch path carries the process id, so two processes querying the
-    same ``sf_dir`` never overwrite each other's sketch."""
-    import hashlib
-    import os
-
+    sketch goes to a per-process scratch directory (``_scratch_dir``),
+    so two processes querying the same ``sf_dir`` never overwrite each
+    other's sketch."""
     from promi_spark.operators.bloom import (
         decontaminate_bloom,
         write_bench_bloom,
@@ -2387,11 +2404,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     docs = load_table(spark, "documents", sf_dir)
     bench = docs.filter(F.col("doc_id") % 7 == 0)
     train = docs.filter(F.col("doc_id") % 7 != 0)
-    path = (
-        "/tmp/promi_spark_bench_bloom_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-        + f"_{os.getpid()}"
-    )
+    path = _scratch_dir("bench_bloom", sf_dir)
     write_bench_bloom(bench, path, n=5)
     return decontaminate_bloom(train, path)
 
@@ -2714,8 +2727,6 @@ def q_ivf_indexed_topk(spark, sf_dir):
     pruning at the parquet source. Checked against the SAME oracle as
     the in-memory ``ivf_topk``, so build-and-serve is pinned
     pair-for-pair equal to train-and-scan."""
-    import hashlib
-
     from promi_spark.operators.similarity import (
         ivf_centroids,
         ivf_topk_indexed,
@@ -2726,10 +2737,7 @@ def q_ivf_indexed_topk(spark, sf_dir):
     qid, qvec = _query_vec(emb)
     corp = emb.filter(F.col("vec_id") != qid)
     cents = ivf_centroids(corp, 8, init="lowest_ids", n_iter=0)
-    path = (
-        "/tmp/promi_spark_ivf_index_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    path = _scratch_dir("ivf_index", sf_dir)
     write_ivf_index(corp, cents, path)
     return ivf_topk_indexed(spark, path, qvec, k=10, nprobe=3)
 
@@ -2778,15 +2786,10 @@ def q_incremental_dedup(spark, sf_dir):
     exact-Jaccard pair set restricted to pairs touching the batch —
     signatures are per-doc deterministic, so the banded probe has the
     same (total, verified) recall as the full minhash_near_dups run."""
-    import hashlib
-
     docs = load_table(spark, "documents", sf_dir)
     index_part = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
-    path = (
-        "/tmp/promi_spark_mh_index_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    path = _scratch_dir("mh_index", sf_dir)
     dedup.write_minhash_index(index_part, path)
     return dedup.minhash_dedup_incremental(batch, path, threshold=0.5)
 
@@ -3283,8 +3286,6 @@ def q_ivfpq_indexed_topk(spark, sf_dir):
     table, zero raw-vector reads at query time. Checked against the
     SAME oracle as the in-memory ``ivfpq_topk``, so the two paths are
     pinned pair-for-pair equal."""
-    import hashlib
-
     from promi_spark.operators import pq
     from promi_spark.operators.similarity import ivf_centroids
 
@@ -3296,10 +3297,7 @@ def q_ivfpq_indexed_topk(spark, sf_dir):
         corp, dim=64, m_subspaces=4, n_codes=16,
         init="lowest_ids", n_iter=0,
     )
-    path = (
-        "/tmp/promi_spark_ivfpq_index_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    )
+    path = _scratch_dir("ivfpq_index", sf_dir)
     pq.write_ivfpq_index(corp, cents, books, path)
     return pq.ivfpq_topk_indexed(spark, path, qvec, k=10, nprobe=3)
 

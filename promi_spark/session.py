@@ -40,6 +40,15 @@ def get_spark(app_name: str = "promi_spark", cpus: int | None = None) -> SparkSe
         # protocol bench.py speaks. Nothing in this repo reads them.
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Every physical stage is a Janino-compiled class, kept in one
+        # per-JVM LRU of this many entries (Spark's default: 100). One
+        # warm examples/clean_corpus.yml execute touches about 122
+        # classes, so at 100 each warm execute compiled 90-94 of them
+        # again (0.6-1.3 s on a 4-core VM); at 1000 it compiles none. The
+        # corpus_flow and interactive_mix benchmark workloads together
+        # compile 293 classes, 1.6 MB of bytecode (median 1 KB), so the
+        # cap costs a few MB. Static: read once, when the JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # PySpark's call-site capture wraps every Column/DataFrame call
         # in five extra py4j round trips (pyspark.errors.utils._with_origin)
         # to name the Python line in JVM error contexts; a query's

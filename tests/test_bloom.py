@@ -314,13 +314,12 @@ def test_decontaminate_rejects_non_gram_index(spark, tmp_path):
 
 
 def test_bench_bloom_query_sketch_path_per_process(spark, sf_dir, monkeypatch):
-    """The ``bloom_decontaminate`` query writes its sketch to a path
-    that carries the process id: two processes querying the same
-    ``sf_dir`` write two sketches, never one shared directory."""
-    import shutil
-
+    """The ``bloom_decontaminate`` query writes its sketch under this
+    process's private scratch root, never under a path another process
+    could compute (``test_query_scratch_dir_per_process`` checks that
+    two processes get two roots)."""
     import promi_spark.operators.bloom as bloom_mod
-    from promi_spark.queries import QUERIES
+    from promi_spark.queries import QUERIES, _scratch_root
 
     paths = []
     real = bloom_mod.write_bench_bloom
@@ -330,12 +329,34 @@ def test_bench_bloom_query_sketch_path_per_process(spark, sf_dir, monkeypatch):
         return real(bench, path, *args, **kwargs)
 
     monkeypatch.setattr(bloom_mod, "write_bench_bloom", recording)
-    fn, _ = QUERIES["bloom_decontaminate"]
-    try:
-        for pid in (40001, 40002):
-            monkeypatch.setattr(os, "getpid", lambda pid=pid: pid)
-            fn(spark, sf_dir)
-    finally:
-        for p in paths:
-            shutil.rmtree(p, ignore_errors=True)
-    assert len(paths) == 2 and paths[0] != paths[1], paths
+    QUERIES["bloom_decontaminate"][0](spark, sf_dir)
+    assert len(paths) == 1, paths
+    assert os.path.dirname(paths[0]) == _scratch_root()
+    assert os.path.isdir(paths[0])
+
+
+def test_query_scratch_dir_per_process():
+    """Two processes asking for the same query's index directory on
+    the same ``sf_dir`` get two directories, each under a root that is
+    gone once its process has exited."""
+    import subprocess
+    import sys
+
+    code = (
+        "from promi_spark.queries import _scratch_dir\n"
+        "p = _scratch_dir('ivf_index', '/data/sf0.01')\n"
+        "import os; os.makedirs(p); open(os.path.join(p, 'part'), 'w').close()\n"
+        "print(p)"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [
+        subprocess.run(
+            [sys.executable, "-c", code],
+            cwd=repo, capture_output=True, text=True, check=True,
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert paths[0] != paths[1], paths
+    for p in paths:
+        assert os.path.basename(os.path.dirname(p)).startswith("promi_spark_"), p
+        assert not os.path.exists(os.path.dirname(p)), p

@@ -886,6 +886,33 @@ def test_readme_quickstart_documented_counts(spark, tmp_path):
     assert out.select("shard").distinct().count() == 16
 
 
+def test_warm_flow_execute_compiles_no_code(spark, tmp_path):
+    """A warm examples/clean_corpus.yml execute finds every generated
+    class in the codegen cache. On these fixtures the first execute
+    compiles about 144 classes; with Spark's default cache of 100
+    entries every later execute compiled 127-130 of them again.
+    ``get_spark`` sizes the cache so the third execute compiles none."""
+    import yaml
+
+    from promi_spark.plans import execute
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    example = os.path.join(
+        os.path.dirname(__file__), "..", "examples", "clean_corpus.yml"
+    )
+    flow = yaml.safe_load(open(example))
+    for pipe in flow["pipes"]:
+        attrs = pipe.get("sink", {}).get("attributes", {})
+        if "path" in attrs:
+            attrs["path"] = str(tmp_path / "clean_corpus")
+    for _ in range(2):
+        execute(spark, flow)
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    execute(spark, flow)
+    assert compiles.METRIC_COMPILATION_TIME().getCount() - before == 0
+
+
 def test_temperature_and_bloom_segments(spark, tmp_path):
     """Round-9 segments: TemperatureMixture (alpha rebalancing) and
     BloomDecontaminate (persisted-sketch gate) composed in one flow;

@@ -13,7 +13,10 @@ else the sf0.1 test tables) and prints one JSON line: wall seconds per run,
 the build layer per run (py4j calls and seconds spent constructing the
 DataFrame, counted at the gateway by perfbench's `Py4JCounter`), the
 Spark jobs and tasks per run (perfbench's `stage_rollup` over the run's
-job group) and the physical-plan exchange counts. Each run is one
+job group), the classes Spark compiled per run (`codegen_compiles`, the
+`CodegenMetrics` compilation count: a warm run above 0 means the
+generated-code cache evicted what the run needs) and the physical-plan
+exchange counts. Each run is one
 lifetime scope: what the query pins, checkpoints included, is freed
 before the next run. `--mode` prints the plan in that explain
 mode instead of timing; `--list` prints the registry.
@@ -73,12 +76,14 @@ def main() -> int:
         print(df._jdf.queryExecution().explainString(explain_mode.fromString(args.mode)))
         return 0
 
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     counter = Py4JCounter()
     counter.install()
-    times, build_sec, build_py4j, jobs, tasks = [], [], [], [], []
+    times, build_sec, build_py4j, jobs, tasks, compiles = [], [], [], [], [], []
     for run in range(max(1, args.runs)):
         group = f"bench_query_{args.name}_{run}"
         spark.sparkContext.setJobGroup(group, args.name)
+        compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
         with scope():
             calls0, t0 = counter.n, time.monotonic()
             df = fn(spark, args.sf_dir)
@@ -86,6 +91,7 @@ def main() -> int:
             build_py4j.append(counter.n - calls0)
             df.count()
             times.append(round(time.monotonic() - t0, 3))
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - compiles0)
         rollup = stage_rollup(spark, group)
         jobs.append(int(rollup["jobs"]))
         tasks.append(int(rollup["tasks"]))
@@ -104,6 +110,7 @@ def main() -> int:
                 "build_py4j_calls": build_py4j,
                 "jobs": jobs,
                 "tasks": tasks,
+                "codegen_compiles": compiles,
                 **exchange_counts(plan),
             }
         )
